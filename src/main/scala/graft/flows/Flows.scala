@@ -40,9 +40,13 @@ object Flows {
     * published-but-never-moved (at-least-once stays confined to the
     * documented failure path).
     *
-    * Row count comes from an [[org.apache.spark.sql.Observation]] on the
-    * publish pass itself — one action total; the sink contract is that
-    * it CONSUMES the payload (every publish is an action). */
+    * Branch-if-empty (O3) is the start listing: the reference skips the
+    * publish only when there are no files (dags/Dag2.py:158-162), so a
+    * listed file that flattens to zero rows still publishes (nothing)
+    * and is backed up and moved. Row count comes from an
+    * [[org.apache.spark.sql.Observation]] on the publish pass itself —
+    * one Spark job per drain; the sink contract is that it CONSUMES the
+    * payload (every publish is an action). */
   private def xmlDrain(spark: SparkSession, dirs: FlowDirs,
       variant: Seq[String], sink: DataFrame => Unit,
       nowMillis: Long): FlowReport = {
@@ -50,16 +54,13 @@ object Flows {
     val listed = fl.auditRemaining(new Path(dirs.input), "*.xml")
     if (listed.isEmpty) return FlowReport(0, 0L, ok = true, remaining = 0)
     val flat = XmlMeas.readAndFlatten(spark, listed.map(_.getPath.toString))
-    var rows = 0L
-    // O3 branch-if-empty; O5 retry around the publish
-    val ran = Runner.runIfNonEmpty(flat) { df =>
-      val projected = df.select(variant.map(col): _*)
-      Runner.retry(3) {
-        val obs = org.apache.spark.sql.Observation()
-        val observed = projected.observe(obs, count(lit(1)).as("rows"))
-        sink(KafkaJsonSink.payload(observed, exclude = Set.empty))
-        rows = obs.get("rows").asInstanceOf[Long]
-      }
+    val projected = flat.select(variant.map(col): _*)
+    // O5 retry around the publish
+    val rows = Runner.retry(3) {
+      val obs = org.apache.spark.sql.Observation()
+      val observed = projected.observe(obs, count(lit(1)).as("rows"))
+      sink(KafkaJsonSink.payload(observed, exclude = Set.empty))
+      obs.get("rows").asInstanceOf[Long]
     }
     listed.map(_.getPath).foreach { f =>
       fl.backupDeduped(f, new Path(dirs.backup), nowMillis)

@@ -1,15 +1,15 @@
 package graft.runtime
 
-import org.apache.spark.sql.DataFrame
-
 import scala.annotation.tailrec
 import scala.util.control.NonFatal
 
 /** Orchestration semantics (SURVEY.md §2.9): the reference's Airflow
   * DAG behaviors re-expressed as a plain in-process runner — stages are
-  * method calls on one SparkSession (O2), with branch-if-empty (O3),
-  * bounded retries with exponential backoff (O5), and a status
-  * aggregation equivalent to the NONE_FAILED_MIN_ONE_SUCCESS join (O4).
+  * method calls on one SparkSession (O2), with bounded retries with
+  * exponential backoff (O5) and a status aggregation equivalent to the
+  * NONE_FAILED_MIN_ONE_SUCCESS join (O4). Branch-if-empty (O3) lives
+  * with the drains: the start listing in `Flows`, the batch probe in
+  * `FilePipeline`.
   */
 object Runner {
 
@@ -38,14 +38,6 @@ object Runner {
       }
     }
     loop(1, backoffMs)
-  }
-
-  /** O3: branch on work-count — run `then` only when `probe` has rows
-    * (the reference skips spark-submit when the flatten produced 0
-    * files, dags/Dag2.py:158-162). Returns whether it ran. */
-  def runIfNonEmpty(probe: DataFrame)(`then`: DataFrame => Unit): Boolean = {
-    if (probe.isEmpty) false
-    else { `then`(probe); true }
   }
 
   /** Run named stages sequentially, each under retry; a failed stage

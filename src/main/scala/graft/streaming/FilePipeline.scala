@@ -68,17 +68,4 @@ object FilePipeline {
     q.awaitTermination()
     q
   }
-
-  /** Continuous variant (reference ST3): default ASAP micro-batches;
-    * caller owns the returned query's lifecycle. */
-  def runContinuous(spark: SparkSession, cfg: FilePipelineConfig,
-      transform: DataFrame => DataFrame,
-      sink: (DataFrame, Long) => Unit): StreamingQuery =
-    source(spark, cfg).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // same bounded limit(1) probe as drainAvailable — see there
-        if (!batch.isEmpty) sink(transform(batch), id)
-      }
-      .option("checkpointLocation", cfg.checkpointDir)
-      .start()
 }

@@ -36,8 +36,10 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the MinHash signature (min over elements) are invariant under
     // any permutation of the input arrays.
     val rnd = new scala.util.Random(41)
+    // operands in [0, MinhashP), the domain production feeds the kernel
+    // (hs % MinhashP), where the Carter-Wegman products cannot overflow
     val rows = Seq.fill(100) {
-      val a = Seq.fill(30)(rnd.nextLong()).distinct
+      val a = Seq.fill(30)(Math.floorMod(rnd.nextLong(), Dedup.MinhashP)).distinct
       (a, rnd.shuffle(a.drop(rnd.nextInt(10))))
     }
     val df = rows.toDF("x", "y")

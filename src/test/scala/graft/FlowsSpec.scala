@@ -111,6 +111,21 @@ class FlowsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Files.exists(Paths.get(root, "out", "data")))
   }
 
+  test("a listed file that flattens to zero KPI rows still drains") {
+    // Branch-if-empty is the start listing (the reference skips on zero
+    // FILES): a file with no measValue publishes zero rows, is backed up
+    // and moved, and the drain reports it.
+    val (dirs, root) = mkFlow()
+    val noValues = xml.replaceAll("(?s)<measValue.*</measValue>", "")
+    Files.writeString(Paths.get(dirs.input, "z.xml"), noValues)
+    val r = Flows.xmlFast(spark, dirs, fileSink(s"$root/out/data"), nowMillis = 5L)
+    assert(r === Flows.FlowReport(files = 1, rows = 0L, ok = true, remaining = 0))
+    assert(spark.read.parquet(s"$root/out/data").count() === 0L)
+    assert(Files.exists(Paths.get(dirs.processed, "processed_5_z.xml")))
+    assert(!Files.exists(Paths.get(dirs.input, "z.xml")))
+    assert(new java.io.File(dirs.backup).list().count(_.startsWith("backup_")) === 1)
+  }
+
   test("index store: all four reference topics route to their index dirs " +
       "with kafka_topic + content doc_id (logstash.conf:13-46)") {
     import graft.sinks.{IndexStore, TopicRouter}

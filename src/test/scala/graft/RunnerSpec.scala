@@ -2,15 +2,8 @@ package graft
 
 import graft.runtime.Runner
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class RunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private lazy val spark = GraftSession.local(2)
-  import spark.implicits._
-
-  // session is shared across suites in one forked JVM (getOrCreate) —
-  // do NOT stop it here or concurrently-running suites lose their session
-  override def afterAll(): Unit = ()
+class RunnerSpec extends AnyFunSuite {
 
   test("retry: succeeds after transient failures, rethrows when exhausted") {
     var n = 0
@@ -21,13 +14,6 @@ class RunnerSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[RuntimeException] {
       Runner.retry(2, backoffMs = 1) { sys.error("always") }
     }
-  }
-
-  test("runIfNonEmpty: branch-if-empty semantics (O3)") {
-    var ran = 0
-    assert(!Runner.runIfNonEmpty(Seq.empty[Int].toDF("v")) { _ => ran += 1 })
-    assert(Runner.runIfNonEmpty(Seq(1).toDF("v")) { _ => ran += 1 })
-    assert(ran === 1)
   }
 
   test("runStages: failures isolated, aggregate = none-failed-min-one-success") {
