@@ -142,14 +142,16 @@ object GraftSession {
       case (b, (k, v)) => b.config(k, v)
     }
 
-  /** Retire an engine session: evict every standing frame the registry
-    * caches on its behalf (the LSH pair set, IVF cells, admission
-    * bloom/index, funnel stages, ...) so its pinned executor memory is
-    * actually released. A long-lived process that drops one session
-    * (`newSession` clones, notebook rotation) calls this instead of —
-    * or before — `SparkSession.stop`; stopping the whole SparkContext
-    * also works, but only because the sweep on the next build path
-    * reaps stopped sessions, which a still-running context never
-    * triggers for a merely-abandoned session. Returns entries evicted. */
-  def close(s: SparkSession): Int = graft.runtime.FrameCache.evictSession(s)
+  /** Retire an engine session: release every session-scoped
+    * [[graft.runtime.FrameCache]] entry it built (the LSH pair set, IVF
+    * cells, admission bloom/index, funnel stages, ...) so its pinned
+    * executor memory is actually released. Process-scoped entries
+    * (centroid matrices, staged fixture dirs, bucketed table names) are
+    * not the session's and stay. A long-lived process that drops one
+    * session (`newSession` clones, notebook rotation) calls this instead
+    * of — or before — `SparkSession.stop`; stopping the whole
+    * SparkContext also works, but only because the next memo build
+    * sweeps stopped sessions, which a still-running context never
+    * triggers for a merely-abandoned session. Returns entries released. */
+  def close(s: SparkSession): Int = graft.runtime.FrameCache.evict(s)
 }

@@ -30,8 +30,4 @@ object Hashing {
     * MinHash permutations and LSH hyperplanes. */
   def md5Long(seed: Int, c: Column): Column =
     md5Long(concat(lit(seed.toString), lit("|"), c))
-
-  /** Bit `b` (0-based from LSB) of a 60-bit [[md5Long]] as 0/1. */
-  def md5Bit(c: Column, b: Int): Column =
-    shiftright(md5Long(c), b) % 2
 }

@@ -52,12 +52,6 @@ object TextAnalysis {
     (length(c) - length(regexp_replace(c, "[^a-z0-9 ]", "")))
       .cast("double") / greatest(length(c), lit(1))
 
-  /** Mean token length in characters (chars minus separators / tokens). */
-  def meanTokenLen(c: Column): Column = {
-    val n = wsTokenCount(c)
-    (length(c) - n + lit(1)).cast("double") / greatest(n, lit(1))
-  }
-
   /** Composite quality score in [0,1], UNROUNDED: enough tokens, little
     * punctuation noise, natural-language stopword presence. The raw
     * double is bit-identical across engines (same ratio/product/sum

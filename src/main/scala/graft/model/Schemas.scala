@@ -8,25 +8,6 @@ import org.apache.spark.sql.types._
   * actually declares 67 fields — see [[Schemas.cellKpi69]]).
   */
 
-/** Narrow EAV KPI record — the union of the three flow variants:
-  * 10-field xmlonly (reference mypy/xmlonly.py:84-95), 9-field gzip flow
-  * (mypy/streaming.py:93-103, drops nodeid), 10-field hardware flow
-  * (mypy/xmlhard.py:70-81, adds localDn, keeps raw measObjLdn).
-  * Optional fields model the per-flow projection.
-  */
-case class KpiRecord(
-    measInfoId: String,
-    jobId: String,
-    granPeriod: String,
-    beginTime: String,
-    endTime: String,
-    measObjLdn: String,
-    nodeid: Option[String],
-    localDn: Option[String],
-    kpiId: String,
-    kpiName: String,
-    kpiValue: String)
-
 object Schemas {
 
   private def s(n: String) = StructField(n, StringType, nullable = true)

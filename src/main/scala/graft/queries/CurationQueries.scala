@@ -57,16 +57,11 @@ object CurationQueries extends QueryPack {
     * each pay it — the cluster-scale analogue is materializing the
     * survivor set once per snapshot. */
   // value = (every frame this entry CACHED, the five stage frames) —
-  // the pair pipeline's internal shingle-hash frame is cached too
-  // (ADVICE r5), so the eviction hook owns the full materialized lineage
-  private val funnelCache = graft.runtime.FrameCache.of[
-      (SparkSession, String),
-      (Seq[DataFrame], (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame))](
-    "curation-funnel", k => Some(k._1))(
-    v => v._1.foreach(_.unpersist()))
+  // the pair pipeline's internal shingle-hash frame is cached too, so
+  // eviction releases the full materialized lineage
   private def funnelFrames(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    funnelCache.get((s, d))(buildFunnelFrames(s, d))._2
+    graft.runtime.FrameCache.get(s, "curation-funnel", d)(buildFunnelFrames(s, d))._2
 
   private def buildFunnelFrames(s: SparkSession, d: String)
       : (Seq[DataFrame], (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)) = {

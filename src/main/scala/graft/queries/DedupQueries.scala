@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryPack, Tables}
 import graft.ext.{Dedup, Hashing, TextAnalysis}
+import graft.runtime.FrameCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,30 +46,16 @@ object DedupQueries extends QueryPack {
     * band→verify pipeline from the scan (~0.9 s each at sf0.1). The
     * cluster-scale analogue is materializing the pair table to storage
     * once per corpus snapshot and fanning analyses out from it. */
-  // value = (cached pair frame, cached internal shingle-hash frame) —
-  // the eviction hook must drop BOTH (ADVICE r5: unpersisting only the
+  // value = (cached pair frame, cached internal shingle-hash frame):
+  // the entry holds BOTH so eviction releases both (unpersisting only the
   // pair frame left the lineage's materialized hash frame pinned)
-  private val pairsCache = graft.runtime.FrameCache.of[
-      (SparkSession, String), (DataFrame, DataFrame)](
-    "dedup-pairs", k => Some(k._1))(
-    v => { v._1.unpersist(); v._2.unpersist(); () })
   private def corpusPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.get((s, d)) {
+    FrameCache.get(s, "dedup-pairs", d) {
       val (pairs, sh) = Dedup.minhashLshPairsWithLineage(
         Tables.documents(s, d), "doc_id", "text",
         shingleN = 3, k = K, bands = Bands, threshold = 0.8)
       (pairs.cache(), sh)
     }._1
-
-  /** Per-(session, dir) single-query scratch frames (q37's shingle-hash
-    * frame, q76's) — registered so teardown eviction releases them: a
-    * bare per-invocation `.cache()` pins the frame for the session's
-    * lifetime with no owner (the r5-ADVICE leak class; CacheManager
-    * plan-dedup keeps repeat invocations to ONE entry, but nothing
-    * could ever drop it). */
-  private val scratchCache = graft.runtime.FrameCache.of[
-      (SparkSession, String, String), DataFrame](
-    "dedup-scratch", k => Some(k._1))(v => { v.unpersist(); () })
 
   /** Corpus-wide connected-component labels over [[corpusPairs]],
     * memoized AND CACHED per (session, dir) — r21: q60 (cluster sizes)
@@ -78,9 +65,8 @@ object DedupQueries extends QueryPack {
     * of the snapshot" the incremental path (q106) reads at cluster
     * scale — materialize it once per snapshot, fan analyses out from
     * it (the corpusPairs pattern one level up). */
-  private val labelsCache = graft.runtime.FrameCache.frames("dedup-labels")
   private def corpusLabels(s: SparkSession, d: String): DataFrame =
-    labelsCache.get((s, d))(
+    FrameCache.get(s, "dedup-labels", d)(
       Dedup.connectedComponents(
         corpusPairs(s, d).select(col("a_id"), col("b_id"))).cache())
 
@@ -99,15 +85,8 @@ object DedupQueries extends QueryPack {
     * yesterday's batch CC driver loop every time. First build still
     * pays the full loop; the oracle still checks the final clustering
     * against the batch transitive closure over the FULL graph. */
-  private val standingLabelsCache =
-    graft.runtime.FrameCache.frames("dedup-standing-labels")
-  /** Spec seam (PlanPostureSpec): the memo is plan-invisible behind the
-    * CC localCheckpoint, so the spec asserts the artifact directly. */
-  private[graft] def standingLabelsPeek(
-      s: SparkSession, d: String): Option[DataFrame] =
-    standingLabelsCache.peek((s, d))
   private def q106StandingLabels(s: SparkSession, d: String): DataFrame =
-    standingLabelsCache.get((s, d))(
+    FrameCache.get(s, "dedup-standing-labels", d)(
       Dedup.connectedComponents(
         corpusPairs(s, d).select(col("a_id"), col("b_id"))
           .filter(!q106InDelta(col("a_id")) && !q106InDelta(col("b_id"))))
@@ -158,7 +137,7 @@ object DedupQueries extends QueryPack {
     //      every invocation. Projected to (doc_id, text) before the
     //      round-robin exchange (guide §2.3). ----
     "q36_simhash" -> ((s, d) => {
-      val docs = scratchCache.get((s, d, "q36-sim"))(
+      val docs = FrameCache.get(s, "q36-sim", d)(
         Tables.documents(s, d)
           .select(col("doc_id"), col("text"))
           .repartition(s.sparkContext.defaultParallelism)
@@ -232,7 +211,7 @@ object DedupQueries extends QueryPack {
       // text/lang/source/n_chars into the InMemoryRelation and dragged
       // them through the round-robin shuffle — 5-column scan + 6-column
       // cache for a pipeline that only ever reads (doc_id, h).
-      val hsh = scratchCache.get((s, d, "q37-hsh"))(
+      val hsh = FrameCache.get(s, "q37-hsh", d)(
         Tables.documents(s, d)
           .select(col("doc_id"), col("text"))
           .repartition(s.sparkContext.defaultParallelism)
@@ -278,7 +257,7 @@ object DedupQueries extends QueryPack {
     //      evaluation hash-compares EXACTLY. ----
     "q76_minhash_decision" -> ((s, d) => {
       val par = s.sparkContext.defaultParallelism
-      val sh = scratchCache.get((s, d, "q76-sh"))(
+      val sh = FrameCache.get(s, "q76-sh", d)(
         Tables.documents(s, d).repartition(par)
           .withColumn("shs", Dedup.distinctShingles(col("text"), 3))
           // sorted for the same per-pair-sort reason as q37/

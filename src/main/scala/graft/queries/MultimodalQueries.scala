@@ -75,10 +75,6 @@ object MultimodalQueries extends QueryPack {
 
   private val MediaCopyOffset = 1000000000L
 
-  /** q104's decorated+hashed media frame, per (session, dir) — session
-    * in the key because a cached DataFrame dies with its session. */
-  private val dhashCache = graft.runtime.FrameCache.frames("media-dhash")
-
   /** The decorated corpus (planted copies, every other one "lossily
     * re-encoded") dHashed at the codec seam — memoized+cached per
     * (session, dir) like the other shared artifacts, so repeat
@@ -97,7 +93,7 @@ object MultimodalQueries extends QueryPack {
       .select((col("doc_id") + MediaCopyOffset).as("media_id"),
         col("source"), col("text"),
         when(col("doc_id") % 14 === 0, 1).otherwise(0).as("reenc"))
-    dhashCache.get((s, d))(
+    graft.runtime.FrameCache.get(s, "media-dhash", d)(
       orig.unionByName(copies)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("media_id"), col("source"),

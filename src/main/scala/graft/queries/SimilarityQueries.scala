@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryPack, Tables}
 import graft.ext.Similarity
+import graft.runtime.FrameCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,14 +72,11 @@ object SimilarityQueries extends QueryPack {
     * as barriers implicitly (q38's crossJoin is why brute force never
     * hit this); single-stage projection pipelines like the index
     * builders need one explicitly. */
-  // keyed on the SESSION too: a cached DataFrame is bound to the
-  // session that built it — a stopped/recreated SparkSession in the
-  // same JVM must get a fresh frame, not a stale handle
-  private val prepCache = graft.runtime.FrameCache.of[
-      (SparkSession, String, Int), DataFrame](
-    "prepped-embeddings", k => Some(k._1))(v => { v.unpersist(); () })
+  // session-scoped: a cached DataFrame is bound to the session that
+  // built it — a stopped/recreated SparkSession in the same JVM must get
+  // a fresh frame, not a stale handle
   private def prepped(s: SparkSession, d: String, planes: Int = 0): DataFrame =
-    prepCache.get((s, d, planes))({
+    FrameCache.get(s, "prepped-embeddings", (d, planes))({
       val base = Similarity.withNormalized(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
           .repartition(s.sparkContext.defaultParallelism),
@@ -97,35 +95,30 @@ object SimilarityQueries extends QueryPack {
     * that touches centroids before cells (q69/q73/q79) would re-run
     * Lloyd training in a restarted process even though the artifact
     * carries the matrix. */
-  private val centCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Array[Double]]]
+  private val Centroids = "ivf-centroids"
   private def trainCentroids(s: SparkSession, d: String): Seq[Array[Double]] =
-    centCache.getOrElseUpdate(d, Similarity.trainKmeans(
+    FrameCache.get(Centroids, d)(Similarity.trainKmeans(
       prepped(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters, Dims))
   private def centroids(s: SparkSession, d: String): Seq[Array[Double]] =
-    centCache.getOrElse(d, {
+    FrameCache.peek[Seq[Array[Double]]](Centroids, d).getOrElse {
       import graft.sinks.ArtifactStore
       if (ArtifactStore.configuredDir(s, "ivf-index", d)
-          .exists(ArtifactStore.exists)) {
+          .exists(ArtifactStore.exists))
         corpusCells(s, d) // load (or rebuild) seeds the memo
-        centCache.getOrElse(d, trainCentroids(s, d))
-      } else trainCentroids(s, d)
-    })
+      trainCentroids(s, d)
+    }
 
   /** Trained PQ codebooks, memoized per data dir (plain doubles — not
     * session-bound, same lifecycle as [[centroids]]). */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Array[Double]]]]
   private def pqCodebooks(s: SparkSession, d: String): Seq[Seq[Array[Double]]] =
-    pqCache.getOrElseUpdate(d, Similarity.trainPq(
+    FrameCache.get("pq-codebooks", d)(Similarity.trainPq(
       prepped(s, d).filter(col("vec_id") % 2 === 0), PqSubs, PqK, PqIters, Dims))
 
   /** On-disk (vec_id, ne) parquet staging of the normalized corpus —
     * the q73 stream's input. Memoized per data dir like the streaming
     * fixtures (holds only a path, safe across session restarts). */
-  private val ingestFixCache = scala.collection.concurrent.TrieMap.empty[String, String]
   private def ingestFixture(s: SparkSession, d: String): String =
-    ingestFixCache.getOrElseUpdate(d, {
+    FrameCache.get("ingest-fixture", d)({
       val tmp = Files.createTempDirectory("graft_ingest_in_").toString
       prepped(s, d).select(col("vec_id"), col("ne"))
         .write.mode("overwrite").parquet(tmp)
@@ -135,9 +128,8 @@ object SimilarityQueries extends QueryPack {
   /** Query-set modulus: corpus_count / TargetQueries (≥1), memoized per
     * dir (a pure count — parquet metadata, no scan). Spark filter and
     * DuckDB oracle ([[qModSql]]) derive the same number. */
-  private val modCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private def queryModulus(s: SparkSession, d: String): Long =
-    modCache.getOrElseUpdate(d,
+    FrameCache.get("query-modulus", d)(
       math.max(1L, Tables.embeddings(s, d).count() / TargetQueries))
 
   /** Marks the ~TargetQueries evaluation query vectors. */
@@ -160,13 +152,10 @@ object SimilarityQueries extends QueryPack {
     * q39/q57/q59 consume the LSH candidates and q50/q57/q59/q64/q69 the
     * IVF candidates — without the cache each consumer re-runs the
     * multi-table probe joins (~1 s each at sf0.1). */
-  private val candCache = graft.runtime.FrameCache.of[
-      (SparkSession, String, String), DataFrame](
-    "ann-candidates", k => Some(k._1))(v => { v.unpersist(); () })
   private def lshCandidates(s: SparkSession, d: String): DataFrame =
-    candCache.get((s, d, "lsh"))(buildLshCandidates(s, d).cache())
+    FrameCache.get(s, "lsh-candidates", d)(buildLshCandidates(s, d).cache())
   private def ivfCandidates(s: SparkSession, d: String): DataFrame =
-    candCache.get((s, d, "ivf"))(buildIvfCandidates(s, d).cache())
+    FrameCache.get(s, "ivf-candidates", d)(buildIvfCandidates(s, d).cache())
 
   /** Exact brute-force top-3, memoized AND CACHED like the candidate
     * frames: it is the ground truth that FIVE evaluation queries
@@ -175,7 +164,7 @@ object SimilarityQueries extends QueryPack {
     * most expensive frame in the pack and the one whose cost grows
     * linearly with corpus size. */
   private def bruteForceTop3(s: SparkSession, d: String): DataFrame =
-    candCache.get((s, d, "bf")) {
+    FrameCache.get(s, "brute-force-top3", d) {
       val e = prepped(s, d)
       val q = e.filter(isQuery(s, d))
         .select(col("vec_id").as("q_id"), col("ne").as("qe"))
@@ -225,9 +214,8 @@ object SimilarityQueries extends QueryPack {
     * dir) because it serves BOTH the batch candidate build and the
     * q111 streaming search (at cluster scale: the cell-partitioned
     * index table q73 materializes). */
-  private val cellsCache = graft.runtime.FrameCache.frames("ivf-cells")
   private def corpusCells(s: SparkSession, d: String): DataFrame =
-    cellsCache.get((s, d))({
+    FrameCache.get(s, "ivf-cells", d)({
       import graft.sinks.ArtifactStore
       // fingerprint THIS session's corpus once (one cheap aggregate);
       // it gates the load AND stamps the save — the same hoist the two
@@ -251,7 +239,8 @@ object SimilarityQueries extends QueryPack {
         // must assign against the exact build-time matrix), seeding
         // the centroid memo so every IVF consumer shares them
         val (cells, cents) = ArtifactStore.loadIvfIndex(s, dir, snap)
-        centCache.put(d, cents)
+        FrameCache.evict(Centroids, d)
+        FrameCache.get(Centroids, d)(cents)
         (cells, cents)
       })._1
     })
@@ -795,10 +784,8 @@ object SimilarityQueries extends QueryPack {
   /** Staged (vec_id, raw embedding) parquet of the evaluation cohort in
     * two wave files — the q111 stream input. Memoized per dir (paths
     * only, safe across session restarts). */
-  private val annQueryFixCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def annQueryFixture(s: SparkSession, d: String): String =
-    annQueryFixCache.getOrElseUpdate(d, {
+    FrameCache.get("ann-query-fixture", d)({
       val tmp = Files.createTempDirectory("graft_annq_in_").toString
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       val cohort = Tables.embeddings(s, d)

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The STANDING corpus [[Dedup.NearDupIndex]] pattern, shared by every
   * consumer (q105's streaming admission gate, q80's incremental-dedup
-  * batch): memoized per (session, dir, name) with FrameCache ownership
-  * (teardown eviction releases the cached member frames) and the
+  * batch): a session-scoped FrameCache entry per (name, dir), whose
+  * eviction releases the cached member frames, and the
   * ArtifactStore persistence seam — save on build, load on restart,
   * warn-and-rebuild on a stale snapshot, never wedge. One
   * implementation, so index parameters, eviction, and the
@@ -18,12 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * snapshot; the FrameCache entry is the in-session analogue. */
 object StandingNearDup {
 
-  private val cache = graft.runtime.FrameCache.of[
-      (SparkSession, String, String), Dedup.NearDupIndex](
-    "standing-neardup-index", k => Some(k._1))(v => { v.unpersist(); () })
-
   /** The standing index named `name` over `corpus` (must expose
-    * (doc_id, text)); `name` is both the memo key and the
+    * (doc_id, text)); `name` is both the memo name and the
     * [[ArtifactStore]] artifact name. `corpus` is only evaluated on a
     * memo miss; the load/build/stale-rebuild resolution is
     * [[ArtifactStore.standing]].
@@ -37,7 +33,7 @@ object StandingNearDup {
   def index(s: SparkSession, d: String, name: String, shingleN: Int,
       k: Int, bands: Int, threshold: Double)
       (corpus: => DataFrame): Dedup.NearDupIndex =
-    cache.get((s, d, name)) {
+    graft.runtime.FrameCache.get(s, name, d) {
       val c = corpus
       // fingerprint THIS session's corpus once (one cheap aggregate);
       // it gates the load AND stamps the save

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryPack, Tables}
+import graft.runtime.FrameCache
 import graft.streaming.StateMetrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,22 +22,19 @@ import java.util.UUID
   */
 object StreamingQueries extends QueryPack {
 
-  /** Memoized per-(kind, sfDir) fixture INPUT dirs: the JSON staging of
-    * `events` is identical on every invocation, so repeated runs (bench
-    * best-of-2, q57-style composition) reuse it and the timed region
-    * measures the STREAMING QUERY, not fixture I/O. Checkpoint/output
-    * dirs stay fresh per invocation — reusing a checkpoint would make
-    * the second run a no-op. (Unlike the DataFrame/catalog memos, this
-    * cache holds only on-disk paths — safe across session restarts.) */
-  private object Fixtures {
-    private val cache = scala.collection.concurrent.TrieMap.empty[String, String]
-    def dir(kind: String, d: String)(build: String => Unit): String =
-      cache.getOrElseUpdate(s"$kind|$d", {
-        val tmp = Files.createTempDirectory(s"graft_${kind}_").toString
-        build(tmp)
-        tmp
-      })
-  }
+  /** Fixture INPUT dir per (kind, sfDir), memoized process-wide: the
+    * staging of the input is identical on every invocation, so repeated
+    * runs (bench best-of-2, q57-style composition) reuse it and the
+    * timed region measures the STREAMING QUERY, not fixture I/O.
+    * Checkpoint/output dirs stay fresh per invocation — reusing a
+    * checkpoint would make the second run a no-op. (Only on-disk paths —
+    * safe across session restarts.) */
+  private def fixtureDir(kind: String, d: String)(build: String => Unit): String =
+    FrameCache.get("stream-fixture", (kind, d)) {
+      val tmp = Files.createTempDirectory(s"graft_${kind}_").toString
+      build(tmp)
+      tmp
+    }
 
   /** Clone of `s` with state partitions sized to the stream's volume.
     * Stream-stream joins keep FOUR state stores per side per partition;
@@ -132,13 +130,10 @@ object StreamingQueries extends QueryPack {
     * production admission gate builds these once per corpus snapshot
     * and keeps them standing across micro-batch drains — rebuilding
     * (and unpersisting) per invocation, as these queries did before r5,
-    * re-pays the corpus fold on every run. FrameCache's eviction hooks
-    * are the drop-the-snapshot lifecycle. */
-  private val bloomCache = graft.runtime.FrameCache.of[
-      (SparkSession, String), (DataFrame, Array[Byte])](
-    "q101-corpus-bloom", k => Some(k._1))(v => { v._1.unpersist(); () })
+    * re-pays the corpus fold on every run. FrameCache eviction is the
+    * drop-the-snapshot lifecycle. */
   private def corpusBloom(s: SparkSession, d: String): (DataFrame, Array[Byte]) =
-    bloomCache.get((s, d)) {
+    FrameCache.get(s, "q101-corpus-bloom", d) {
       import graft.sinks.ArtifactStore
       val corpusKeys = Tables.documents(s, d)
         .filter(col("doc_id") % 7 =!= 3)
@@ -190,7 +185,7 @@ object StreamingQueries extends QueryPack {
     //      Oracle = plain aggregation of the original (dedup must be
     //      semantically invisible). ----
     "q48_stream_dedup" -> ((s, d) => {
-      val in = Fixtures.dir("sdedup", d) { fx =>
+      val in = fixtureDir("sdedup", d) { fx =>
         val ev = Tables.events(s, d)
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         ev.write.mode("overwrite").json(s"$fx/in")
@@ -226,7 +221,7 @@ object StreamingQueries extends QueryPack {
     //      expire join state. Joined rows land in parquet via
     //      foreachBatch; the small final aggregate runs in batch. ----
     "q55_stream_stream_join" -> ((s, d) => {
-      val in = Fixtures.dir("ssj", d) { fx =>
+      val in = fixtureDir("ssj", d) { fx =>
         Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -266,7 +261,7 @@ object StreamingQueries extends QueryPack {
     //      (user_id = -1, present on both streams so both watermarks
     //      advance) are filtered from the result. ----
     "q58_stream_left_outer" -> ((s, d) => {
-      val fxDir = Fixtures.dir("sslo", d) { fx =>
+      val fxDir = fixtureDir("sslo", d) { fx =>
         val ev = Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -318,7 +313,7 @@ object StreamingQueries extends QueryPack {
     }),
 
     "q42_stream_tumbling" -> ((s, d) => {
-      val in = Fixtures.dir("stream", d) { fx =>
+      val in = fixtureDir("stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
       val tmp = Files.createTempDirectory("graft_stream_run_").toString
@@ -349,7 +344,7 @@ object StreamingQueries extends QueryPack {
     //      the window list per row before the keyed state). Same drain
     //      harness as q42; oracle assigns the 2 windows relationally. ----
     "q85_stream_sliding" -> ((s, d) => {
-      val in = Fixtures.dir("stream", d) { fx =>
+      val in = fixtureDir("stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
       val tmp = Files.createTempDirectory("graft_stream_run_").toString
@@ -383,7 +378,7 @@ object StreamingQueries extends QueryPack {
     //      is identical). Oracle rebuilds the final snapshot
     //      relationally. ----
     "q88_stream_upsert" -> ((s, d) => {
-      val fxDir = Fixtures.dir("cdc", d) { fx =>
+      val fxDir = fixtureDir("cdc", d) { fx =>
         val base = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         base.withColumn("version", lit(1L))
@@ -446,7 +441,7 @@ object StreamingQueries extends QueryPack {
     //      enriches against dimensions statically and reserves stateful
     //      joins for stream×stream. Same drain harness as q42. ----
     "q93_stream_static_join" -> ((s, d) => {
-      val in = Fixtures.dir("stream", d) { fx =>
+      val in = fixtureDir("stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
       val tmp = Files.createTempDirectory("graft_stream_run_").toString
@@ -478,10 +473,9 @@ object StreamingQueries extends QueryPack {
     //      removes false positives. At 100 TB that is the difference
     //      between joining every arriving row against the corpus and
     //      joining the few-% that might collide. Admitted set is exact,
-    //      so the oracle is the plain batch anti join; the split sizes
-    //      are recorded in [[lastBloomStats]] for the spec. ----
+    //      so the oracle is the plain batch anti join. ----
     "q101_stream_bloom_dedup" -> ((s, d) => {
-      val fxDir = Fixtures.dir("blmdedup", d) { fx =>
+      val fxDir = fixtureDir("blmdedup", d) { fx =>
         val delta = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
           .select(col("doc_id"), col("source"), col("text"))
         val in = new java.io.File(s"$fx/in"); in.mkdirs()
@@ -496,33 +490,21 @@ object StreamingQueries extends QueryPack {
       // clones a new session per invocation): corpus fold paid once,
       // reused by every subsequent drain over the same snapshot
       val (corpusKeys, bloom) = corpusBloom(s, d)
-      var (nDefinite, nMaybe) = (0L, 0L)
       val q = ss.readStream.schema(DocArrivalSchema)
         .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // DELIBERATELY uncached (unlike q105/q107's per-batch frames,
-          // and re-affirmed when review re-flagged it): the lineage here
-          // is one JSON file read + map-side md5/bloom probes, and an r5
-          // measurement showed cache() overhead costing MORE than the
-          // ≤3 re-evaluations it saves (5.2 vs 3.4 s total; BASELINE.md
-          // r5 row). Cache per-batch frames only when lineage is
-          // expensive — a split/probe map stage is not.
+          // DELIBERATELY uncached (unlike q107's per-batch frame): the
+          // lineage here is one JSON file read + map-side md5/bloom
+          // probes, and cache() overhead measured MORE than the
+          // re-evaluation it saves (5.2 vs 3.4 s total; BASELINE.md r5
+          // row). Cache per-batch frames only when lineage is expensive.
           val withCk = batch
             .withColumn("ck", md5(col("text").cast("binary")))
           val hit = graft.ext.BloomPrune.mightContain(bloom, col("ck"))
           val definiteNew = withCk.filter(!hit)
           val confirmedNew = withCk.filter(hit)
             .join(corpusKeys, Seq("ck"), "left_anti")
-          // r22 (guide §1.2, VERDICT r21 #6): the definite/maybe split
-          // sizes were TWO count actions, each re-running the JSON read +
-          // md5 + bloom probe lineage; one aggregate pass carries both
-          // (count() counts non-null, so empty batches report 0/0).
-          val split = withCk.agg(
-            count(when(!hit, lit(1))).as("n_def"),
-            count(when(hit, lit(1))).as("n_maybe")).head()
-          nDefinite += split.getLong(0)
-          nMaybe += split.getLong(1)
           definiteNew.unionByName(confirmedNew)
             .select(col("doc_id"), col("source"))
             .write.mode("append").parquet(s"$tmp/admitted")
@@ -532,8 +514,7 @@ object StreamingQueries extends QueryPack {
         .start()
       q.awaitTermination()
       // corpusKeys stays cached — it is the standing snapshot artifact,
-      // owned by bloomCache's eviction hook, not this drain
-      lastBloomStats("q101_stream_bloom_dedup") = (nDefinite, nMaybe)
+      // owned by its FrameCache entry, not this drain
       val totals = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
       val adm = ss.read.parquet(s"$tmp/admitted")
@@ -557,7 +538,7 @@ object StreamingQueries extends QueryPack {
     //      (q80's CTE mirror) — admission is exactly "no verified
     //      near-dup pair against the corpus". ----
     "q105_stream_neardup_admission" -> ((s, d) => {
-      val fxDir = Fixtures.dir("nddedup", d) { fx =>
+      val fxDir = fixtureDir("nddedup", d) { fx =>
         val delta = Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
           .select(col("doc_id"), col("source"), col("text"))
         val in = new java.io.File(s"$fx/in"); in.mkdirs()
@@ -569,29 +550,22 @@ object StreamingQueries extends QueryPack {
       val tmp = Files.createTempDirectory("graft_nd_run_").toString
       val ss = streamSession(s)
       val idx = standingNearDupIndex(s, d)
-      var nRejected = 0L
       val q = ss.readStream.schema(DocArrivalSchema)
         .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // cache the (tiny) rejected-id frame: the stats count and the
-          // admitted anti join would otherwise each re-run the whole
-          // signature+verify probe pipeline (q107's convention)
+          // uncached: the anti join is the only reader of `rejected`
           val rejected = idx.probe(batch, "doc_id", "text", shingleN = 3)
-            .select(col("d_id").as("doc_id")).distinct().cache()
-          try {
-            nRejected += rejected.count()
-            batch.join(rejected, Seq("doc_id"), "left_anti")
-              .select(col("doc_id"), col("source"))
-              .write.mode("append").parquet(s"$tmp/admitted")
-          } finally rejected.unpersist()
+            .select(col("d_id").as("doc_id")).distinct()
+          batch.join(rejected, Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), col("source"))
+            .write.mode("append").parquet(s"$tmp/admitted")
         }
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", s"$tmp/chk")
         .start()
       q.awaitTermination()
-      // idx stays cached — standing snapshot artifact, ndIndexCache owns it
-      lastNearDupStats("q105_stream_neardup_admission") = nRejected
+      // idx stays cached — standing snapshot artifact, owned by its FrameCache entry
       val totals = Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
         .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
       val adm = ss.read.parquet(s"$tmp/admitted")
@@ -613,7 +587,7 @@ object StreamingQueries extends QueryPack {
     //      same files), so the oracle recomputes both sides of the
     //      split from the documents table. ----
     "q107_dead_letter" -> ((s, d) => {
-      val fxDir = Fixtures.dir("deadletter", d) { fx =>
+      val fxDir = fixtureDir("deadletter", d) { fx =>
         val delta = Tables.documents(s, d).filter(col("doc_id") % 11 === 5)
           .select(col("doc_id"), col("source"), col("text"))
         val in = new java.io.File(s"$fx/in"); in.mkdirs()
@@ -664,16 +638,6 @@ object StreamingQueries extends QueryPack {
       good.unionByName(dead).orderBy(col("bucket"))
     })
   )
-
-  /** Rejected-doc count of the last near-dup admission drain. */
-  val lastNearDupStats = scala.collection.concurrent.TrieMap
-    .empty[String, Long]
-
-  /** (definitely-new rows that skipped the join, bloom-hit rows that
-    * paid it) per bloom-dedup drain — the work-split the bloom buys,
-    * asserted in StreamingSpec. */
-  val lastBloomStats = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Long)]
 
   override def oracles: Map[String, String] = Map(
     "q55_stream_stream_join" ->

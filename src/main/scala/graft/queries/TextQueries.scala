@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryPack, Tables}
 import graft.ext.{Dedup, TextAnalysis}
+import graft.runtime.FrameCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,15 +13,6 @@ import org.apache.spark.sql.functions._
   * DuckDB — engine-portable hashing via md5 (see graft.ext.Hashing).
   */
 object TextQueries extends QueryPack {
-
-  /** Per-(session, dir) scratch frames (q75's posting-list aggregate,
-    * q103's per-doc tf/dl stats) — the DedupQueries.scratchCache
-    * pattern: registered with FrameCache so teardown eviction releases
-    * them (a bare per-invocation `.cache()` would pin the frame for the
-    * session's lifetime with no owner — the r5-ADVICE leak class). */
-  private val scratchCache = graft.runtime.FrameCache.of[
-      (SparkSession, String, String), DataFrame](
-    "text-scratch", k => Some(k._1))(v => { v.unpersist(); () })
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -128,7 +120,7 @@ object TextQueries extends QueryPack {
       // aggregate-before-shuffle + §5 reuse); the cached frame is the
       // post-aggregation posting list (|distinct (term, doc)| rows),
       // not the exploded token stream.
-      val g1 = scratchCache.get((s, d, "q75-tdc"))(
+      val g1 = FrameCache.get(s, "q75-tdc", d)(
         tok.groupBy(col("term"), col("doc_id"), col("source"))
           .agg(count(lit(1)).as("c")).cache())
       val dfreq = g1.groupBy(col("term"))
@@ -284,7 +276,7 @@ object TextQueries extends QueryPack {
       // per invocation); the cache is the narrow per-doc sketch (five
       // numeric columns + source), not the text (guide §5 reuse; §2.3
       // project early — text is dropped before anything materializes).
-      val scored0 = scratchCache.get((s, d, "q103-tf"))(
+      val scored0 = FrameCache.get(s, "q103-tf", d)(
         Tables.documents(s, d)
           .select(col("doc_id"), col("source"), col("text"))
           .repartition(s.sparkContext.defaultParallelism)

@@ -1,108 +1,125 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
 
-/** Process-wide memo for expensive shared frames (the LSH pair set, the
-  * IVF inverted index, the curation-funnel stages, ...).
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+/** The process's one memo for expensive shared artifacts: cached frames
+  * (the LSH pair set, the IVF inverted index, the curation-funnel
+  * stages, ...) and the plain values built from them (trained
+  * centroids, staged fixture paths, ...). At cluster scale these are
+  * the "materialize once per corpus snapshot" tables; this is their
+  * in-memory tier.
   *
-  * Two properties the bare `TrieMap.getOrElseUpdate` pattern lacked:
+  * An entry is keyed by (scope, name, key):
   *
-  *  1. '''Single-build''': `getOrElseUpdate` on a concurrent map may run
-  *     the builder twice under racing suites and silently orphan one
-  *     cached frame (pinned executor memory nothing will ever
-  *     unpersist). Builds here run under a per-cache lock —
-  *     `computeIfAbsent` semantics. Builds are rare (a handful of keys
-  *     per process) and consumers hold the lock only on a miss, so the
-  *     coarse lock is not a throughput concern.
-  *  2. '''Eviction''': every cache self-registers, so a long-lived
-  *     session can drop what it no longer needs —
-  *     [[FrameCache.evictSession]] unpersists and forgets one session's
-  *     entries, [[FrameCache.evictStopped]] sweeps entries whose
-  *     session is already stopped (stale (session, dir) keys no longer
-  *     pin the process), and [[FrameCache.clearAll]] resets everything.
-  *     Both properties are asserted in FrameCacheSpec.
+  *  - '''Session-scoped''' entries (`get(s, name, key)`) hold frames
+  *    bound to the session that built them. `evict(s)`, called by
+  *    `GraftSession.close`, releases them, and entries whose
+  *    SparkContext has stopped are swept on the next build.
+  *  - '''Process-scoped''' entries (`get(name, key)`) hold values that
+  *    stay valid across sessions (paths, counts, centroid matrices) and
+  *    live until evicted by key.
   *
-  * At cluster scale these memos are the "materialize once per corpus
-  * snapshot" pattern; this registry is the snapshot-lifecycle seam for
-  * the in-memory tier.
+  * Each key builds at most once: racing callers wait for the first
+  * build, where a check-then-insert on a bare concurrent map may run it
+  * twice and orphan one cached frame. Builds of different keys run
+  * concurrently and may nest (the IVF cells build trains centroids,
+  * which read the prepped corpus). A build that throws leaves the key
+  * unbuilt, and the next caller retries it.
+  *
+  * Releasing an entry unpersists every Dataset reachable in it, through
+  * tuples, case classes (e.g. `Dedup.NearDupIndex`) and collections.
+  * Single-query scratch frames (q36's sketch, q75's posting list, ...)
+  * are entries too: a bare per-invocation `.cache()` would pin its frame
+  * for the session's lifetime with nothing able to drop it.
   */
-final class FrameCache[K, V](
-    val name: String,
-    sessionOf: K => Option[SparkSession],
-    unpersistValue: V => Unit) {
-
-  private val map = new java.util.concurrent.ConcurrentHashMap[K, V]()
-
-  /** Memoized lookup; on a miss, runs `build` exactly once per key. */
-  def get(k: K)(build: => V): V = {
-    val hit = map.get(k)
-    if (hit != null) hit
-    else map.synchronized {
-      val again = map.get(k)
-      if (again != null) again
-      else {
-        // housekeeping on the rare build path: entries whose session is
-        // already stopped can never be served again — sweep them so
-        // stale (session, dir) keys don't pin the process lifetime
-        evictStopped()
-        val v = build; map.put(k, v); v
-      }
-    }
-  }
-
-  /** Current entry for `k`, if any — no build, no lock. */
-  def peek(k: K): Option[V] = Option(map.get(k))
-
-  /** Unpersist + drop every entry matching `p`; returns entries dropped. */
-  def evict(p: K => Boolean): Int = map.synchronized {
-    val it = map.entrySet().iterator()
-    var n = 0
-    while (it.hasNext) {
-      val e = it.next()
-      if (p(e.getKey)) {
-        try unpersistValue(e.getValue) catch { case _: Throwable => () }
-        it.remove(); n += 1
-      }
-    }
-    n
-  }
-
-  def evictSession(s: SparkSession): Int = evict(k => sessionOf(k).contains(s))
-  def evictStopped(): Int =
-    evict(k => sessionOf(k).exists(_.sparkContext.isStopped))
-  def size: Int = map.size()
-
-  FrameCache.register(this)
-}
-
 object FrameCache {
-  private val registry =
-    new java.util.concurrent.CopyOnWriteArrayList[FrameCache[_, _]]()
-  private def register(c: FrameCache[_, _]): Unit = registry.add(c)
 
-  /** Cache keyed (session, dir) holding one cached DataFrame. */
-  def frames(name: String): FrameCache[(SparkSession, String), DataFrame] =
-    new FrameCache(name, (k: (SparkSession, String)) => Some(k._1),
-      (v: DataFrame) => { v.unpersist(); () })
+  private final case class Key(session: Option[SparkSession], name: String, key: Any)
 
-  /** Generic constructor for other key/value shapes. */
-  def of[K, V](name: String, sessionOf: K => Option[SparkSession])(
-      unpersistValue: V => Unit): FrameCache[K, V] =
-    new FrameCache(name, sessionOf, unpersistValue)
+  /** One key's entry; its monitor serializes the key's build and release. */
+  private final class Slot {
+    @volatile var value: Option[Any] = None
+    var evicted = false
+  }
 
-  def evictSession(s: SparkSession): Int = {
+  private val slots = new ConcurrentHashMap[Key, Slot]()
+
+  /** Session-scoped memo lookup; on a miss, runs `build` once per key. */
+  def get[V](s: SparkSession, name: String, key: Any)(build: => V): V =
+    lookup(Key(Some(s), name, key), build)
+
+  /** Process-scoped memo lookup; on a miss, runs `build` once per key. */
+  def get[V](name: String, key: Any)(build: => V): V =
+    lookup(Key(None, name, key), build)
+
+  /** Current session-scoped entry, if built — never builds. */
+  def peek[V](s: SparkSession, name: String, key: Any): Option[V] =
+    current(Key(Some(s), name, key))
+
+  /** Current process-scoped entry, if built — never builds. */
+  def peek[V](name: String, key: Any): Option[V] =
+    current(Key(None, name, key))
+
+  /** Release and drop every entry of session `s`; returns entries released. */
+  def evict(s: SparkSession): Int = evictWhere((k, _) => k.session.contains(s))
+
+  /** Release and drop one process-scoped entry; returns entries released. */
+  def evict(name: String, key: Any): Int = {
+    val k = Key(None, name, key)
+    evictWhere((o, _) => o == k)
+  }
+
+  private def current[V](k: Key): Option[V] =
+    Option(slots.get(k)).flatMap(_.value).map(_.asInstanceOf[V])
+
+  @annotation.tailrec
+  private def lookup[V](k: Key, build: => V): V = {
+    val slot = slots.computeIfAbsent(k, _ => new Slot)
+    slot.value match {
+      case Some(v) => v.asInstanceOf[V]
+      case None =>
+        // housekeeping on the rare miss path: entries of a stopped
+        // SparkContext can never be served again, so stale session keys
+        // must not pin the process; built entries only, so the sweep
+        // never waits on another key's build
+        evictWhere((o, os) => o != k && os.value.isDefined &&
+          o.session.exists(_.sparkContext.isStopped))
+        val built = slot.synchronized {
+          if (slot.evicted) None
+          else {
+            if (slot.value.isEmpty) slot.value = Some(build)
+            slot.value
+          }
+        }
+        built match {
+          case Some(v) => v.asInstanceOf[V]
+          case None => lookup(k, build) // evicted while we waited: re-key
+        }
+    }
+  }
+
+  private def evictWhere(p: (Key, Slot) => Boolean): Int = {
     var n = 0
-    registry.forEach(c => n += c.evictSession(s))
+    slots.forEach { (k, slot) =>
+      if (p(k, slot) && slots.remove(k, slot)) slot.synchronized {
+        slot.evicted = true
+        slot.value.foreach { v =>
+          try release(v) catch { case NonFatal(_) => () }
+          n += 1
+        }
+      }
+    }
     n
   }
-  def evictStopped(): Int = {
-    var n = 0
-    registry.forEach(c => n += c.evictStopped())
-    n
-  }
-  def clearAll(): Int = {
-    var n = 0
-    registry.forEach(c => n += c.evict(_ => true))
-    n
+
+  private def release(v: Any): Unit = v match {
+    case ds: Dataset[_] => ds.unpersist()
+    case xs: Iterable[_] => xs.foreach(release)
+    case p: Product => p.productIterator.foreach(release)
+    case _ => ()
   }
 }

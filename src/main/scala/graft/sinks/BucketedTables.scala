@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.Tables
+import graft.runtime.FrameCache
 import org.apache.spark.sql.SparkSession
 
 
@@ -17,15 +18,11 @@ object BucketedTables {
 
   val Buckets = 8
 
-  // FrameCache, not TrieMap.getOrElseUpdate: the latter can run the
-  // builder CONCURRENTLY under racing suites — two threads both DROP +
-  // saveAsTable the same names into different temp dirs, one overwrite
-  // racing the other (the exact double-build defect FrameCache's
-  // scaladoc documents). Values are catalog names, so the unpersist
-  // hook is a no-op; staleness is handled by the catalog validation
-  // below, not eviction.
-  private val cache = graft.runtime.FrameCache.of[String, (String, String)](
-    "bucketed-tables", _ => None)(_ => ())
+  // A process-scoped FrameCache entry: a racing double build would
+  // DROP + saveAsTable the same names twice, one overwrite racing the
+  // other. Values are catalog names, so staleness is handled by the
+  // catalog validation below, not eviction.
+  private val Memo = "bucketed-tables"
 
   /** Ensure bucketed copies of (orders, lineitem) for `d`; returns the
     * catalog table names. Memoized names are VALIDATED against the
@@ -33,11 +30,11 @@ object BucketedTables {
     * same JVM has a fresh SharedState, so a remembered name may no
     * longer exist there. */
   def ensure(s: SparkSession, d: String): (String, String) = {
-    cache.peek(d).foreach { case (o, l) =>
+    FrameCache.peek[(String, String)](Memo, d).foreach { case (o, l) =>
       if (!s.catalog.tableExists(o) || !s.catalog.tableExists(l))
-        cache.evict(_ == d)
+        FrameCache.evict(Memo, d)
     }
-    cache.get(d) {
+    FrameCache.get(Memo, d) {
       // table tag = sanitized dir + hash of the raw path, matching
       // ArtifactStore.configuredDir's collision posture: hashCode alone
       // lets two dirs with colliding hashes silently share table names

@@ -98,10 +98,6 @@ object Cleanse {
     }
   }
 
-  /** F9: provenance column (reference mypy/xmlonly.py:142). */
-  def withProvenance(out: String = "input_file"): Stage =
-    df => df.withColumn(out, input_file_name())
-
   /** F13 (data-level analogue): content hash for dedup. */
   def withContentHash(c: String, out: String = "content_md5"): Stage =
     df => df.withColumn(out, md5(col(c).cast("binary")))

@@ -283,7 +283,8 @@ class PlanPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
     // localCheckpoints truncate lineage), so assert the artifact
     // itself: one entry per (session, dir) after a run.
     SparkEntry.queries("q106_incremental_cc")(spark, sf).count()
-    assert(graft.queries.DedupQueries.standingLabelsPeek(spark, sf).isDefined,
+    assert(graft.runtime.FrameCache.peek[org.apache.spark.sql.DataFrame](
+        spark, "dedup-standing-labels", sf).isDefined,
       "q106 no longer memoizes the standing (non-delta) label table")
   }
 

@@ -1,0 +1,67 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every in-process memo goes through `graft.runtime.FrameCache`, the one
+  * place that builds each key once and releases what it holds. A pack that
+  * grows its own map memo reintroduces the double build (a racing
+  * `getOrElseUpdate` runs the builder twice and orphans one cached frame)
+  * and an entry `GraftSession.close` cannot see. These checks read the
+  * source, so regrowth fails here before any query runs. */
+class SingleMemoSpec extends AnyFunSuite {
+
+  private val root = new File("src/main/scala")
+  private val memoFile = "graft/runtime/FrameCache.scala"
+
+  /** Shared maps that are not memos: each records the last result of an
+    * operation for a reader outside the build and is never read back to
+    * skip work. */
+  private val sideChannels = Set(
+    "graft/sinks/ArtifactStore.scala" -> "lastOrigin",
+    "graft/queries/StreamingQueries.scala" -> "lastStateMetrics")
+
+  /** (path under src/main/scala, source without comment lines or trailing
+    * comments) for every Scala file. */
+  private lazy val sources: Seq[(String, String)] = {
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    Files.walk(root.toPath).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map { p =>
+        val code = Files.readAllLines(p).asScala
+          .filterNot(_.matches("""^\s*(//|\*|/\*).*"""))
+          .map(_.replaceAll("""\s//.*$""", ""))
+        root.toPath.relativize(p).toString.replace('\\', '/') -> code.mkString("\n")
+      }
+  }
+
+  test("src/main has no getOrElseUpdate memo") {
+    val hits = sources.collect { case (f, code) if code.contains("getOrElseUpdate") => f }
+    assert(hits.isEmpty, s"getOrElseUpdate memo in ${hits.mkString(", ")}; use FrameCache.get")
+  }
+
+  test("FrameCache declares the only memo map in src/main") {
+    // a concurrent map anywhere, or a mutable map held as an object or
+    // class member (two-space indent); method-local accumulators are fine
+    val decl = ("""(?m)^( *)(?:[\w\[\]]+ +)*(?:val|var) +(\w+)\s*(?::[^=]+)?=\s*""" +
+      """(?:new\s+)?[\w.]*?(?:(TrieMap|ConcurrentHashMap|ConcurrentSkipListMap|""" +
+      """WeakHashMap)|(mutable\.\w*Map|util\.HashMap|util\.LinkedHashMap))\b""").r
+    val found = sources.flatMap { case (f, code) =>
+      decl.findAllMatchIn(code)
+        .filter(m => m.group(3) != null || m.group(1).length <= 2)
+        .map(m => f -> m.group(2)) }
+    assert(found.exists(_._1 == memoFile),
+      "the memo map pattern no longer matches FrameCache's own map")
+    val extra = found.filterNot { case (f, name) =>
+      f == memoFile || sideChannels((f, name)) }
+    assert(extra.isEmpty, "map declared outside FrameCache (a second memo?): " +
+      extra.map { case (f, n) => s"$f: $n" }.mkString(", "))
+    assert(!sources.exists { case (f, code) =>
+      f != memoFile && code.contains("computeIfAbsent") },
+      "computeIfAbsent memo outside FrameCache")
+  }
+}

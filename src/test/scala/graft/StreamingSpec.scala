@@ -788,8 +788,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = "/root/testdata/sf0.001"
     val res = StreamingQueries.queries("q101_stream_bloom_dedup")(spark, d)
       .collect()
-    val (nDefinite, nMaybe) =
-      StreamingQueries.lastBloomStats("q101_stream_bloom_dedup")
+    // the split the drain's micro-batches make, recomputed over the whole
+    // delta with the standing bloom the drain memoized
+    val (_, bloom) = graft.runtime.FrameCache
+      .peek[(org.apache.spark.sql.DataFrame, Array[Byte])](
+        spark, "q101-corpus-bloom", d)
+      .getOrElse(fail("q101 left no standing bloom entry"))
+    val hit = graft.ext.BloomPrune.mightContain(bloom,
+      md5(col("text").cast("binary")))
+    val Seq(nDefinite, nMaybe) = Seq(!hit, hit).map(p =>
+      Tables.documents(spark, d).filter(col("doc_id") % 7 === 3).filter(p).count())
     val deltaTotal = Tables.documents(spark, d)
       .filter(col("doc_id") % 7 === 3).count()
     // every arriving row lands on exactly one side of the split
@@ -818,8 +826,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queries("q105_stream_neardup_admission")(spark, d).collect()
     val nDelta = res.map(_.getLong(1)).sum
     val nAdmitted = res.map(_.getLong(2)).sum
-    val nRejected =
-      StreamingQueries.lastNearDupStats("q105_stream_neardup_admission")
+    // the drain's rejections, recomputed by probing the whole delta
+    // against the standing index the drain memoized (a probe is per doc,
+    // so the micro-batch split does not change the rejected set)
+    val idx = graft.runtime.FrameCache
+      .peek[graft.ext.Dedup.NearDupIndex](spark, "q105-neardup", d)
+      .getOrElse(fail("q105 left no standing index entry"))
+    val nRejected = idx.probe(
+        Tables.documents(spark, d).filter(col("doc_id") % 9 === 4),
+        "doc_id", "text", shingleN = 3)
+      .select(col("d_id")).distinct().count()
     // every arriving doc is either admitted once or rejected once,
     // across both micro-batches — no drops, no double-counting
     assert(nAdmitted + nRejected === nDelta)
