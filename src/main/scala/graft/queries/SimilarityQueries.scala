@@ -6,7 +6,6 @@ import graft.runtime.FrameCache
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import java.nio.file.Files
 
@@ -599,23 +598,15 @@ object SimilarityQueries extends QueryPack {
       val cb = pqCodebooks(s, d)
       val cents = centroids(s, d)
       val in = ingestFixture(s, d)
-      val tmp = Files.createTempDirectory("graft_ingest_run_").toString
       val schema = s.read.parquet(in).schema
-      val q = s.readStream.schema(schema).parquet(in)
-        .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-        .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
-        .select(col("vec_id"), element_at(col("codes"), 1).as("c0"),
-          explode(col("cells")).as("cell"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .option("checkpointLocation", s"$tmp/chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+      val out = StreamingQueries.drainToParquet("q73_stream_index_ingest",
+        s.readStream.schema(schema).parquet(in)
+          .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
+          .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
+          .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
+          .select(col("vec_id"), element_at(col("codes"), 1).as("c0"),
+            explode(col("cells")).as("cell")))
+      s.read.parquet(out)
         .select(col("cell").cast("long").as("cell"),
           col("c0").cast("long").as("c0"), col("vec_id"))
         .groupBy(col("cell"))
@@ -730,56 +721,47 @@ object SimilarityQueries extends QueryPack {
     //      not change a single answer. ----
     "q111_stream_ann_search" -> ((s, d) => {
       val inDir = annQueryFixture(s, d)
-      // cells BEFORE centroids: on the artifact restart path the index
-      // load seeds the centroid memo — the reverse order would re-train
-      // the matrix the artifact already carries
-      val idx = corpusCells(s, d)
-      val cents = centroids(s, d)
-      val tmp = Files.createTempDirectory("graft_annq_run_").toString
+      val search = annSearchBatch(s, d)
       val schema = s.read.parquet(inDir).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val probes = Similarity.withNormalized(batch, "embedding")
-            .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-            .withColumn("cells", Similarity.topCells(col("dots"), IvfProbes))
-            .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-              explode(col("cells")).as("cell"))
-          // score map-side while the vectors are in hand, THEN dedupe
-          // and rank on the narrow (q_id, vec_id, cos) rows (r21, guide
-          // §2.3): multi-probe duplicates carry identical payloads, so
-          // their cosines are identical and the deduped set is exactly
-          // the pre-r21 distinct-then-score one — but neither the
-          // distinct nor the window exchange ships the 2×64-double
-          // payloads any more.
-          val cand = idx.join(broadcast(probes), Seq("cell"))
-            .filter(col("vec_id") =!= col("q_id"))
-            .withColumn("cos", Similarity.dot(col("qe"), col("ne")))
-            .select(col("q_id"), col("vec_id"), col("cos"))
-            .distinct()
-          val ranked = rankTopK(cand, 3).withColumn("wave", col("q_id") % 2)
-          // Diagnostic seam (VERDICT r21 #5): foreachBatch plans never
-          // reach PlanDump (they exist only per batch), so the evidence
-          // that the distinct/rank exchanges carry (q_id, vec_id, cos)
-          // and not the 2×64-double payloads is dumped here, env-gated,
-          // and committed as plans/r22/q111_microbatch_after.txt.
-          if (sys.env.contains("SPARK_GRAFT_DUMP_BATCH_PLANS"))
-            println("[batchplan q111_stream_ann_search]\n" +
-              ranked.queryExecution.explainString(
-                org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          ranked.write.mode("append").parquet(s"$tmp/out")
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+      val out = StreamingQueries.drainToParquet("q111_stream_ann_search",
+        s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(inDir), search)
+      s.read.parquet(out)
         .select(col("wave"), col("q_id"), col("rn"), col("vec_id"),
           col("cos"))
         .orderBy(col("q_id"), col("rn"))
     })
   )
+
+  /** q111's per-micro-batch search: raw (vec_id, embedding) queries →
+    * top-3 neighbours per query, with the wave. Candidates are scored
+    * map-side while the vectors are in hand, THEN deduped and ranked on
+    * the narrow (q_id, vec_id, cos) rows (guide §2.3): multi-probe
+    * duplicates carry identical payloads, so their cosines are
+    * identical and the deduped set equals a distinct-then-score one —
+    * but neither the distinct nor the window exchange ships the
+    * 2×64-double payloads (PlanPostureSpec pins this). */
+  private[graft] def annSearchBatch(s: SparkSession, d: String)
+      : DataFrame => DataFrame = {
+    // cells BEFORE centroids: on the artifact restart path the index
+    // load seeds the centroid memo — the reverse order would re-train
+    // the matrix the artifact already carries
+    val idx = corpusCells(s, d)
+    val cents = centroids(s, d)
+    batch => {
+      val probes = Similarity.withNormalized(batch, "embedding")
+        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
+        .withColumn("cells", Similarity.topCells(col("dots"), IvfProbes))
+        .select(col("vec_id").as("q_id"), col("ne").as("qe"),
+          explode(col("cells")).as("cell"))
+      val cand = idx.join(broadcast(probes), Seq("cell"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos", Similarity.dot(col("qe"), col("ne")))
+        .select(col("q_id"), col("vec_id"), col("cos"))
+        .distinct()
+      rankTopK(cand, 3).withColumn("wave", col("q_id") % 2)
+    }
+  }
 
   /** Staged (vec_id, raw embedding) parquet of the evaluation cohort in
     * two wave files — the q111 stream input. Memoized per dir (paths
@@ -791,13 +773,8 @@ object SimilarityQueries extends QueryPack {
       val cohort = Tables.embeddings(s, d)
         .filter(isQuery(s, d)).select(col("vec_id"), col("embedding"))
       Seq(0, 1).foreach { w =>
-        val st = s"$tmp/stage_$w"
-        cohort.filter(col("vec_id") % 2 === w)
-          .coalesce(1).write.mode("overwrite").parquet(st)
-        val part = new java.io.File(st).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        Files.move(part.toPath,
-          new java.io.File(in, f"00$w%s_wave.parquet").toPath)
+        StreamingQueries.stageSingleFile(cohort.filter(col("vec_id") % 2 === w),
+          tmp, in, f"00$w%s_wave.parquet", format = "parquet")
       }
       s"$tmp/in"
     })

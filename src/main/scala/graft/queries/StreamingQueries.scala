@@ -2,21 +2,20 @@ package graft.queries
 
 import graft.{QueryPack, Tables}
 import graft.runtime.FrameCache
-import graft.streaming.StateMetrics
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.streaming.{FilePipeline, StateMetrics}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import java.nio.file.Files
-import java.util.UUID
 
 /** Structured-Streaming coverage with a DuckDB oracle (SURVEY.md §2.8
   * ST10 — event-time windowed aggregation the reference lacks): the
   * query materializes `events` as JSON files, drains them through a
   * streaming file source into a tumbling-window aggregate (complete
-  * mode, AvailableNow trigger, memory sink), and the oracle computes
-  * the same aggregate relationally. Watermark/late-data semantics are
+  * mode, one [[FilePipeline.drain]] whose sink collects the final
+  * result table), and the oracle computes the same aggregate
+  * relationally. Watermark/late-data semantics are
   * covered by StreamingSpec (they drop rows by arrival order, which a
   * batch oracle can't express).
   */
@@ -85,12 +84,43 @@ object StreamingQueries extends QueryPack {
     ss
   }
 
-  /** State-store metrics of each streaming query's most recent drain,
-    * recorded after awaitTermination — the observability surface a
-    * production runner would export (see [[StateMetrics]]). Specs
-    * regression-guard state sizing and watermark-bounded growth here. */
+  /** State-store metrics of each streaming query's most recent drain
+    * (every [[drainRun]]) — the observability surface a production
+    * runner would export (see [[StateMetrics]]). Specs regression-guard
+    * state sizing and watermark-bounded growth here. */
   val lastStateMetrics = scala.collection.concurrent.TrieMap
     .empty[String, Seq[StateMetrics.StoreMetrics]]
+
+  /** Drain `stream` once under a fresh run dir's checkpoint (every query
+    * drain starts clean, so a run never replays), recording the drain's
+    * state-store metrics under `name`. `sink` gets the run dir to write
+    * under; the run dir is returned. */
+  private def drainRun(name: String, stream: DataFrame,
+      outputMode: String = "append")(
+      sink: String => (DataFrame, Long) => Unit): String = {
+    val run = Files.createTempDirectory(s"graft_${name}_").toString
+    val q = FilePipeline.drain(stream, s"$run/chk", outputMode)(sink(run))
+    lastStateMetrics(name) = StateMetrics.collect(q)
+    run
+  }
+
+  /** [[drainRun]] appending `perBatch` of every micro-batch to parquet;
+    * returns that dir. */
+  private[queries] def drainToParquet(name: String, stream: DataFrame,
+      perBatch: DataFrame => DataFrame = identity): String = {
+    val run = drainRun(name, stream)(dir =>
+      (df, _) => perBatch(df).write.mode("append").parquet(s"$dir/out"))
+    s"$run/out"
+  }
+
+  /** Complete-mode [[drainRun]]: each batch is the whole result table,
+    * collected to the driver; the last one comes back as a local frame. */
+  private def drainComplete(name: String, stream: DataFrame): DataFrame = {
+    var last = Array.empty[Row]
+    drainRun(name, stream, "complete")(_ => (df, _) => last = df.collect())
+    stream.sparkSession.createDataFrame(
+      java.util.Arrays.asList(last: _*), stream.schema)
+  }
 
   private val EventSchema = StructType(Seq(
     StructField("event_id", LongType),
@@ -111,14 +141,14 @@ object StreamingQueries extends QueryPack {
     * arrival fixture convention every streaming query uses (coalesce(1)
     * write, move the single part file to its arrival name). Default is
     * line-delimited JSON; `format = "text"` stages pre-serialized lines
-    * (q107's deliberately-corrupt payloads). Shared so the staging
-    * convention cannot drift between queries. */
-  private def stageSingleFile(df: DataFrame, fxRoot: String,
+    * (q107's deliberately-corrupt payloads), `"parquet"` q111's query
+    * waves. Shared so the staging convention cannot drift between
+    * queries. */
+  private[queries] def stageSingleFile(df: DataFrame, fxRoot: String,
       inDir: java.io.File, name: String, format: String = "json"): Unit = {
     val st = s"$fxRoot/stage_$name"
-    val ext = if (format == "text") ".txt" else ".json"
-    if (format == "text") df.coalesce(1).write.mode("overwrite").text(st)
-    else df.coalesce(1).write.mode("overwrite").json(st)
+    df.coalesce(1).write.mode("overwrite").format(format).save(st)
+    val ext = if (format == "text") ".txt" else s".$format"
     val part = new java.io.File(st).listFiles()
       .filter(_.getName.endsWith(ext)).head
     Files.move(part.toPath, new java.io.File(inDir, name).toPath)
@@ -191,25 +221,16 @@ object StreamingQueries extends QueryPack {
         ev.write.mode("overwrite").json(s"$fx/in")
         ev.write.mode("append").json(s"$fx/in") // duplicate copy
       }
-      val tmp = Files.createTempDirectory("graft_sdedup_run_").toString
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("ts", TimestampType),
         StructField("event_type", StringType),
         StructField("value", DoubleType)))
-      val q = streamSession(s).readStream.schema(schema).json(s"$in/in")
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .option("checkpointLocation", s"$tmp/chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastStateMetrics("q48_stream_dedup") = StateMetrics.collect(q)
-      s.read.parquet(s"$tmp/out")
+      val out = drainToParquet("q48_stream_dedup",
+        streamSession(s).readStream.schema(schema).json(s"$in/in")
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id"))
+      s.read.parquet(out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .orderBy(col("event_type"))
@@ -227,22 +248,12 @@ object StreamingQueries extends QueryPack {
           .select(col("ts"), col("user_id"), col("event_type"), col("value"))
           .write.mode("overwrite").json(s"$fx/in")
       }
-      val tmp = Files.createTempDirectory("graft_ssj_run_").toString
-      val ss = streamSession(s)
       // `val src` (not def): see clickPurchaseBranches — one source
-      val src = ss.readStream.schema(ArrivalSchema).json(s"$in/in")
+      val src = streamSession(s).readStream.schema(ArrivalSchema).json(s"$in/in")
       val (clicks, purchases, cond) = clickPurchaseBranches(src)
-      val joined = purchases.join(clicks, cond)
-      val q = joined.writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .option("checkpointLocation", s"$tmp/chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastStateMetrics("q55_stream_stream_join") = StateMetrics.collect(q)
-      s.read.parquet(s"$tmp/out")
+      val out = drainToParquet("q55_stream_stream_join",
+        purchases.join(clicks, cond))
+      s.read.parquet(out)
         .groupBy((col("p_user") % 10).as("cohort"))
         .agg(count(lit(1)).as("n_pairs"),
           round(sum(col("p_value")), 2).as("sum_value"))
@@ -266,13 +277,9 @@ object StreamingQueries extends QueryPack {
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("ts"), col("user_id"), col("event_type"), col("value"))
         val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
-        ev.coalesce(1).write.mode("overwrite").json(s"$fx/stage")
         val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        val part = new java.io.File(s"$fx/stage").listFiles()
-          .filter(_.getName.endsWith(".json")).head
-        val main = new java.io.File(in, "000_main.json")
-        Files.move(part.toPath, main.toPath)
-        val t0 = main.lastModified()
+        stageSingleFile(ev, fx, in, "000_main.json")
+        val t0 = new java.io.File(in, "000_main.json").lastModified()
         def sentinel(name: String, offMs: Long, modMs: Long): Unit = {
           val ts = java.time.Instant.ofEpochMilli(maxTs.getTime + offMs).toString
           val f = new java.io.File(in, name)
@@ -285,25 +292,15 @@ object StreamingQueries extends QueryPack {
         sentinel("001_s1.json", 2 * 3600 * 1000L, t0 + 60000)
         sentinel("002_s2.json", 4 * 3600 * 1000L, t0 + 120000)
       }
-      val tmp = Files.createTempDirectory("graft_sslo_run_").toString
-      val ss = streamSession(s)
       // ONE source (see clickPurchaseBranches) — maxFilesPerTrigger=1
       // additionally makes each micro-batch feed BOTH sides from the
       // same file instead of two sources pacing their own file queues
-      val src = ss.readStream.schema(ArrivalSchema)
+      val src = streamSession(s).readStream.schema(ArrivalSchema)
         .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
       val (clicks, purchases, cond) = clickPurchaseBranches(src)
-      val joined = purchases.join(clicks, cond, "leftOuter")
-      val q = joined.writeStream.outputMode("append")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$tmp/out")
-        }
-        .option("checkpointLocation", s"$tmp/chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastStateMetrics("q58_stream_left_outer") = StateMetrics.collect(q)
-      s.read.parquet(s"$tmp/out")
+      val out = drainToParquet("q58_stream_left_outer",
+        purchases.join(clicks, cond, "leftOuter"))
+      s.read.parquet(out)
         .filter(col("p_user") >= 0)
         .groupBy((col("p_user") % 10).as("cohort"))
         .agg(count(lit(1)).as("n_rows"),
@@ -316,25 +313,14 @@ object StreamingQueries extends QueryPack {
       val in = fixtureDir("stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
-      val tmp = Files.createTempDirectory("graft_stream_run_").toString
-      val ss = streamSession(s)
-      val stream = ss.readStream.schema(EventSchema).json(s"$in/in")
+      val stream = streamSession(s).readStream.schema(EventSchema).json(s"$in/in")
       val agg = stream
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .select(col("window.start").as("hour"), col("event_type"),
           col("n"), col("sum_value"))
-      val mem = "q42_mem_" + UUID.randomUUID.toString.replace("-", "")
-      val q = agg.writeStream.format("memory").queryName(mem)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
-      lastStateMetrics("q42_stream_tumbling") = StateMetrics.collect(q)
-      // the memory-sink table registers in the session that STARTED the
-      // query — read it from the same clone
-      ss.table(mem).orderBy(col("hour"), col("event_type"))
+      drainComplete("q42_stream_tumbling", agg)
+        .orderBy(col("hour"), col("event_type"))
     }),
 
     // ---- Sliding event-time windows (1 h span, 30 min slide): each
@@ -347,23 +333,14 @@ object StreamingQueries extends QueryPack {
       val in = fixtureDir("stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
-      val tmp = Files.createTempDirectory("graft_stream_run_").toString
-      val ss = streamSession(s)
-      val stream = ss.readStream.schema(EventSchema).json(s"$in/in")
+      val stream = streamSession(s).readStream.schema(EventSchema).json(s"$in/in")
       val agg = stream
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"), col("sum_value"))
-      val mem = "q85_mem_" + UUID.randomUUID.toString.replace("-", "")
-      val q = agg.writeStream.format("memory").queryName(mem)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
-      lastStateMetrics("q85_stream_sliding") = StateMetrics.collect(q)
-      ss.table(mem).orderBy(col("win_start"), col("event_type"))
+      drainComplete("q85_stream_sliding", agg)
+        .orderBy(col("win_start"), col("event_type"))
     }),
 
     // ---- Streaming CDC apply: update/insert batches arrive on a file
@@ -397,7 +374,6 @@ object StreamingQueries extends QueryPack {
             .withColumn("o_orderstatus", lit("W"))
             .withColumn("version", lit(3L))), "002_ins.json")
       }
-      val tmp = Files.createTempDirectory("graft_cdc_run_").toString
       val ss = streamSession(s)
       val schema = StructType(Seq(
         StructField("o_orderkey", LongType),
@@ -405,10 +381,9 @@ object StreamingQueries extends QueryPack {
         StructField("o_totalprice", DoubleType),
         StructField("version", LongType)))
       var snapPath = s"$fxDir/snap0"
-      val q = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+      drainRun("q88_stream_upsert", ss.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")) { run =>
+        (batch, id) =>
           val next = ss.read.parquet(snapPath).unionByName(batch)
             .groupBy(col("o_orderkey"))
             .agg(max_by(struct(col("o_orderstatus"), col("o_totalprice"),
@@ -417,14 +392,10 @@ object StreamingQueries extends QueryPack {
               col("r.o_orderstatus").as("o_orderstatus"),
               col("r.o_totalprice").as("o_totalprice"),
               col("r.version").as("version"))
-          val out = s"$tmp/snap_$id"
+          val out = s"$run/snap_$id"
           next.write.mode("overwrite").parquet(out)
           snapPath = out
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
+      }
       ss.read.parquet(snapPath)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
@@ -444,7 +415,6 @@ object StreamingQueries extends QueryPack {
       val in = fixtureDir("stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
-      val tmp = Files.createTempDirectory("graft_stream_run_").toString
       val ss = streamSession(s)
       val dim = Tables.nation(ss, d)
         .select(col("n_nationkey"), col("n_name"))
@@ -453,14 +423,7 @@ object StreamingQueries extends QueryPack {
       val agg = stream.join(broadcast(dim), Seq("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      val mem = "q93_mem_" + UUID.randomUUID.toString.replace("-", "")
-      val q = agg.writeStream.format("memory").queryName(mem)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
-      ss.table(mem).orderBy(col("n_name"))
+      drainComplete("q93_stream_static_join", agg).orderBy(col("n_name"))
     }),
 
     // ---- Streaming ingest dedup with bloom prefilter: new docs arrive
@@ -484,16 +447,14 @@ object StreamingQueries extends QueryPack {
         stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
         stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
       }
-      val tmp = Files.createTempDirectory("graft_blm_run_").toString
       val ss = streamSession(s)
       // standing artifacts (memoized on the BASE session — streamSession
       // clones a new session per invocation): corpus fold paid once,
       // reused by every subsequent drain over the same snapshot
       val (corpusKeys, bloom) = corpusBloom(s, d)
-      val q = ss.readStream.schema(DocArrivalSchema)
-        .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      val out = drainToParquet("q101_stream_bloom_dedup", ss.readStream
+          .schema(DocArrivalSchema)
+          .option("maxFilesPerTrigger", 1).json(s"$fxDir/in"), { batch =>
           // DELIBERATELY uncached (unlike q107's per-batch frame): the
           // lineage here is one JSON file read + map-side md5/bloom
           // probes, and cache() overhead measured MORE than the
@@ -507,17 +468,12 @@ object StreamingQueries extends QueryPack {
             .join(corpusKeys, Seq("ck"), "left_anti")
           definiteNew.unionByName(confirmedNew)
             .select(col("doc_id"), col("source"))
-            .write.mode("append").parquet(s"$tmp/admitted")
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
+      })
       // corpusKeys stays cached — it is the standing snapshot artifact,
       // owned by its FrameCache entry, not this drain
       val totals = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
-      val adm = ss.read.parquet(s"$tmp/admitted")
+      val adm = ss.read.parquet(out)
         .groupBy(col("source")).agg(count(lit(1)).as("n_admitted"))
       totals.join(adm, Seq("source"), "left")
         .na.fill(0L, Seq("n_admitted"))
@@ -547,28 +503,21 @@ object StreamingQueries extends QueryPack {
         stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
         stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
       }
-      val tmp = Files.createTempDirectory("graft_nd_run_").toString
       val ss = streamSession(s)
       val idx = standingNearDupIndex(s, d)
-      val q = ss.readStream.schema(DocArrivalSchema)
-        .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      val out = drainToParquet("q105_stream_neardup_admission", ss.readStream
+          .schema(DocArrivalSchema)
+          .option("maxFilesPerTrigger", 1).json(s"$fxDir/in"), { batch =>
           // uncached: the anti join is the only reader of `rejected`
           val rejected = idx.probe(batch, "doc_id", "text", shingleN = 3)
             .select(col("d_id").as("doc_id")).distinct()
           batch.join(rejected, Seq("doc_id"), "left_anti")
             .select(col("doc_id"), col("source"))
-            .write.mode("append").parquet(s"$tmp/admitted")
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
+      })
       // idx stays cached — standing snapshot artifact, owned by its FrameCache entry
       val totals = Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
         .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
-      val adm = ss.read.parquet(s"$tmp/admitted")
+      val adm = ss.read.parquet(out)
         .groupBy(col("source")).agg(count(lit(1)).as("n_admitted"))
       totals.join(adm, Seq("source"), "left")
         .na.fill(0L, Seq("n_admitted"))
@@ -606,33 +555,27 @@ object StreamingQueries extends QueryPack {
         stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
         stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
       }
-      val tmp = Files.createTempDirectory("graft_dl_run_").toString
       val ss = streamSession(s)
       val schema = DocArrivalSchema
         .add(StructField("_corrupt_record", StringType))
-      val q = ss.readStream.schema(schema)
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      val run = drainRun("q107_dead_letter", ss.readStream.schema(schema)
+          .option("columnNameOfCorruptRecord", "_corrupt_record")
+          .option("maxFilesPerTrigger", 1).json(s"$fxDir/in")) { dir =>
+        (batch, _) =>
           val b = batch.cache()
           try {
             b.filter(col("_corrupt_record").isNull)
               .select(col("doc_id"), col("source"))
-              .write.mode("append").parquet(s"$tmp/good")
+              .write.mode("append").parquet(s"$dir/good")
             b.filter(col("_corrupt_record").isNotNull)
               .select(col("_corrupt_record").as("raw"))
-              .write.mode("append").parquet(s"$tmp/dead")
+              .write.mode("append").parquet(s"$dir/dead")
           } finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/chk")
-        .start()
-      q.awaitTermination()
-      val good = ss.read.parquet(s"$tmp/good")
+      }
+      val good = ss.read.parquet(s"$run/good")
         .groupBy(col("source").as("bucket"))
         .agg(count(lit(1)).as("n"))
-      val dead = ss.read.parquet(s"$tmp/dead")
+      val dead = ss.read.parquet(s"$run/dead")
         .agg(count(lit(1)).as("n"))
         .select(lit("_corrupt").as("bucket"), col("n"))
       good.unionByName(dead).orderBy(col("bucket"))

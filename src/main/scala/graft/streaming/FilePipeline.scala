@@ -19,22 +19,20 @@ final case class FilePipelineConfig(
     inputDir: String,
     schema: StructType,
     format: String = "json",           // "json" | "csv"
-    multiline: Boolean = true,         // reference reads JSON-array files
-    header: Boolean = true,            // CSV flow
-    maxFilesPerTrigger: Option[Int] = Some(1), // ST6
     checkpointDir: String,
     archiveDir: Option[String] = None, // ST7 cleanSource=archive
     provenanceCol: Option[String] = Some("input_file")) // F9
 
 object FilePipeline {
 
-  /** Build the streaming source DataFrame. */
+  /** Build the streaming source DataFrame: one file per micro-batch
+    * (ST6), JSON-array files for json (the reference's shape), a header
+    * row for csv. */
   def source(spark: SparkSession, cfg: FilePipelineConfig): DataFrame = {
-    var r = spark.readStream.schema(cfg.schema)
-    cfg.maxFilesPerTrigger.foreach(n => r = r.option("maxFilesPerTrigger", n))
+    var r = spark.readStream.schema(cfg.schema).option("maxFilesPerTrigger", 1)
     r = cfg.format match {
-      case "json" => r.option("multiline", cfg.multiline)
-      case "csv"  => r.option("header", cfg.header)
+      case "json" => r.option("multiline", true)
+      case "csv"  => r.option("header", true)
       case other  => throw new IllegalArgumentException(s"format: $other")
     }
     cfg.archiveDir.foreach { d =>
@@ -44,28 +42,37 @@ object FilePipeline {
     cfg.provenanceCol.fold(df)(c => df.withColumn(c, input_file_name()))
   }
 
-  /** Drain everything currently in the input dir through `transform`
-    * into `sink`, then stop (reference ST2 trigger-once DAG semantics).
-    * Blocks until the drain completes. */
-  def drainAvailable(spark: SparkSession, cfg: FilePipelineConfig,
-      transform: DataFrame => DataFrame,
+  /** Drain everything `stream` can read now into `sink`, then stop
+    * (reference ST2 trigger-once DAG semantics). Blocks until the drain
+    * completes; a sink failure stops the query and rethrows here, and
+    * the failed batch's offsets stay uncommitted, so the next drain on
+    * `checkpointDir` re-delivers it. The one place the engine starts a
+    * streaming query. */
+  def drain(stream: DataFrame, checkpointDir: String,
+      outputMode: String = "append")(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val q = source(spark, cfg).writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // O3 branch-if-empty. The probe is an extra job per batch, but
-        // a BOUNDED one — isEmpty is limit(1), which short-circuits
-        // after the first row, it does not rescan the batch — and it
-        // keeps no-data batches (watermark-advance triggers) from
-        // writing empty output files. Persisting the batch around
-        // probe+sink was considered and NOT taken: r5 measured cache()
-        // overhead on small map-only batches costing more than the
-        // re-evaluation it saves (BASELINE.md r5 row).
-        if (!batch.isEmpty) sink(transform(batch), id)
-      }
+    val q = stream.writeStream.outputMode(outputMode)
+      .foreachBatch(sink)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cfg.checkpointDir)
+      .option("checkpointLocation", checkpointDir)
       .start()
     q.awaitTermination()
     q
   }
+
+  /** `drain` of the configured source through `transform` into `sink`. */
+  def drainAvailable(spark: SparkSession, cfg: FilePipelineConfig,
+      transform: DataFrame => DataFrame,
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(source(spark, cfg), cfg.checkpointDir) { (batch, id) =>
+      // O3 branch-if-empty. The probe is an extra job per batch, but
+      // a BOUNDED one — isEmpty is limit(1), which short-circuits
+      // after the first row, it does not rescan the batch — and it
+      // keeps no-data batches (watermark-advance triggers) from
+      // writing empty output files. Persisting the batch around
+      // probe+sink was considered and NOT taken: r5 measured cache()
+      // overhead on small map-only batches costing more than the
+      // re-evaluation it saves (BASELINE.md r5 row).
+      if (!batch.isEmpty) sink(transform(batch), id)
+    }
 }

@@ -1,6 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -70,6 +76,35 @@ class PlanPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("BroadcastHashJoin"), "q69 lost its broadcast join")
     // (the 300-row recall-join tail may plan as SortMergeJoin before
     // AQE converts it at runtime — only the candidate join is guarded)
+  }
+
+  test("q111: micro-batch distinct and rank exchanges carry (q_id, vec_id, cos), not the vectors") {
+    // foreachBatch plans exist only per batch, so the batch body runs on a
+    // static frame of the same (vec_id, embedding) shape
+    val batch = Tables.embeddings(spark, sf).filter(col("vec_id") % 10 === 0)
+      .select(col("vec_id"), col("embedding"))
+    val ranked = graft.queries.SimilarityQueries.annSearchBatch(spark, sf)(batch)
+    val p = ranked.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val rank = p.collectFirst { case w: WindowExec => w }
+      .getOrElse(fail(s"no rank window in the q111 batch plan:\n$p"))
+    val join = rank.collectFirst { case j: BroadcastHashJoinExec => j }
+      .getOrElse(fail(s"the probe set no longer broadcasts:\n$p"))
+    // the standing index's own lineage (below the join) is not the
+    // batch's: it shows only when its cache is not in use
+    val indexSide = join.collect { case e: ShuffleExchangeExec => e }
+    val shuffles = rank.collect {
+      case e: ShuffleExchangeExec if !indexSide.contains(e) => e.output }
+    assert(shuffles.size >= 2, s"expected the distinct and rank exchanges:\n$p")
+    shuffles.foreach { out =>
+      assert(!out.exists(_.dataType.isInstanceOf[ArrayType]),
+        s"an exchange below the rank ships vectors: $out")
+      // `_w0` is the window's derived round(cos, 6) sort key
+      assert(out.map(_.name).filterNot(_.startsWith("_w")).toSet ===
+        Set("q_id", "vec_id", "cos"))
+    }
   }
 
   test("q66: split assignment is map-side — no join, no window, one aggregate exchange") {

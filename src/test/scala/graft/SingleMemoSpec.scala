@@ -1,10 +1,5 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every in-process memo goes through `graft.runtime.FrameCache`, the one
@@ -15,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * source, so regrowth fails here before any query runs. */
 class SingleMemoSpec extends AnyFunSuite {
 
-  private val root = new File("src/main/scala")
   private val memoFile = "graft/runtime/FrameCache.scala"
 
   /** Shared maps that are not memos: each records the last result of an
@@ -25,19 +19,7 @@ class SingleMemoSpec extends AnyFunSuite {
     "graft/sinks/ArtifactStore.scala" -> "lastOrigin",
     "graft/queries/StreamingQueries.scala" -> "lastStateMetrics")
 
-  /** (path under src/main/scala, source without comment lines or trailing
-    * comments) for every Scala file. */
-  private lazy val sources: Seq[(String, String)] = {
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    Files.walk(root.toPath).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-      .map { p =>
-        val code = Files.readAllLines(p).asScala
-          .filterNot(_.matches("""^\s*(//|\*|/\*).*"""))
-          .map(_.replaceAll("""\s//.*$""", ""))
-        root.toPath.relativize(p).toString.replace('\\', '/') -> code.mkString("\n")
-      }
-  }
+  private def sources = MainSources.code
 
   test("src/main has no getOrElseUpdate memo") {
     val hits = sources.collect { case (f, code) if code.contains("getOrElseUpdate") => f }

@@ -64,6 +64,30 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$out/data").count() === 3)
   }
 
+  test("drain: a failing sink fails the drain, and the next drain re-delivers its batch") {
+    val in = tmpDir("fpfail_in_")
+    val chk = tmpDir("fpfail_chk_")
+    writeJsonFile(in, "a.json",
+      """[{"measObjLdn":"eNodeB=N1,Cell=1","kpiId":"1","kpiValue":"5.5"},
+        | {"measObjLdn":"eNodeB=N2,Cell=2","kpiId":"2","kpiValue":"7.0"}]""".stripMargin)
+    val cfg = FilePipelineConfig(inputDir = in, schema = kpiSchema,
+      checkpointDir = chk)
+    val boom = new IllegalStateException("sink down")
+    val err = intercept[Exception] {
+      FilePipeline.drainAvailable(spark, cfg, transform = identity,
+        sink = (_, id) => if (id == 0L) throw boom)
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).take(20).toSeq
+    assert(causes.contains(boom), s"sink exception not in the cause chain: $causes")
+    // at-least-once: batch 0 never committed, so a drain over the same
+    // checkpoint replays it under the same id with the same rows
+    var seen = Seq.empty[(Long, String)]
+    FilePipeline.drainAvailable(spark, cfg, transform = identity,
+      sink = (df, id) => seen ++= df.select("kpiId").as[String].collect().map(id -> _))
+    assert(seen.sorted === Seq(0L -> "1", 0L -> "2"))
+  }
+
   test("TopicRouter fans one batch out to per-topic sinks + fallback") {
     val out = tmpDir("router_")
     // the NULL-topic row must reach the fallback, not vanish: both the
