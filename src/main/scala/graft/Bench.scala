@@ -93,11 +93,12 @@ object Bench {
       }
     val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Only queries where a SECOND run happened (first != best) get a
-    // first_secs entry — first == best for every single-run query, so
-    // omitting them loses nothing and keeps the big line well inside
-    // the driver's stdout-tail capture window (the r20 truncation cut
-    // a ~4.5 KB line; a full 109-entry duplicate map would double it).
+    // A query gets a first_secs entry only where first != best; an
+    // absent key means first == best, so a reader falls back to
+    // queries[q]. Omitting those entries loses nothing and keeps the
+    // big line well inside the driver's stdout-tail capture window (the
+    // r20 truncation cut a ~4.5 KB line; a full 109-entry duplicate map
+    // would double it).
     val firsts = results.collect { case (k, (v, w)) if w != v =>
       s"\"" + k + "\":" + w }
       .mkString("{", ",", "}")
@@ -145,7 +146,8 @@ object Bench {
     }
     // `first_secs` rides only on the big line (the compact survivor line
     // stays byte-identical to prior rounds so driver-to-driver total
-    // comparison is unaffected); entries only where first != best.
+    // comparison is unaffected); a query absent from it has first ==
+    // best, read queries[q].
     println(s"""{"metric":"$metric","value":$total,"unit":"sec","queries":$qs,"first_secs":$firsts,"sf":"$sfDir"$filterField$failedField$calibField}""")
     println(s"""{"metric":"$metric","value":$total,"unit":"sec","sf":"$sfDir"$filterField$failedField$calibField}""")
   }

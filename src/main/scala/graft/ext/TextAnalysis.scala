@@ -66,9 +66,6 @@ object TextAnalysis {
     lenScore * 0.4 + (lit(1.0) - punct) * 0.3 + stop * 0.3
   }
 
-  /** [[qualityScoreRaw]] rounded to 4dp — the display/compare form. */
-  def qualityScore(text: Column): Column = round(qualityScoreRaw(text), 4)
-
   /** Language-ID heuristic: argmax of per-language stopword hit counts,
     * ties broken by [[LangOrder]] preference (deterministic). */
   def langId(text: Column): Column = {

@@ -2,6 +2,7 @@ package graft.runtime
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -31,7 +32,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * unbuilt, and the next caller retries it.
   *
   * Releasing an entry unpersists every Dataset reachable in it, through
-  * tuples, case classes (e.g. `Dedup.NearDupIndex`) and collections.
+  * tuples, case classes (e.g. `Dedup.NearDupIndex`) and collections,
+  * except one whose plan another entry still holds.
   * Single-query scratch frames (q36's sketch, q75's posting list, ...)
   * are entries too: a bare per-invocation `.cache()` would pin its frame
   * for the session's lifetime with nothing able to drop it.
@@ -108,7 +110,7 @@ object FrameCache {
       if (p(k, slot) && slots.remove(k, slot)) slot.synchronized {
         slot.evicted = true
         slot.value.foreach { v =>
-          try release(v) catch { case NonFatal(_) => () }
+          release(v)
           n += 1
         }
       }
@@ -116,10 +118,28 @@ object FrameCache {
     n
   }
 
-  private def release(v: Any): Unit = v match {
-    case ds: Dataset[_] => ds.unpersist()
-    case xs: Iterable[_] => xs.foreach(release)
-    case p: Product => p.productIterator.foreach(release)
-    case _ => ()
+  /** Unpersists each Dataset in `v` that no remaining entry holds.
+    * Spark's CacheManager is shared by every session of a context and
+    * uncaches by plan, so unpersisting a frame also drops the cache
+    * behind an identical frame another entry still serves (the same
+    * corpus read memoized by two live sessions): the last holder
+    * releases it. */
+  private def release(v: Any): Unit = {
+    lazy val held = slots.values.asScala.flatMap(_.value).flatMap(datasets).toSeq
+    datasets(v).foreach { ds =>
+      try { if (!held.exists(sharesCache(ds, _))) ds.unpersist() }
+      catch { case NonFatal(_) => () }
+    }
+  }
+
+  private def sharesCache(a: Dataset[_], b: Dataset[_]): Boolean =
+    (a.sparkSession.sharedState eq b.sparkSession.sharedState) &&
+      a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+
+  private def datasets(v: Any): Iterator[Dataset[_]] = v match {
+    case ds: Dataset[_] => Iterator(ds)
+    case xs: Iterable[_] => xs.iterator.flatMap(datasets)
+    case p: Product => p.productIterator.flatMap(datasets)
+    case _ => Iterator.empty
   }
 }

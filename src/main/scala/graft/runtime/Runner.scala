@@ -4,17 +4,14 @@ import scala.annotation.tailrec
 import scala.util.control.NonFatal
 
 /** Orchestration semantics (SURVEY.md §2.9): the reference's Airflow
-  * DAG behaviors re-expressed as a plain in-process runner — stages are
-  * method calls on one SparkSession (O2), with bounded retries with
-  * exponential backoff (O5) and a status aggregation equivalent to the
-  * NONE_FAILED_MIN_ONE_SUCCESS join (O4). Branch-if-empty (O3) lives
-  * with the drains: the start listing in `Flows`, the batch probe in
-  * `FilePipeline`.
+  * DAG behaviors re-expressed in-process — stages are method calls on
+  * one SparkSession (O2), each retried with bounded exponential backoff
+  * (O5). Branch-if-empty (O3) lives with the drains: the start listing
+  * in `Flows`, the batch probe in `FilePipeline`. The DAG's
+  * NONE_FAILED_MIN_ONE_SUCCESS join (O4) has no counterpart: each flow
+  * returns its own `Flows.FlowReport`.
   */
 object Runner {
-
-  final case class StageResult(name: String, ok: Boolean, attempts: Int,
-      error: Option[String] = None)
 
   /** O5: run `f` with up to `attempts` tries, sleeping
     * `backoffMs * 2^(try-1)` between failures (capped by `maxDelayMs`,
@@ -38,26 +35,5 @@ object Runner {
       }
     }
     loop(1, backoffMs)
-  }
-
-  /** Run named stages sequentially, each under retry; a failed stage
-    * doesn't stop later stages (Airflow branches are independent), and
-    * the aggregate succeeds iff no stage failed and ≥1 ran (O4). */
-  def runStages(stages: Seq[(String, () => Unit)], attempts: Int = 3,
-      backoffMs: Long = 100): (Boolean, Seq[StageResult]) = {
-    val results = stages.map { case (name, f) =>
-      var tries = 0
-      try {
-        retry(attempts, backoffMs) { tries += 1; f() }
-        StageResult(name, ok = true, attempts = tries)
-      } catch {
-        case NonFatal(e) =>
-          // getMessage is null for message-less exceptions (bare NPE) —
-          // error.isDefined must imply a usable string
-          StageResult(name, ok = false, attempts = tries,
-            error = Some(Option(e.getMessage).getOrElse(e.toString)))
-      }
-    }
-    (results.nonEmpty && results.forall(_.ok), results)
   }
 }

@@ -28,8 +28,8 @@ object KafkaJsonSink {
 
   /** The kafka wire shape of a payload frame: binary key/value plus the
     * destination topic — exactly the columns the connector serializes.
-    * A file-backed contract test can persist this frame and feed it to
-    * [[graft.sources.KafkaJsonSource.parse]], exercising the full
+    * A file-backed contract test (KafkaContractSpec) persists this
+    * frame and decodes it as a subscriber would, exercising the
     * produce→consume path minus only the broker socket. */
   def wireFrame(payload: DataFrame, topic: String): DataFrame = {
     val key =

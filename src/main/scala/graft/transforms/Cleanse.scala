@@ -108,32 +108,6 @@ object Cleanse {
   def chain(stages: Stage*): Stage =
     stages.foldLeft[Stage](df => df)(_ andThen _)
 
-  /** Column-name canonicalization (SURVEY §7.4 risk 2): the reference's
-    * 69-col schema uses spaces, `%`, `/`, `(`, `)`, dots — parquet
-    * rejects several of these. Canonical names are `[A-Za-z0-9_]` with
-    * deterministic `_N` suffixes on collisions; the returned map
-    * restores the originals for a lossless round trip. */
-  def canonicalizeNames(df: DataFrame): (DataFrame, Map[String, String]) = {
-    // every assigned name is tracked so a suffixed candidate can never
-    // collide with a later literal column (e.g. 'a b','a.b','a_b_1')
-    val used = scala.collection.mutable.Set.empty[String]
-    val renames = df.columns.map { c =>
-      val base = c.replaceAll("[^A-Za-z0-9_]", "_")
-      var cand = base
-      var n = 0
-      while (used.contains(cand)) { n += 1; cand = s"${base}_$n" }
-      used += cand
-      c -> cand
-    }
-    (df.toDF(renames.map(_._2): _*), renames.toMap)
-  }
-
-  /** Inverse of [[canonicalizeNames]]. */
-  def restoreNames(df: DataFrame, mapping: Map[String, String]): DataFrame = {
-    val inverse = mapping.map(_.swap)
-    df.toDF(df.columns.map(c => inverse.getOrElse(c, c)): _*)
-  }
-
   /** The reference's full wide-CSV cleanse chain, in its exact order
     * (mypy/preprocessproduce.py:48-65): parse Time → fill numeric ids →
     * fill names "N/A" → geo null→999 → blanket fill 0 → rename dotted →

@@ -132,31 +132,4 @@ class CleanseSpec extends AnyFunSuite {
     assert(once.as[String].collect().sorted.sameElements(
       twice.as[String].collect().sorted))
   }
-
-  test("canonicalizeNames: weird 69-col names round-trip through parquet") {
-    val dirty = Seq((1.0, 2.0, "x", 3.0)).toDF(
-      "FT_PHYSICAL RESOURCE BLOCKS LOAD DL(%)",
-      "FT_4G/LTE DL TRAFFIC VOLUME (GBYTES)",
-      "FT_UL.Interference",
-      "FT_UL,Interference") // collides with the dotted one post-canon
-    val (canon, mapping) = Cleanse.canonicalizeNames(dirty)
-    assert(canon.columns.forall(_.matches("[A-Za-z0-9_]+")))
-    assert(canon.columns.distinct.length === canon.columns.length)
-    val dir = java.nio.file.Files.createTempDirectory("canon_").toString + "/t"
-    canon.write.parquet(dir) // would throw on invalid field names
-    val restored = Cleanse.restoreNames(spark.read.parquet(dir), mapping)
-    assert(restored.columns.toSet === dirty.columns.toSet)
-    assert(restored.select(dirty.columns.map(c =>
-      org.apache.spark.sql.functions.col(s"`$c`")): _*).count() === 1)
-  }
-
-  test("canonicalizeNames: suffixed candidate can't collide with a later literal column") {
-    // 'a b' -> a_b, 'a.b' -> a_b_1, literal 'a_b_1' must NOT duplicate it
-    val df = Seq((1, 2, 3)).toDF("a b", "a.b", "a_b_1")
-    val (canon, mapping) = Cleanse.canonicalizeNames(df)
-    assert(canon.columns.distinct.length === canon.columns.length)
-    assert(mapping.values.toSet.size === 3) // invertible
-    val restored = Cleanse.restoreNames(canon, mapping)
-    assert(restored.columns.toSet === df.columns.toSet)
-  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -8,6 +9,7 @@ import scala.concurrent.duration._
 
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +28,11 @@ class FrameCacheSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4)
 
   private def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+
+  /** Whether a query over `df` planned now reads an in-memory cache. */
+  private def planned(df: DataFrame): Boolean =
+    df.filter(col("v") >= 0).queryExecution.optimizedPlan
+      .collectFirst { case r: InMemoryRelation => r }.isDefined
 
   /** Runs `get` from 8 threads released together; returns builds run. */
   private def race(get: (=> String) => String): Int = {
@@ -74,8 +81,8 @@ class FrameCacheSpec extends AnyFunSuite {
     val mine = FrameCache.get(mineS, "spec-evict", "dirA")(
       mineS.range(10).toDF("v").cache())
     // different plan than `mine`: sessions of one SparkContext share a
-    // CacheManager, and identical plans dedupe to ONE cache entry —
-    // unpersisting one handle would (correctly) release both
+    // CacheManager, and identical plans dedupe to ONE cache entry, which
+    // eviction keeps until its last holder goes (the shared-plan case)
     val theirs = FrameCache.get(otherS, "spec-evict", "dirA")(
       otherS.range(20).toDF("v").cache())
     mine.count(); theirs.count() // materialize both caches
@@ -115,6 +122,26 @@ class FrameCacheSpec extends AnyFunSuite {
       "retired session's standing frames still pinned after close")
     assert(cached(s1), "close bled into another session's entries")
     assert(GraftSession.close(surviving) == 1)
+  }
+
+  test("closing one session keeps the cache behind another session's identical entry") {
+    val p = Files.createTempDirectory("spec_shared_plan_").toString + "/t"
+    spark.range(30).toDF("v").write.parquet(p)
+    val a = spark.newSession()
+    val b = spark.newSession()
+    // two live memos of the same read: one CacheManager entry behind both
+    val fa = FrameCache.get(a, "spec-shared-plan", p)(a.read.parquet(p).cache())
+    val fb = FrameCache.get(b, "spec-shared-plan", p)(b.read.parquet(p).cache())
+    assert(fb.count() == 30 && planned(fa) && planned(fb))
+
+    assert(GraftSession.close(a) == 1)
+    assert(cached(fb) && planned(fb),
+      "closing session a uncached session b's live entry")
+    assert(FrameCache.peek[DataFrame](b, "spec-shared-plan", p).isDefined)
+
+    assert(GraftSession.close(b) == 1)
+    assert(!cached(fa) && !cached(fb), "the last holder's close left the frame cached")
+    assert(!planned(b.read.parquet(p)))
   }
 
   test("a build may call get for another key: no deadlock, no recursive update") {

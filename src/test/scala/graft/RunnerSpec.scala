@@ -16,20 +16,6 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
-  test("runStages: failures isolated, aggregate = none-failed-min-one-success") {
-    var log = Vector.empty[String]
-    val (ok, rs) = Runner.runStages(Seq(
-      "a" -> (() => log :+= "a"),
-      "b" -> (() => sys.error("boom")),
-      "c" -> (() => log :+= "c")), attempts = 2, backoffMs = 1)
-    assert(!ok)
-    assert(log === Vector("a", "c"))          // c ran despite b failing
-    assert(rs.map(_.ok) === Seq(true, false, true))
-    assert(rs(1).attempts === 2)
-    val (ok2, _) = Runner.runStages(Seq("a" -> (() => ())))
-    assert(ok2)
-  }
-
   test("retry: backoff cap bounds the carried delay (no Long overflow)") {
     // pre-fix the delay doubled unboundedly: after ~57 failures it went
     // negative and Thread.sleep threw IllegalArgumentException, masking
@@ -38,16 +24,6 @@ class RunnerSpec extends AnyFunSuite {
       Runner.retry(60, backoffMs = 100, maxDelayMs = 1) { sys.error("always") }
     }
     assert(e.getMessage === "always")
-  }
-
-  test("runStages: message-less exception still yields a usable error string") {
-    // bare NPE has getMessage == null; error.isDefined must imply a
-    // non-empty string (pre-r11 code stored Some(null))
-    val (ok, rs) = Runner.runStages(
-      Seq("npe" -> (() => throw new NullPointerException())),
-      attempts = 1, backoffMs = 1)
-    assert(!ok && !rs.head.ok)
-    assert(rs.head.error.exists(e => e != null && e.contains("NullPointerException")))
   }
 
   test("cluster sizing: shuffle partitions derive from topology") {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.model.Schemas
-import graft.sources.KafkaJsonSource
 import graft.streaming.{FilePipeline, FilePipelineConfig}
 import graft.transforms.Cleanse
 import org.apache.spark.sql.functions._
@@ -18,44 +17,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   // session is shared across suites in one forked JVM (getOrCreate) —
   // do NOT stop it here or concurrently-running suites lose their session
   override def afterAll(): Unit = ()
-
-  test("KafkaJsonSource.parse: wire shape → typed rows, schema-on-read projection") {
-    val schema = StructType(Seq(
-      StructField("kpiName", StringType),
-      StructField("kpiValue", StringType)))
-    val wire = Seq(
-      ("xmlt_fast", "k1".getBytes, """{"kpiName":"A","kpiValue":"9.5","sourceFile":"f1"}""".getBytes),
-      ("csv", null.asInstanceOf[Array[Byte]], """{"kpiName":"B","kpiValue":"NIL"}""".getBytes)
-    ).toDF("topic", "key", "value")
-    val rows = KafkaJsonSource.parse(wire, schema).orderBy("topic").collect()
-    assert(rows.map(_.getString(0)).toSeq === Seq("csv", "xmlt_fast"))
-    assert(rows(1).getString(1) === "k1")
-    assert(rows(1).getString(2) === "A")
-    // sourceFile silently dropped by the read schema (P3)
-    assert(!rows(0).schema.fieldNames.contains("sourceFile"))
-  }
-
-  test("ParquetSink.writePartitioned: reads prune to the matching partition") {
-    val out = Files.createTempDirectory("psink_").toString + "/t"
-    val df = Seq(("click", 1L), ("view", 2L), ("click", 3L))
-      .toDF("event_type", "v")
-    graft.sinks.ParquetSink.writePartitioned(df, out, Seq("event_type"))
-    val filtered = spark.read.parquet(out).filter(col("event_type") === "click")
-    assert(filtered.collect().map(_.getAs[Long]("v")).sorted.toSeq === Seq(1L, 3L))
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("event_type"))
-    // only the click directory's files are read — assert on the SCAN's
-    // selected partitions. (An earlier fallback disjunct checked the
-    // click DIRECTORY exists, which partitionBy always creates — a
-    // pruning regression could never fail it.)
-    val leaves = filtered.queryExecution.executedPlan.collectLeaves()
-    val scanned: Seq[String] = leaves.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.toPartitionArray.toSeq.map(_.filePath.toString)
-    }.flatten
-    assert(scanned.nonEmpty && scanned.forall(_.contains("event_type=click")),
-      s"scan read non-click partitions: ${scanned.mkString(", ")}")
-  }
 
   test("corrupt JSON records: PERMISSIVE captures, DROPMALFORMED skips") {
     val dir = Files.createTempDirectory("corrupt_").toString

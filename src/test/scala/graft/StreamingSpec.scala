@@ -808,6 +808,66 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(d48.shufflePartitions === 8L)
   }
 
+  // The heaviest stateful operator (watermarked stream-stream LEFT
+  // OUTER interval join, q58's shape) must produce IDENTICAL results on
+  // the local heap state store and the cluster backend
+  // (GraftSession.clusterBuilder: RocksDB + changelog checkpointing) —
+  // the posture split changes where state lives, never what it holds.
+  test("stream-stream left outer join: heap and RocksDB state stores agree") {
+    val in = tmpDir("ssj_in_")
+    // main batch, then a far-future batch that advances both watermarks
+    // past every left row so unmatched purchases drain their null row
+    writeJsonFile(in, "000_main.json",
+      """{"ts":"2025-01-01T10:00:00.000Z","user":1,"kind":"click","v":0.0}
+        |{"ts":"2025-01-01T10:20:00.000Z","user":1,"kind":"purchase","v":5.0}
+        |{"ts":"2025-01-01T10:30:00.000Z","user":2,"kind":"purchase","v":7.0}
+        |{"ts":"2025-01-01T09:00:00.000Z","user":3,"kind":"click","v":0.0}
+        |{"ts":"2025-01-01T12:00:00.000Z","user":3,"kind":"purchase","v":9.0}"""
+        .stripMargin)
+    writeJsonFile(in, "001_sentinel.json",
+      """{"ts":"2025-01-02T00:00:00.000Z","user":-1,"kind":"click","v":0.0}
+        |{"ts":"2025-01-02T00:00:00.000Z","user":-1,"kind":"purchase","v":0.0}"""
+        .stripMargin)
+    new java.io.File(in, "001_sentinel.json")
+      .setLastModified(new java.io.File(in, "000_main.json").lastModified + 60000)
+    val schema = StructType(Seq(
+      StructField("ts", TimestampType), StructField("user", LongType),
+      StructField("kind", StringType), StructField("v", DoubleType)))
+    def drain(rocks: Boolean): Set[(Long, Double, Boolean)] = {
+      val out = tmpDir("ssj_out_")
+      val ss = spark.newSession()
+      if (rocks)
+        GraftSession.RocksDbStateStoreConfigs
+          .foreach { case (k, v) => ss.conf.set(k, v) }
+      def src = ss.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).json(in)
+      val clicks = src.filter(col("kind") === "click")
+        .select(col("user").as("c_user"), col("ts").as("c_ts"))
+        .withWatermark("c_ts", "1 hour")
+      val purchases = src.filter(col("kind") === "purchase")
+        .select(col("user").as("p_user"), col("ts").as("p_ts"),
+          col("v").as("p_v"))
+        .withWatermark("p_ts", "1 hour")
+      val joined = purchases.join(clicks,
+        col("p_user") === col("c_user")
+          && col("c_ts") <= col("p_ts")
+          && col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"),
+        "leftOuter")
+      FilePipeline.drain(joined, tmpDir("ssj_chk_")) { (df, _) =>
+        df.write.mode("append").parquet(s"$out/data")
+      }
+      ss.read.parquet(s"$out/data").filter(col("p_user") >= 0).collect()
+        .map(r => (r.getAs[Long]("p_user"), r.getAs[Double]("p_v"),
+          r.isNullAt(r.fieldIndex("c_user")))).toSet
+    }
+    val heap = drain(rocks = false)
+    val rocks = drain(rocks = true)
+    // expected: user 1 matched (click 20 min before), users 2 and 3
+    // unmatched (no click / click outside the 1 h interval) → null row
+    assert(heap === Set((1L, 5.0, false), (2L, 7.0, true), (3L, 9.0, true)))
+    assert(rocks === heap)
+  }
+
   test("q101 bloom prefilter splits arrivals: misses skip the join, admitted set is exact") {
     val d = "/root/testdata/sf0.001"
     val res = StreamingQueries.queries("q101_stream_bloom_dedup")(spark, d)

@@ -34,7 +34,7 @@ class TextAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Seq(
       ("rich", ("the a of and to in is it " * 10).trim),
       ("poor", ("zz qq xx yy ww vv uu tt " * 10).trim)
-    ).toDF("k", "t").select(col("k"), TextAnalysis.qualityScore(col("t")).as("q"))
+    ).toDF("k", "t").select(col("k"), round(TextAnalysis.qualityScoreRaw(col("t")), 4).as("q"))
     val m = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(m.values.forall(q => q >= 0.0 && q <= 1.0))
     assert(m("rich") > m("poor"))

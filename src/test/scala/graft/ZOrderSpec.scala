@@ -121,8 +121,4 @@ class ZOrderSpec extends AnyFunSuite {
     ZOrderLayout.writeZOrdered(empty, "x", "y", 12, 4, dir)
     assert(spark.read.parquet(dir).count() === 0)
   }
-
-  test("Compaction.partFiles of a missing directory is empty, not an NPE") {
-    assert(graft.sinks.Compaction.partFiles("/nonexistent/graft_dir").isEmpty)
-  }
 }

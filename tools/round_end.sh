@@ -16,7 +16,8 @@
 # (full ScalaTest suite + certify_means + Verify+oracle at sf0.1 +
 # Bench), commit, THEN snapshot.
 #
-# Also prints the non-test src/main LoC for the BASELINE.md round row.
+# Also prints the non-test src/main LoC (total, non-blank and code
+# lines) for the BASELINE.md round row.
 set -u
 root="${1:-$(dirname "$0")/..}"
 cd "$root" || exit 2
@@ -42,8 +43,12 @@ else
 fi
 
 loc=$(find src/main -name '*.scala' -exec cat {} + | wc -l)
+nonblank=$(find src/main -name '*.scala' -exec cat {} + | grep -vc '^[[:space:]]*$')
+# code lines: non-blank lines that do not start with //, * or /*
+code=$(find src/main -name '*.scala' -exec cat {} + | grep -v '^[[:space:]]*$' \
+    | grep -vcE '^[[:space:]]*(//|\*|/\*)')
 tools_loc=$(cat tools/*.py tools/*.sh 2>/dev/null | wc -l)
-echo "== src/main LoC: $loc (tools: $tools_loc)"
+echo "== src/main LoC: $loc, non-blank $nonblank, code $code (tools: $tools_loc)"
 echo "== CHECKLIST (r11 verdict #1 — the round row went stale two rounds running):"
 echo "==   1. update BASELINE.md's round row NOW with: LoC $loc (+net vs last"
 echo "==      round), the FINAL-tree ScalaTest count from the last full run,"
