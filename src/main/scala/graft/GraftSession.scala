@@ -144,10 +144,12 @@ object GraftSession {
 
   /** Retire an engine session: release every session-scoped
     * [[graft.runtime.FrameCache]] entry it built (the LSH pair set, IVF
-    * cells, admission bloom/index, funnel stages, ...) so its pinned
+    * index, admission bloom/index, funnel stages, ...) so its pinned
     * executor memory is actually released. Process-scoped entries
     * (centroid matrices, staged fixture dirs, bucketed table names) are
-    * not the session's and stay. A long-lived process that drops one
+    * not the session's and stay; persisted artifacts stay on disk. (An
+    * entry whose corpus was rewritten is released by the next lookup of
+    * that corpus, not here.) A long-lived process that drops one
     * session (`newSession` clones, notebook rotation) calls this instead
     * of — or before — `SparkSession.stop`; stopping the whole
     * SparkContext also works, but only because the next memo build

@@ -533,7 +533,7 @@ object Dedup {
     // n than the index was built with never legitimately matches — every
     // near-dup would be silently admitted. The build parameter is not in
     // the artifact sidecar (the load never reads it), so the call site
-    // must pin it explicitly, like StandingNearDup's build parameters.
+    // must pin it explicitly, like the standing indexes' build parameters.
     def probe(delta: DataFrame, idCol: String, textCol: String,
         shingleN: Int): DataFrame = {
       val shD = shingleHashFrame(delta, idCol, textCol, shingleN,

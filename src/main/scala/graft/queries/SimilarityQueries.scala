@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryPack, Tables}
 import graft.ext.Similarity
 import graft.runtime.FrameCache
+import graft.sinks.ArtifactStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,7 +76,7 @@ object SimilarityQueries extends QueryPack {
   // built it — a stopped/recreated SparkSession in the same JVM must get
   // a fresh frame, not a stale handle
   private def prepped(s: SparkSession, d: String, planes: Int = 0): DataFrame =
-    FrameCache.get(s, "prepped-embeddings", (d, planes))({
+    FrameCache.get(s, s"prepped-embeddings-$planes", d)({
       val base = Similarity.withNormalized(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
           .repartition(s.sparkContext.defaultParallelism),
@@ -87,25 +88,16 @@ object SimilarityQueries extends QueryPack {
 
   /** Trained IVF centroids, memoized per data dir — training is
     * deterministic, so q50/q57/q59 (and repeated bench runs) share one
-    * training pass instead of re-running Lloyd each time. When a
-    * persisted IVF artifact exists for the session, the FIRST centroid
-    * consumer routes through [[corpusCells]] so the artifact's
-    * build-time matrix seeds this memo — without this, an IVF query
-    * that touches centroids before cells (q69/q73/q79) would re-run
-    * Lloyd training in a restarted process even though the artifact
-    * carries the matrix. */
-  private val Centroids = "ivf-centroids"
-  private def trainCentroids(s: SparkSession, d: String): Seq[Array[Double]] =
-    FrameCache.get(Centroids, d)(Similarity.trainKmeans(
-      prepped(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters, Dims))
+    * training pass instead of re-running Lloyd each time. This entry is
+    * the matrix's one owner: with a persisted IVF index it loads the
+    * index's matrix, so a consumer that reaches centroids before cells
+    * (q69/q73/q79) never re-trains in a restarted process, and the cells
+    * are only loaded when built against this matrix. */
   private def centroids(s: SparkSession, d: String): Seq[Array[Double]] =
-    FrameCache.peek[Seq[Array[Double]]](Centroids, d).getOrElse {
-      import graft.sinks.ArtifactStore
-      if (ArtifactStore.configuredDir(s, "ivf-index", d)
-          .exists(ArtifactStore.exists))
-        corpusCells(s, d) // load (or rebuild) seeds the memo
-      trainCentroids(s, d)
-    }
+    FrameCache.get("ivf-centroids", d,
+        ArtifactStore.ivfCentroidsCodec(s, Tables.embeddings(s, d)))(
+      Similarity.trainKmeans(
+        prepped(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters, Dims))
 
   /** Trained PQ codebooks, memoized per data dir (plain doubles — not
     * session-bound, same lifecycle as [[centroids]]). */
@@ -214,42 +206,13 @@ object SimilarityQueries extends QueryPack {
     * q111 streaming search (at cluster scale: the cell-partitioned
     * index table q73 materializes). */
   private def corpusCells(s: SparkSession, d: String): DataFrame =
-    FrameCache.get(s, "ivf-cells", d)({
-      import graft.sinks.ArtifactStore
-      // fingerprint THIS session's corpus once (one cheap aggregate);
-      // it gates the load AND stamps the save — the same hoist the two
-      // sibling standing consumers use, so the gate and the stamp can
-      // never scan twice or drift apart on the rebuild path
-      lazy val snap = ivfSnapshot(s, d)
-      ArtifactStore.standing(s, "ivf-index", d)({
-        // trainCentroids, NOT centroids: the public accessor consults
-        // the artifact dir and would recurse back into this build
-        val cents = trainCentroids(s, d)
-        val cells = prepped(s, d)
-          .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-          .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
-          .select(col("vec_id"), col("ne"), explode(col("cells")).as("cell"))
-          .cache()
-        (cells, cents)
-      })({ case ((cells, cents), dir) =>
-        ArtifactStore.saveIvfIndex(cells, cents, dir, snap)
-      })({ dir =>
-        // restart path: load cells AND centroids together (the probe
-        // must assign against the exact build-time matrix), seeding
-        // the centroid memo so every IVF consumer shares them
-        val (cells, cents) = ArtifactStore.loadIvfIndex(s, dir, snap)
-        FrameCache.evict(Centroids, d)
-        FrameCache.get(Centroids, d)(cents)
-        (cells, cents)
-      })._1
-    })
-
-  /** Fingerprint of the raw embedding corpus the IVF artifacts index. */
-  private def ivfSnapshot(s: SparkSession, d: String)
-      : graft.sinks.ArtifactStore.CorpusSnapshot =
-    graft.sinks.ArtifactStore.snapshot(
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      Seq("vec_id", "embedding"))
+    FrameCache.get(s, "ivf-index", d,
+        ArtifactStore.ivfCodec(s, Tables.embeddings(s, d), centroids(s, d)))(
+      prepped(s, d)
+        .withColumn("dots", Similarity.centroidDots(col("ne"), centroids(s, d)))
+        .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
+        .select(col("vec_id"), col("ne"), explode(col("cells")).as("cell"))
+        .cache())
 
   private def buildIvfCandidates(s: SparkSession, d: String): DataFrame =
     ivfCandidatesFrom(corpusCells(s, d), centroids(s, d),
@@ -743,9 +706,6 @@ object SimilarityQueries extends QueryPack {
     * 2×64-double payloads (PlanPostureSpec pins this). */
   private[graft] def annSearchBatch(s: SparkSession, d: String)
       : DataFrame => DataFrame = {
-    // cells BEFORE centroids: on the artifact restart path the index
-    // load seeds the centroid memo — the reverse order would re-train
-    // the matrix the artifact already carries
     val idx = corpusCells(s, d)
     val cents = centroids(s, d)
     batch => {

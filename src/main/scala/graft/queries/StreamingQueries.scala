@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryPack, Tables}
 import graft.runtime.FrameCache
+import graft.sinks.ArtifactStore
 import graft.streaming.{FilePipeline, StateMetrics}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,7 +30,7 @@ object StreamingQueries extends QueryPack {
     * checkpoint would make the second run a no-op. (Only on-disk paths —
     * safe across session restarts.) */
   private def fixtureDir(kind: String, d: String)(build: String => Unit): String =
-    FrameCache.get("stream-fixture", (kind, d)) {
+    FrameCache.get(s"stream-fixture-$kind", d) {
       val tmp = Files.createTempDirectory(s"graft_${kind}_").toString
       build(tmp)
       tmp
@@ -161,47 +162,30 @@ object StreamingQueries extends QueryPack {
     * and keeps them standing across micro-batch drains — rebuilding
     * (and unpersisting) per invocation, as these queries did before r5,
     * re-pays the corpus fold on every run. FrameCache eviction is the
-    * drop-the-snapshot lifecycle. */
-  private def corpusBloom(s: SparkSession, d: String): (DataFrame, Array[Byte]) =
-    FrameCache.get(s, "q101-corpus-bloom", d) {
-      import graft.sinks.ArtifactStore
-      val corpusKeys = Tables.documents(s, d)
-        .filter(col("doc_id") % 7 =!= 3)
-        .select(md5(col("text").cast("binary")).as("ck"))
-        .distinct()
-      // fingerprint THIS session's corpus once (one cheap aggregate);
-      // it gates the load AND stamps the save
-      lazy val snap = ArtifactStore.snapshot(corpusKeys, Seq("ck"))
-      // Size the bloom from the CORPUS, not a constant: a fixed
-      // expectedItems saturates once the corpus outgrows it (at 10⁹+
-      // keys the prefilter silently degrades to a pass-everything
-      // no-op — correctness survives via the exact anti join, the
-      // perf gate doesn't). `snap.rows` is the exact distinct-key
-      // count; the floor only guards degenerate tiny corpora against
-      // a zero-width filter.
-      lazy val expected = math.max(snap.rows, 1024L)
-      // load/build/stale-rebuild resolution is ArtifactStore.standing;
-      // a load skips the corpus fold AND the bloom treeAggregate
-      ArtifactStore.standing(s, "q101-bloom", d)({
-        val keys = corpusKeys.cache()
-        // forcing `expected` here (after cache()) materializes `keys`'
-        // cache, which the bloom's treeAggregate then reuses
-        val bloom = graft.ext.BloomPrune.buildBloom(
-          keys, col("ck"), expectedItems = expected)
-        (keys, bloom)
-      })((v, dir) => ArtifactStore.saveBloom(v._2, dir, snap, expected,
-        keys = Some(v._1)))(
-        dir => ArtifactStore.loadBloomKeys(s, dir, snap))
+    * drop-the-snapshot lifecycle; a persisted artifact skips the corpus
+    * fold AND the bloom treeAggregate. */
+  private def corpusBloom(s: SparkSession, d: String): (DataFrame, Array[Byte]) = {
+    def corpusKeys = Tables.documents(s, d).filter(col("doc_id") % 7 =!= 3)
+      .select(md5(col("text").cast("binary")).as("ck")).distinct()
+    val codec = ArtifactStore.bloomCodec(s, corpusKeys)
+    FrameCache.get(s, "q101-bloom", d, codec) {
+      val keys = corpusKeys.cache()
+      // the fingerprint's aggregate (taken here, after cache()) is the
+      // job that materializes `keys`, which the bloom's treeAggregate
+      // then reuses; its row count is the exact distinct-key count
+      (keys, graft.ext.BloomPrune.buildBloom(keys, col("ck"),
+        expectedItems = ArtifactStore.bloomItems(codec.snapshot)))
     }
+  }
 
   private def standingNearDupIndex(s: SparkSession, d: String)
-      : graft.ext.Dedup.NearDupIndex =
-    StandingNearDup.index(s, d, "q105-neardup",
-        shingleN = 3, k = DedupQueries.K, bands = DedupQueries.Bands,
-        threshold = 0.8) {
-      Tables.documents(s, d).filter(col("doc_id") % 9 =!= 4)
-        .select(col("doc_id"), col("text"))
-    }
+      : graft.ext.Dedup.NearDupIndex = {
+    def corpus = Tables.documents(s, d).filter(col("doc_id") % 9 =!= 4)
+      .select(col("doc_id"), col("text"))
+    FrameCache.get(s, "q105-neardup", d, ArtifactStore.nearDupCodec(s, corpus))(
+      graft.ext.Dedup.buildNearDupIndex(corpus, "doc_id", "text", shingleN = 3,
+        k = DedupQueries.K, bands = DedupQueries.Bands, threshold = 0.8))
+  }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

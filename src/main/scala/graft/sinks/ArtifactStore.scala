@@ -9,20 +9,19 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.ext.Dedup
 
-/** Persisted index artifacts — the build-once / load-anywhere seam for
-  * the engine's standing structures.
-  *
-  * The in-memory memo caches (the LSH pair frame, the IVF inverted
-  * index, the q101 corpus bloom, the q105 [[Dedup.NearDupIndex]]) are
-  * the fast path WITHIN a session; at cluster scale the same artifacts
-  * are tables/blobs persisted next to the corpus snapshot so a
-  * restarted job (or a different job entirely) loads them instead of
-  * re-deriving: an index over 100 TB of documents is hours of work, the
-  * load is a metadata open. Each artifact is parquet (frames) or a raw
-  * blob (sketch binaries) plus a `meta.properties` sidecar pinning the
-  * build parameters, so a probe against a loaded index runs with
-  * EXACTLY the build-time configuration — mismatched parameters are the
-  * classic way a restored index silently returns different candidates.
+/** Persisted index artifacts: the on-disk half of the one memo tier.
+  * [[graft.runtime.FrameCache.get]] resolves memory, then an artifact
+  * here, then a build; this object holds the [[Codec]]s that say how
+  * each standing structure (the q101 corpus bloom, the q80/q105
+  * [[Dedup.NearDupIndex]], the IVF inverted index) is saved and loaded.
+  * At cluster scale a restarted job (or a different job entirely) loads
+  * these instead of re-deriving: an index over 100 TB of documents is
+  * hours of work, the load is a metadata open. Each artifact is parquet
+  * (frames) or a raw blob (sketch binaries) plus a `meta.properties`
+  * sidecar pinning the build parameters, so a probe against a loaded
+  * index runs with EXACTLY the build-time configuration — mismatched
+  * parameters are the classic way a restored index silently returns
+  * different candidates.
   *
   * Snapshot identity: every sidecar also pins a [[CorpusSnapshot]]
   * fingerprint of the corpus the artifact was built FROM, and every
@@ -47,8 +46,6 @@ import graft.ext.Dedup
   * cluster FS behaves identically to a local dir.
   */
 object ArtifactStore {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   // ---- corpus snapshot fingerprint ----------------------------------
 
@@ -89,8 +86,8 @@ object ArtifactStore {
     * is then swapped in with two directory renames (atomic on local and
     * HDFS-like filesystems). A concurrent reader never observes a
     * half-written artifact at `dir` — it sees the prior artifact, no
-    * artifact (the instant between the renames, which the query seams'
-    * rebuild fallback already tolerates), or the complete new one.
+    * artifact (the instant between the renames, which the memo tier's
+    * build fallback already tolerates), or the complete new one.
     *
     * Writer-vs-writer: each save stages under a UNIQUE suffix, so two
     * concurrent builds of the same artifact can no longer interleave
@@ -202,8 +199,8 @@ object ArtifactStore {
     "bloom" -> "a bloom artifact", "ivf" -> "an IVF index")
   // The parameter keys each kind's load reads through a BARE m("...")
   // lookup. A sidecar missing one is a DAMAGED artifact, and damage
-  // must surface as IllegalArgumentException — the type the standing
-  // seam's rebuild fallback catches — not wedge every restart on the
+  // must surface as IllegalArgumentException — the type the memo
+  // tier's rebuild fallback catches — not wedge every restart on the
   // NoSuchElementException a bare m("k") would throw. Keys a load only
   // consults via Option (bloom's hasKeys) or never reads (dims,
   // expectedItems — write-side observability) are NOT required: an
@@ -233,7 +230,7 @@ object ArtifactStore {
   }
 
   /** True when `dir` holds a persisted artifact (the build-if-absent /
-    * load-if-present branch of the restart seam). The sidecar is the
+    * load-if-present branch of the memo tier). The sidecar is the
     * commit marker: a crashed or in-flight save has no sidecar at `dir`
     * (it stages everything in a sibling), so this never says yes to a
     * partial artifact. */
@@ -243,9 +240,8 @@ object ArtifactStore {
   }
 
   /** Per-artifact directory under the session's configured root
-    * (`spark.graft.artifactDir`), or None when the session opts out —
-    * the optional restart seam the standing-structure builders consult
-    * (build-if-absent, else load). */
+    * (`spark.graft.artifactDir`), or None when the session opts out of
+    * the persisted tier. */
   def configuredDir(s: SparkSession, kind: String,
       sfDir: String): Option[String] =
     s.conf.getOption("spark.graft.artifactDir").map { root =>
@@ -257,75 +253,63 @@ object ArtifactStore {
       s"$root/$kind/${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}_$hash"
     }
 
-  /** Last build-or-load decision per artifact kind — observability for
-    * the restart-path specs (which assert "loaded", not rebuilt). */
+  /** Last build-or-load decision per artifact kind (built, loaded or
+    * rebuilt), written only by the memo tier's persisted resolution
+    * ([[graft.runtime.FrameCache]]); a memo hit records nothing. */
   val lastOrigin = scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** True when `e`'s cause chain carries a JVM-fatal throwable (OOM,
-    * interrupt…) that Spark wrapped in a job failure — resource
-    * pressure, not artifact damage, so [[standing]] must not absorb it
-    * into a rebuild. */
-  private def fatalCause(e: Throwable): Boolean = {
-    // exhaustive, cycle-safe walk (a fixed depth cap would misclassify a
-    // deeper-wrapped fatal as damage); identity set guards cause cycles
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
-    Iterator.iterate(e)(_.getCause)
-      .takeWhile(t => t != null && seen.add(t))
-      .exists(t => !scala.util.control.NonFatal(t))
+  // ---- codecs: how a memo entry persists ----------------------------
+
+  /** How a [[graft.runtime.FrameCache]] entry persists as an artifact
+    * under `s`'s `spark.graft.artifactDir`. `fingerprint` is the
+    * [[CorpusSnapshot]] of the corpus the artifact indexes: it gates
+    * every load and stamps every save, and is taken at most once per
+    * codec. A codec without `save` reads an artifact another entry
+    * writes, named by `artifact` (the memo name otherwise). */
+  final class Codec[V](val s: SparkSession, fingerprint: => CorpusSnapshot,
+      val load: (String, CorpusSnapshot) => V,
+      val save: Option[(V, String, CorpusSnapshot) => Unit],
+      val artifact: Option[String] = None) {
+    lazy val snapshot: CorpusSnapshot = fingerprint
   }
 
-  // ---- shared standing-artifact resolution --------------------------
+  /** A near-dup index over `corpus` (doc_id, text). */
+  def nearDupCodec(s: SparkSession, corpus: => DataFrame): Codec[Dedup.NearDupIndex] =
+    new Codec(s, snapshot(corpus, Seq("doc_id", "text")), loadNearDupIndex(s, _, _),
+      Some(saveNearDupIndex(_, _, _)))
 
-  /** The load-else-build resolution every standing-artifact consumer
-    * shares (the q105/q80 near-dup index via StandingNearDup, q101's
-    * corpus bloom): when the session configures an artifact dir and one
-    * exists there, try `load`; a STALE or incompatible artifact (rolled
-    * corpus snapshot, missing member) must not wedge the pipeline —
-    * warn, rebuild, overwrite. Otherwise `build` (and `save` when a dir
-    * is configured). Records [[lastOrigin]] as loaded/rebuilt/built,
-    * the observability the restart-path specs assert. One
-    * implementation, so the stale-path and bookkeeping logic cannot
-    * drift between consumers (before r9 each seam hand-rolled its own
-    * twin of this block). */
-  def standing[T](s: SparkSession, name: String, sfDir: String)(
-      build: => T)(save: (T, String) => Unit)(load: String => T): T = {
-    val dirOpt = configuredDir(s, name, sfDir)
-    def buildAndSave(origin: String): T = {
-      val v = build
-      dirOpt.foreach { dir => save(v, dir); lastOrigin(name) = origin }
-      v
-    }
-    dirOpt match {
-      case Some(dir) if exists(dir) =>
-        try { val r = load(dir); lastOrigin(name) = "loaded"; r }
-        catch {
-          // Recoverable = "this artifact is stale, damaged, or
-          // unreadable": the kind/snapshot/parameter gates
-          // (IllegalArgumentException — NumberFormatException is a
-          // subtype), missing or truncated members (IOException covers
-          // FileNotFound and the EOF a cut-short blob throws), and
-          // Spark-level read failures on damaged parquet
-          // (AnalysisException, SparkException). Spark WRAPS executor
-          // fatals, so the cause chain is walked: a SparkException
-          // carrying an OOM/interrupt is resource pressure, not
-          // artifact damage, and propagates. The residual bias is
-          // availability-over-efficiency: a transient infra failure
-          // during load takes the rebuild path (wasteful, logged with
-          // the full cause) — and a corpus that is itself unreadable
-          // makes the rebuild fail loudly on the same error, so the
-          // conflation can waste work but never silently mis-serve.
-          case e @ (_: IllegalArgumentException | _: java.io.IOException
-              | _: org.apache.spark.SparkException
-              | _: org.apache.spark.sql.AnalysisException)
-              if !fatalCause(e) =>
-            log.warn(s"stale/incompatible $name artifact at $dir " +
-              s"($e) — rebuilding for the current snapshot")
-            buildAndSave("rebuilt")
-        }
-      case _ => buildAndSave("built")
-    }
-  }
+  /** Expected-item count of a bloom over the corpus `snap` fingerprints:
+    * its exact distinct-key count, floored so a degenerate corpus never
+    * gets a zero-width filter (a fixed count saturates once the corpus
+    * outgrows it, degrading the prefilter to a pass-everything no-op). */
+  def bloomItems(snap: CorpusSnapshot): Long = math.max(snap.rows, 1024L)
+
+  /** The exact-admission artifact over the distinct content keys `keys`
+    * (ck): the key frame and its bloom blob. */
+  def bloomCodec(s: SparkSession, keys: => DataFrame): Codec[(DataFrame, Array[Byte])] =
+    new Codec(s, snapshot(keys, Seq("ck")), loadBloomKeys(s, _, _),
+      Some((v, dir, snap) => saveBloom(v._2, dir, snap, bloomItems(snap), Some(v._1))))
+
+  /** The IVF inverted index over `embeddings`, assigned against `cents`.
+    * A persisted index built against another matrix (trained on another
+    * partitioning) is stale: a probe must assign against the matrix its
+    * cells were built with. */
+  def ivfCodec(s: SparkSession, embeddings: => DataFrame,
+      cents: => Seq[Array[Double]]): Codec[DataFrame] =
+    new Codec(s, snapshot(embeddings, Seq("vec_id", "embedding")), { (dir, snap) =>
+      val (cells, saved) = loadIvfIndex(s, dir, snap)
+      unpersistOnFailure(cells) {
+        require(saved.map(_.toSeq) == cents.map(_.toSeq),
+          s"$dir was built against another centroid matrix — rebuild it for this one")
+        cells
+      }
+    }, Some(saveIvfIndex(_, cents, _, _)))
+
+  /** The centroid matrix inside the IVF index over `embeddings`, which
+    * [[ivfCodec]] writes. */
+  def ivfCentroidsCodec(s: SparkSession, embeddings: => DataFrame): Codec[Seq[Array[Double]]] =
+    new Codec(s, snapshot(embeddings, Seq("vec_id", "embedding")),
+      loadIvfCentroids(s, _, _), None, Some("ivf-index"))
 
   // ---- MinHash-LSH near-dup index (q105's standing corpus index) ----
 
@@ -361,7 +345,7 @@ object ArtifactStore {
   /** Materialize loaded member frames INSIDE the load call. Parquet is
     * read lazily (only footers at planning), so data-page damage in a
     * present-but-corrupt artifact would otherwise first throw at the
-    * initial probe ACTION — outside the standing seam's rebuild catch,
+    * initial probe ACTION — outside the memo tier's rebuild catch,
     * wedging every restart on damage the fallback exists to absorb.
     * Costs nothing extra: every loaded member is cached and serves
     * full-scan probes, so this only moves the one scan earlier. */
@@ -374,8 +358,8 @@ object ArtifactStore {
   private def unpersistOnFailure[T](cached: DataFrame*)(body: => T): T =
     try body catch {
       case e: Throwable =>
-        // cleanup must never REPLACE the load failure: the standing
-        // seam classifies e (fatal vs damage), and an unpersist throw
+        // cleanup must never REPLACE the load failure: the memo tier
+        // classifies e (fatal vs damage), and an unpersist throw
         // on a distressed context would invert that classification
         cached.foreach { f =>
           try f.unpersist(false)
@@ -438,7 +422,7 @@ object ArtifactStore {
     * blob still "reads fine" ([[readBlob]] just returns the shorter
     * file), and would otherwise first throw inside
     * BloomFilterMightContain at the first probe action — outside the
-    * standing seam's rebuild catch. readFrom surfaces damage as
+    * memo tier's rebuild catch. readFrom surfaces damage as
     * IOException, the recoverable type; cost is one ~MB deserialize at
     * load. ([[loadBloom]] stays a raw-bytes accessor — the atomicity
     * specs round-trip arbitrary blobs through it.) */
@@ -480,16 +464,23 @@ object ArtifactStore {
     * the frame every probe joins against). */
   def loadIvfIndex(s: SparkSession, dir: String, expect: CorpusSnapshot)
       : (DataFrame, Seq[Array[Double]]) = {
-    val m = checkMeta(dir, "ivf", expect)
+    val cents = loadIvfCentroids(s, dir, expect)
     val cells = s.read.parquet(s"$dir/cells").cache()
     unpersistOnFailure(cells) {
       forceLoaded(cells)
-      val cents = s.read.parquet(s"$dir/centroids")
-        .orderBy(col("cell_idx")).collect()
-        .map(r => r.getSeq[Double](r.fieldIndex("vals")).toArray).toSeq
-      require(cents.size == m("k").toInt,
-        s"centroid count ${cents.size} != saved k ${m("k")}")
       (cells, cents)
     }
+  }
+
+  /** Load only the centroid matrix of a persisted IVF index. */
+  def loadIvfCentroids(s: SparkSession, dir: String, expect: CorpusSnapshot)
+      : Seq[Array[Double]] = {
+    val m = checkMeta(dir, "ivf", expect)
+    val cents = s.read.parquet(s"$dir/centroids")
+      .orderBy(col("cell_idx")).collect()
+      .map(r => r.getSeq[Double](r.fieldIndex("vals")).toArray).toSeq
+    require(cents.size == m("k").toInt,
+      s"centroid count ${cents.size} != saved k ${m("k")}")
+    cents
   }
 }

@@ -35,8 +35,8 @@ object BucketedTables {
         FrameCache.evict(Memo, d)
     }
     FrameCache.get(Memo, d) {
-      // table tag = sanitized dir + hash of the raw path, matching
-      // ArtifactStore.configuredDir's collision posture: hashCode alone
+      // table tag = sanitized dir + hash of the raw path, matching the
+      // artifact dirs' collision posture: hashCode alone
       // lets two dirs with colliding hashes silently share table names
       // (ensure(d2) would recreate them over d2's data while d1's cache
       // entry still validates and reads the wrong rows)

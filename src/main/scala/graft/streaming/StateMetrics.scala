@@ -36,13 +36,6 @@ object StateMetrics {
     * one type occurs at several positions the label gets a `#idx`
     * suffix so the entries stay tellable-apart. */
   def collect(q: StreamingQuery): Seq[StoreMetrics] = {
-    // Diagnostic seam (guide §1: measure first): dump the raw per-batch
-    // progress JSON (durationMs breakdown — addBatch / walCommit /
-    // commitOffsets / latestOffset / queryPlanning) so drain latency can
-    // be attributed to compute vs checkpoint-log vs state-commit without
-    // touching any query. Off unless explicitly requested by env.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
-      q.recentProgress.foreach(p => println(s"[progress] ${p.json}"))
     val byInstance = q.recentProgress.toSeq
       .flatMap(p => p.stateOperators.toSeq.zipWithIndex)
       .groupBy { case (so, idx) => (idx, so.operatorName) }

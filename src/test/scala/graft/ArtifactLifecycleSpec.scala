@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,7 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.ext.{BloomPrune, Dedup, Similarity}
 import graft.queries.SimilarityQueries
+import graft.runtime.FrameCache
 import graft.sinks.ArtifactStore
 import graft.sinks.ArtifactStore.CorpusSnapshot
 
@@ -646,9 +649,8 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q80 restart path: second session loads the persisted corpus index") {
-    // q80 gained the artifact seam when it moved onto the shared
-    // StandingNearDup helper (r8) — pin the batch-side round trip like
-    // the streaming gate's
+    // q80 shares the standing near-dup index shape with q105 — pin the
+    // batch-side round trip like the streaming gate's
     restartRoundTrip("q80_incremental_dedup", "q80-neardup")
   }
 
@@ -656,36 +658,49 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     restartRoundTrip("q111_stream_ann_search", "ivf-index")
   }
 
+  /** A fresh session persisting under `root`: a restarted process in
+    * miniature, whose session-scoped memo keys are all cold. */
+  private def freshSession(root: String): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.artifactDir", root)
+    s
+  }
+
   test("ArtifactStore.standing: built / saved+loaded / stale-rebuilt, directly") {
-    // Unit-level pin of the shared resolution seam itself (r9) — the
+    // Unit-level pin of the memo tier's persisted resolution — the
     // consumer specs above exercise it end-to-end, but this pins the
     // origin bookkeeping and build counts independent of any consumer.
+    // A same-session re-resolve is a memo hit, so each step that must
+    // reach the artifact dir runs in a fresh session.
     val root = Files.createTempDirectory("graft_standing_").toString
     var builds = 0
     def resolve(s: org.apache.spark.sql.SparkSession,
         snap: CorpusSnapshot): Array[Byte] =
-      ArtifactStore.standing(s, "unit-standing", sf)(
-        { builds += 1; Array[Byte](1, 2, 3) })(
-        (v, dir) => ArtifactStore.saveBloom(v, dir, snap))(
-        dir => ArtifactStore.loadBloom(dir, snap))
+      FrameCache.get(s, "unit-standing", sf, new ArtifactStore.Codec[Array[Byte]](s, snap,
+          (dir, sn) => ArtifactStore.loadBloom(dir, sn),
+          Some((v, dir, sn) => ArtifactStore.saveBloom(v, dir, sn))))(
+        { builds += 1; Array[Byte](1, 2, 3) })
     val snapA = CorpusSnapshot(3, 42L)
 
-    // no artifactDir on the session → build every time, never persist
+    // no artifactDir on the session → build, never persist
     // (lastOrigin stays unset: it's persistence-seam observability)
     val s0 = spark.newSession()
     assert(resolve(s0, snapA).toSeq == Seq[Byte](1, 2, 3))
     assert(builds == 1 &&
       !ArtifactStore.lastOrigin.contains("unit-standing"))
     resolve(s0, snapA)
-    assert(builds == 2, "dir-less resolution must not cache or persist")
+    assert(builds == 1, "a same-session re-resolve is a memo hit")
+    val s0b = spark.newSession()
+    resolve(s0b, snapA)
+    assert(builds == 2, "dir-less resolution must not persist")
 
-    // dir configured: first resolve builds+saves, second LOADS
-    val s1 = spark.newSession()
-    s1.conf.set("spark.graft.artifactDir", root)
+    // dir configured: first resolve builds+saves, a fresh session LOADS
+    val s1 = freshSession(root)
     resolve(s1, snapA)
     assert(builds == 3 &&
       ArtifactStore.lastOrigin("unit-standing") == "built")
-    assert(resolve(s1, snapA).toSeq == Seq[Byte](1, 2, 3))
+    val s2 = freshSession(root)
+    assert(resolve(s2, snapA).toSeq == Seq[Byte](1, 2, 3))
     assert(builds == 3 &&
       ArtifactStore.lastOrigin("unit-standing") == "loaded")
 
@@ -693,12 +708,15 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // overwritten; the overwritten artifact then loads under the new
     // snapshot
     val snapB = CorpusSnapshot(4, 43L)
-    resolve(s1, snapB)
+    val s3 = freshSession(root)
+    resolve(s3, snapB)
     assert(builds == 4 &&
       ArtifactStore.lastOrigin("unit-standing") == "rebuilt")
-    resolve(s1, snapB)
+    val s4 = freshSession(root)
+    resolve(s4, snapB)
     assert(builds == 4 &&
       ArtifactStore.lastOrigin("unit-standing") == "loaded")
+    Seq(s0, s0b, s1, s2, s3, s4).foreach(GraftSession.close)
   }
 
   test("standing propagates Spark-wrapped fatals instead of rebuilding") {
@@ -706,15 +724,19 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // WRAPPED in SparkException — resource pressure, not artifact
     // damage. Absorbing it into a rebuild would silently discard an
     // intact index (hours at corpus scale) and likely hit the same
-    // pressure again; the cause chain decides.
+    // pressure again; the cause chain decides. Each resolve runs in a
+    // fresh session, so it misses memory and reaches the artifact.
     val root = Files.createTempDirectory("graft_standing_fatal_").toString
-    val s1 = spark.newSession()
-    s1.conf.set("spark.graft.artifactDir", root)
     var builds = 0
-    def resolve(load: String => Int): Int =
-      ArtifactStore.standing(s1, "unit-fatal", sf)({ builds += 1; 7 })(
-        (_, dir) => ArtifactStore.saveBloom(Array[Byte](1), dir,
-          CorpusSnapshot(1, 1)))(load)
+    val sessions = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.SparkSession]
+    def resolve(load: String => Int): Int = {
+      val s = freshSession(root)
+      sessions += s
+      FrameCache.get(s, "unit-fatal", sf, new ArtifactStore.Codec[Int](s,
+          CorpusSnapshot(1, 1), (dir, _) => load(dir),
+          Some((_, dir, snap) => ArtifactStore.saveBloom(Array[Byte](1), dir, snap))))(
+        { builds += 1; 7 })
+    }
     assert(resolve(_ => 7) == 7 && builds == 1)
     val oom = new org.apache.spark.SparkException("job aborted",
       new OutOfMemoryError("executor heap"))
@@ -729,5 +751,137 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
       throw new org.apache.spark.SparkException("damaged parquet")) == 7)
     assert(builds == 2 &&
       ArtifactStore.lastOrigin("unit-fatal") == "rebuilt")
+    sessions.foreach(GraftSession.close)
+  }
+
+  test("a centroid-first query loads the persisted IVF matrix instead of re-training") {
+    // q69 reads the IVF centroids before the cells. With an IVF index
+    // persisted, a restarted process must take the index's matrix, not
+    // re-run Lloyd training (the trainKmeans jobs counted below). A
+    // private copy of the corpus keeps other suites' entries out.
+    val d = copyCorpus(sf, "graft_art_cents_")
+    val root = Files.createTempDirectory("graft_art_cents_root_").toString
+    val q69 = "q69_ivfpq_recall"
+    val s1 = freshSession(root)
+    SparkEntry.queries("q111_stream_ann_search")(s1, d).collect()
+    assert(ArtifactStore.lastOrigin.get("ivf-index").contains("built"))
+    val want = SparkEntry.queries(q69)(s1, d).collect().map(_.toSeq).toSeq
+
+    // jobs of this thread's group run for a query whose call site is
+    // Lloyd training (the query's jobs run on other threads, so the
+    // training frames are on the SQL execution's call site, not the
+    // job's); a last marker job proves every earlier event was delivered
+    val group = s"graft-lloyd-${java.util.UUID.randomUUID()}"
+    val lloyd = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marked = new java.util.concurrent.Semaphore(0)
+    val training = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if x.details.contains("trainKmeans") => training.add(x.executionId.toString)
+        case _ =>
+      }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (e.properties.getProperty("spark.job.description") == "marker") marked.release()
+          else if (Option(e.properties.getProperty("spark.sql.execution.id"))
+              .exists(training.contains))
+            lloyd.incrementAndGet()
+        }
+    }
+    def lloydJobs(body: => Unit): Int = {
+      lloyd.set(0)
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, "centroid-first restart")
+      try {
+        body
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      assert(marked.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS))
+      lloyd.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a restarted process: no centroid matrix in memory
+      FrameCache.evict("ivf-centroids", d)
+      ArtifactStore.lastOrigin.remove("ivf-index")
+      val s2 = freshSession(root)
+      var got = Seq.empty[Seq[Any]]
+      assert(lloydJobs {
+        got = SparkEntry.queries(q69)(s2, d).collect().map(_.toSeq).toSeq
+      } == 0, "q69 re-trained the centroids a persisted IVF index carries")
+      assert(ArtifactStore.lastOrigin.get("ivf-index").contains("loaded"))
+      assert(got == want, "q69 answers changed across the restart")
+      // control: without the index the same query trains
+      FrameCache.evict("ivf-centroids", d)
+      val s3 = spark.newSession()
+      assert(lloydJobs(SparkEntry.queries(q69)(s3, d).collect()) > 0,
+        "the listener does not see Lloyd training")
+      Seq(s1, s2, s3).foreach(GraftSession.close)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // ---- a corpus rewritten under a live session -----------------------
+  // A memo entry is tied to the snapshot of the corpus it was built
+  // from: a table file rewritten in place is answered from the new rows,
+  // by session-scoped and process-scoped entries alike. The expected
+  // answer comes from a copy of the rewritten corpus under a new dir: a
+  // fresh session on the same dir would share the process-scoped
+  // entries and prove nothing.
+
+  private def copyCorpus(from: String, prefix: String): String = {
+    val to = Files.createTempDirectory(prefix).toString
+    new File(from).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.copy(f.toPath, new File(to, f.getName).toPath))
+    to
+  }
+
+  /** Overwrite `table`'s one file in `d` with the rows that pass `keep`. */
+  private def rewrite(d: String, table: String, keep: Column): Unit = {
+    val target = new File(d, s"$table.parquet")
+    val staged = Files.createTempDirectory("graft_rewrite_").toString + "/t"
+    spark.read.parquet(target.getPath).filter(keep).coalesce(1).write.parquet(staged)
+    val part = new File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, target.toPath, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def run(s: SparkSession, q: String, d: String): Seq[Seq[Any]] =
+    SparkEntry.queries(q)(s, d).collect().map(_.toSeq).toSeq
+
+  test("a session-scoped memo (q35 dedup-pairs) is rebuilt after its corpus is rewritten") {
+    val d = copyCorpus(sf, "graft_snap_q35_")
+    val s = spark.newSession()
+    val before = run(s, "q35_minhash_lsh", d)
+    rewrite(d, "documents", col("doc_id") % 2 =!= 0)
+    val after = run(s, "q35_minhash_lsh", d)
+    val want = run(s, "q35_minhash_lsh", copyCorpus(d, "graft_snap_q35_new_"))
+    assert(want != before, "the rewrite did not change the answer — test would be vacuous")
+    assert(after == want, "q35 answered from the corpus as it was before the rewrite")
+    GraftSession.close(s)
+  }
+
+  test("a process-scoped memo (q50 ivf-centroids) is rebuilt and its artifact rebuilt, not loaded") {
+    val d = copyCorpus(sf, "graft_snap_q50_")
+    val s = spark.newSession()
+    s.conf.set("spark.graft.artifactDir",
+      Files.createTempDirectory("graft_snap_art_").toString)
+    val before = run(s, "q50_ann_ivf", d)
+    assert(ArtifactStore.lastOrigin.get("ivf-index").contains("built"))
+    val cents = graft.runtime.FrameCache.peek[Seq[Array[Double]]]("ivf-centroids", d)
+    assert(cents.isDefined)
+    rewrite(d, "embeddings", col("vec_id") % 5 =!= 0)
+    assert(graft.runtime.FrameCache.peek[Seq[Array[Double]]]("ivf-centroids", d).isEmpty,
+      "peek served an entry of the earlier snapshot")
+    val after = run(s, "q50_ann_ivf", d)
+    assert(ArtifactStore.lastOrigin.get("ivf-index").contains("rebuilt"),
+      "the memory miss must reach the fingerprint gate and rebuild the stale index")
+    val want = run(s, "q50_ann_ivf", copyCorpus(d, "graft_snap_q50_new_"))
+    assert(want != before, "the rewrite did not change the answer — test would be vacuous")
+    assert(after == want, "q50 answered from the corpus as it was before the rewrite")
+    assert(!graft.runtime.FrameCache.peek[Seq[Array[Double]]]("ivf-centroids", d)
+      .exists(_.zip(cents.get).forall { case (a, b) => a.sameElements(b) }),
+      "the centroid matrix was not retrained on the rewritten corpus")
+    GraftSession.close(s)
   }
 }

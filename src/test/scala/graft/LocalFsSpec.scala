@@ -30,7 +30,12 @@ class LocalFsSpec extends AnyFunSuite {
   /** Command lines of the `chmod` processes the JVM started while `body`
     * ran whose target lies under `root` (suites sharing the JVM have
     * their own roots). */
-  private def chmodsUnder(root: String)(body: => Unit): Seq[String] = {
+  private def chmodsUnder(root: String)(body: => Unit): Seq[String] =
+    forksUnder(root)(body).filter(_.startsWith("chmod"))
+
+  /** Command lines of every process the JVM started while `body` ran
+    * that names a path under `root`. */
+  private def forksUnder(root: String)(body: => Unit): Seq[String] = {
     val rec = new Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
@@ -40,7 +45,7 @@ class LocalFsSpec extends AnyFunSuite {
       rec.dump(dump)
       RecordingFile.readAllEvents(dump).asScala.toSeq
         .map(_.getString("command"))
-        .filter(c => c.startsWith("chmod") && c.contains(root))
+        .filter(_.contains(root))
     } finally { rec.close(); Files.delete(dump) }
   }
 
@@ -93,6 +98,29 @@ class LocalFsSpec extends AnyFunSuite {
     // the guard sees a stock create under the same root
     val control = chmodsUnder(root) {
       stockFs().create(new HPath(s"$root/control/f")).close()
+    }
+    assert(control.nonEmpty)
+  }
+
+  test("fork guard: a memoized query, cold then warm, lists its corpus without a fork") {
+    // every memo lookup lists the corpus dir; Hadoop's local file status
+    // forks `ls` once anything reads its permission or owner
+    val root = tmpRoot("graft_forkmemo_")
+    val s = spark.newSession()
+    import s.implicits._
+    Seq.tabulate(40)(i => (i.toLong, s"the quick brown fox ${i % 10} jumps over the lazy dog"))
+      .toDF("doc_id", "text").write.parquet(s"$root/documents.parquet")
+    var runs = Seq.empty[Long]
+    val forks = forksUnder(root) {
+      runs = Seq.fill(2)(SparkEntry.queries("q35_minhash_lsh")(s, root).count())
+    }
+    assert(runs.distinct.size == 1)
+    assert(graft.runtime.FrameCache.peek[Any](s, "dedup-pairs", root).isDefined)
+    assert(forks.isEmpty, forks.take(5).mkString("\n"))
+    GraftSession.close(s)
+    // the guard sees a permission read on a listed status
+    val control = forksUnder(root) {
+      stockFs().listStatus(new HPath(root)).head.getPermission
     }
     assert(control.nonEmpty)
   }

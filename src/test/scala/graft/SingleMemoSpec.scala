@@ -46,4 +46,23 @@ class SingleMemoSpec extends AnyFunSuite {
       f != memoFile && code.contains("computeIfAbsent") },
       "computeIfAbsent memo outside FrameCache")
   }
+
+  test("only the memo tier resolves artifacts and evicts memo entries") {
+    val tier = Set(memoFile, "graft/sinks/ArtifactStore.scala")
+    // artifact-dir lookups, existence probes, origin writes and the old
+    // hand-nested resolution belong to FrameCache.get with a codec
+    val resolution = ("""configuredDir\(|ArtifactStore\.exists\(|\bstanding\(|""" +
+      """lastOrigin\s*\([^)]*\)\s*=[^=]|lastOrigin\s*\.\s*(?:put|update|addOne)\(""").r
+    val resolving = sources.collect {
+      case (f, code) if !tier(f) && resolution.findFirstIn(code).isDefined =>
+        s"$f: ${resolution.findFirstIn(code).get}" }
+    assert(resolving.isEmpty, "artifact resolution outside the memo tier: " +
+      resolving.mkString(", "))
+    // a stale entry is the tier's to release; beyond session close and
+    // the bucketed tables' catalog re-validation, nothing evicts by hand
+    val evicting = Set(memoFile, "graft/GraftSession.scala", "graft/sinks/BucketedTables.scala")
+    val evicts = sources.collect {
+      case (f, code) if !evicting(f) && code.contains("FrameCache.evict(") => f }
+    assert(evicts.isEmpty, s"FrameCache.evict outside the tier: ${evicts.mkString(", ")}")
+  }
 }

@@ -876,7 +876,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // delta with the standing bloom the drain memoized
     val (_, bloom) = graft.runtime.FrameCache
       .peek[(org.apache.spark.sql.DataFrame, Array[Byte])](
-        spark, "q101-corpus-bloom", d)
+        spark, "q101-bloom", d)
       .getOrElse(fail("q101 left no standing bloom entry"))
     val hit = graft.ext.BloomPrune.mightContain(bloom,
       md5(col("text").cast("binary")))
