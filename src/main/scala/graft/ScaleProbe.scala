@@ -409,14 +409,12 @@ object ScaleProbe {
       val sample = nemb.filter(col("vec_id") % 2 === 0)
       val cents = Similarity.trainKmeans(sample, k, 3, dim)
       val cells = nemb
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
         .select(col("vec_id"), col("ne"),
-          explode(Similarity.topCells(col("dots"), 2)).as("cell"))
+          explode(Similarity.assignCells(col("ne"), cents, 2)).as("cell"))
       cells.cache(); cells.count() // untimed snapshot investment
       val queries = nemb.filter(col("vec_id") % step === 0).limit(100)
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
         .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-          explode(Similarity.topCells(col("dots"), probeCells)).as("cell"))
+          explode(Similarity.assignCells(col("ne"), cents, probeCells)).as("cell"))
       try {
         timed("ann_ivf_probe") {
           val w = Window.partitionBy(col("q_id"))

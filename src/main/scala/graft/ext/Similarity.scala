@@ -97,36 +97,32 @@ object Similarity {
         transform(col(embCol), x => x.cast("double") / col("__nrm")))
       .drop("__nrm")
 
-  /** k×d centroid matrix as ONE nested literal array column — the IVF
-    * assignment primitive. Centroids are plan-time literals (k·d doubles
-    * — ~50 KB at k=96, d=64 — independent of corpus size), so cell
-    * assignment is a pure per-row expression: NO crossJoin expansion, NO
-    * shuffle, NO window. This replaces the round-2 corpus×centroids
-    * window argmax, which shuffled the whole expanded frame by vec_id. */
-  private def centsLit(cents: Seq[Array[Double]]): Column =
-    typedLit(cents.map(_.toSeq))
-
-  /** Per-row dot products against the literal centroid matrix (one
-    * array element per centroid). Materialize with withColumn before
-    * consuming (Catalyst inlines nested higher-order expressions). */
-  def centroidDots(ne: Column, cents: Seq[Array[Double]]): Column =
-    transform(centsLit(cents), ce => dot(ne, ce))
-
-  /** Top-`m` centroid indices from a MATERIALIZED dots column, ranked by
-    * rounded dot desc with index tie-break — the same total order the
-    * SQL oracle's `ORDER BY round(dot,6) DESC, c` produces. */
-  def topCells(dots: Column, m: Int): Column =
-    transform(
-      slice(array_sort(transform(dots, (d, i) =>
-        struct((-round(d, 6)).as("nd"), i.as("c")))), 1, m),
-      s => s.getField("c"))
+  /** Top-`m` IVF cells of unit vector `ne` against the k×d centroid
+    * matrix, ranked by rounded dot desc with index tie-break — the same
+    * total order the SQL oracle's `ORDER BY round(dot,6) DESC, c`
+    * produces. Assignment is a pure per-row expression: NO crossJoin
+    * expansion, NO shuffle, NO window (this replaced the round-2
+    * corpus×centroids window argmax, which shuffled the whole expanded
+    * frame by vec_id).
+    *
+    * The codegen'd [[graft.functions.CellAssign]] kernel computes all k
+    * dots, the rounding and the partial sort in one primitive pass; the
+    * matrix is an expression field, not a literal child, so the plan
+    * string names it by shape and hash instead of rendering k·d doubles
+    * (SimilaritySpec pins it bit-identical to the built-in
+    * `transform`/`array_sort` composition it replaced). */
+  def assignCells(ne: Column, cents: Seq[Array[Double]], m: Int): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.CellAssign(
+        org.apache.spark.sql.GraftColumnBridge.expression(ne),
+        graft.functions.CentroidMatrix(cents), m))
 
   /** Lloyd k-means over a (vec_id, ne) sample, engine-portable: every
     * float operation is a deterministic sequential fold so an external
     * SQL oracle reproduces the centroids BIT-FOR-BIT:
     *  - init = normalized vectors of the k smallest vec_ids;
     *  - assignment = argmax rounded dot, centroid-index tie-break
-    *    (map-side expression against the literal centroid matrix);
+    *    ([[assignCells]] with m = 1, map-side);
     *  - update = members sorted by vec_id, element-wise sequential sum
     *    (0.0-init fold == SQL list_reduce's x1-init for +), divide by
     *    count, renormalize; empty cells keep their previous centroid.
@@ -143,8 +139,7 @@ object Similarity {
     val zero = typedLit(Seq.fill(dims)(0.0))
     for (_ <- 0 until iters) {
       val upd = sample
-        .withColumn("dots", centroidDots(col("ne"), cents))
-        .withColumn("cell", element_at(topCells(col("dots"), 1), 1))
+        .withColumn("cell", element_at(assignCells(col("ne"), cents, 1), 1))
         .groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("vec_id"), col("ne")))).as("vs"),
           count(lit(1)).as("cnt"))
@@ -171,7 +166,7 @@ object Similarity {
 
   /** Index of the min element of a MATERIALIZED distance-array column,
     * ranked by rounded value asc with index tie-break — the L2/argmin
-    * counterpart of [[topCells]]; same total order as SQL
+    * counterpart of [[assignCells]]; same total order as SQL
     * `ORDER BY round(d, 6) ASC, c`. */
   def argminIdx(dists: Column): Column =
     element_at(slice(array_sort(transform(dists, (d, i) =>

@@ -95,9 +95,16 @@ object SimilarityQueries extends QueryPack {
     * are only loaded when built against this matrix. */
   private def centroids(s: SparkSession, d: String): Seq[Array[Double]] =
     FrameCache.get("ivf-centroids", d,
-        ArtifactStore.ivfCentroidsCodec(s, Tables.embeddings(s, d)))(
+        ArtifactStore.ivfCentroidsCodec(s, embeddingsSnapshot(s, d)))(
       Similarity.trainKmeans(
         prepped(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters, Dims))
+
+  /** The (vec_id, embedding) fingerprint of `d` that gates and stamps
+    * both IVF artifacts — taken once per listing of `d` (process-scoped,
+    * like [[centroids]]), so a rewritten corpus re-fingerprints. */
+  private def embeddingsSnapshot(s: SparkSession, d: String): ArtifactStore.CorpusSnapshot =
+    FrameCache.get("embeddings-snapshot", d)(
+      ArtifactStore.snapshot(Tables.embeddings(s, d), Seq("vec_id", "embedding")))
 
   /** Trained PQ codebooks, memoized per data dir (plain doubles — not
     * session-bound, same lifecycle as [[centroids]]). */
@@ -195,11 +202,6 @@ object SimilarityQueries extends QueryPack {
       .distinct()
   }
 
-  /** Distinct (q_id, qe, vec_id, ne) IVF candidates: corpus indexed in
-    * its top-`IvfAssignN` cells, queries probe their top-`IvfProbes`
-    * cells. Assignment is a pure map-side expression against the
-    * literal centroid matrix (no crossJoin/window); the only shuffle is
-    * the cell equi-join against the BROADCAST probe set. */
   /** The standing IVF inverted index: every corpus vector exploded to
     * its top-[[IvfAssignN]] cells — memoized AND CACHED per (session,
     * dir) because it serves BOTH the batch candidate build and the
@@ -207,13 +209,18 @@ object SimilarityQueries extends QueryPack {
     * index table q73 materializes). */
   private def corpusCells(s: SparkSession, d: String): DataFrame =
     FrameCache.get(s, "ivf-index", d,
-        ArtifactStore.ivfCodec(s, Tables.embeddings(s, d), centroids(s, d)))(
+        ArtifactStore.ivfCodec(s, embeddingsSnapshot(s, d), centroids(s, d)))(
       prepped(s, d)
-        .withColumn("dots", Similarity.centroidDots(col("ne"), centroids(s, d)))
-        .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
+        .withColumn("cells", Similarity.assignCells(col("ne"), centroids(s, d), IvfAssignN))
         .select(col("vec_id"), col("ne"), explode(col("cells")).as("cell"))
         .cache())
 
+  /** Distinct (q_id, qe, vec_id, ne) IVF candidates: corpus indexed in
+    * its top-`IvfAssignN` cells, queries probe their top-`IvfProbes`
+    * cells. Assignment is one map-side kernel per row
+    * ([[Similarity.assignCells]] — no crossJoin/window, and no centroid
+    * literal in the plan); the only shuffle is the cell equi-join
+    * against the BROADCAST probe set. */
   private def buildIvfCandidates(s: SparkSession, d: String): DataFrame =
     ivfCandidatesFrom(corpusCells(s, d), centroids(s, d),
       prepped(s, d).filter(isQuery(s, d)))
@@ -225,8 +232,7 @@ object SimilarityQueries extends QueryPack {
   private[graft] def ivfCandidatesFrom(cells: DataFrame,
       cents: Seq[Array[Double]], queries: DataFrame): DataFrame = {
     val probes = queries
-      .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-      .withColumn("cells", Similarity.topCells(col("dots"), IvfProbes))
+      .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
       .select(col("vec_id").as("q_id"), col("ne").as("qe"),
         explode(col("cells")).as("cell"))
     cells.join(broadcast(probes), Seq("cell"))
@@ -507,13 +513,11 @@ object SimilarityQueries extends QueryPack {
       val e = prepped(s, d)
       val idx = e
         .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-        .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
+        .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfAssignN))
         .select(col("vec_id"), col("ne"), col("codes"),
           explode(col("cells")).as("cell"))
       val probes = e.filter(isQuery(s, d))
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-        .withColumn("cells", Similarity.topCells(col("dots"), IvfProbes))
+        .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
         .select(col("vec_id").as("q_id"), col("ne").as("qe"),
           Similarity.pqLuts(col("ne"), cb, Dims).as("luts"),
           explode(col("cells")).as("cell"))
@@ -547,9 +551,9 @@ object SimilarityQueries extends QueryPack {
 
     // ---- Streaming index ingest — the 100 TB vector store's WRITE
     //      path: vectors arrive on a stream and are indexed online.
-    //      IVF cell assignment (top-IvfAssignN) and the 96-bit PQ
-    //      encode are pure map-side expressions against the trained
-    //      literal codebooks, so ingest has NO shuffle, NO state store
+    //      IVF cell assignment (top-IvfAssignN, assignCells) and the
+    //      96-bit PQ encode are pure map-side expressions against the
+    //      trained codebooks, so ingest has NO shuffle, NO state store
     //      and NO join — each micro-batch appends straight into the
     //      inverted lists. The result audits the built index per cell
     //      (list size, membership + code checksums); the oracle
@@ -565,8 +569,7 @@ object SimilarityQueries extends QueryPack {
       val out = StreamingQueries.drainToParquet("q73_stream_index_ingest",
         s.readStream.schema(schema).parquet(in)
           .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
-          .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-          .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
+          .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfAssignN))
           .select(col("vec_id"), element_at(col("codes"), 1).as("c0"),
             explode(col("cells")).as("cell")))
       s.read.parquet(out)
@@ -597,7 +600,7 @@ object SimilarityQueries extends QueryPack {
     // ---- SemDeDup (Abbas et al. '23): semantic dedup = k-means
     //      cluster the embeddings, then prune within-cluster near-
     //      duplicates. Reuses the trained IVF centroids; assignment is
-    //      the same map-side literal-matrix argmax as the index build,
+    //      the same map-side assignCells argmax as the index build,
     //      pair comparisons stay WITHIN cells (pairsFromBuckets — one
     //      groupBy(cell), never an all-pairs scan), and a vector is
     //      pruned when it cosines ≥ τ with a LOWER-id cell-mate (keep-
@@ -608,8 +611,7 @@ object SimilarityQueries extends QueryPack {
     "q79_semdedup" -> ((s, d) => {
       val cents = centroids(s, d)
       val cells = prepped(s, d)
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-        .withColumn("cell", element_at(Similarity.topCells(col("dots"), 1), 1))
+        .withColumn("cell", element_at(Similarity.assignCells(col("ne"), cents, 1), 1))
         .select(col("vec_id"), col("ne"), col("cell"))
       val rows = cells.select(struct(col("vec_id"), col("ne")).as("vn"),
         col("cell"))
@@ -710,8 +712,7 @@ object SimilarityQueries extends QueryPack {
     val cents = centroids(s, d)
     batch => {
       val probes = Similarity.withNormalized(batch, "embedding")
-        .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-        .withColumn("cells", Similarity.topCells(col("dots"), IvfProbes))
+        .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
         .select(col("vec_id").as("q_id"), col("ne").as("qe"),
           explode(col("cells")).as("cell"))
       val cand = idx.join(broadcast(probes), Seq("cell"))

@@ -290,13 +290,14 @@ object ArtifactStore {
     new Codec(s, snapshot(keys, Seq("ck")), loadBloomKeys(s, _, _),
       Some((v, dir, snap) => saveBloom(v._2, dir, snap, bloomItems(snap), Some(v._1))))
 
-  /** The IVF inverted index over `embeddings`, assigned against `cents`.
-    * A persisted index built against another matrix (trained on another
-    * partitioning) is stale: a probe must assign against the matrix its
-    * cells were built with. */
-  def ivfCodec(s: SparkSession, embeddings: => DataFrame,
+  /** The IVF inverted index over the embeddings corpus fingerprinted
+    * `snap` (its (vec_id, embedding) [[snapshot]]), assigned against
+    * `cents`. A persisted index built against another matrix (trained on
+    * another partitioning) is stale: a probe must assign against the
+    * matrix its cells were built with. */
+  def ivfCodec(s: SparkSession, snap: => CorpusSnapshot,
       cents: => Seq[Array[Double]]): Codec[DataFrame] =
-    new Codec(s, snapshot(embeddings, Seq("vec_id", "embedding")), { (dir, snap) =>
+    new Codec(s, snap, { (dir, snap) =>
       val (cells, saved) = loadIvfIndex(s, dir, snap)
       unpersistOnFailure(cells) {
         require(saved.map(_.toSeq) == cents.map(_.toSeq),
@@ -305,11 +306,12 @@ object ArtifactStore {
       }
     }, Some(saveIvfIndex(_, cents, _, _)))
 
-  /** The centroid matrix inside the IVF index over `embeddings`, which
-    * [[ivfCodec]] writes. */
-  def ivfCentroidsCodec(s: SparkSession, embeddings: => DataFrame): Codec[Seq[Array[Double]]] =
-    new Codec(s, snapshot(embeddings, Seq("vec_id", "embedding")),
-      loadIvfCentroids(s, _, _), None, Some("ivf-index"))
+  /** The centroid matrix inside the IVF index over the corpus
+    * fingerprinted `snap`, which [[ivfCodec]] writes. Both IVF codecs
+    * take the caller's one fingerprint of the snapshot: each taking its
+    * own scanned the corpus twice per rebuild. */
+  def ivfCentroidsCodec(s: SparkSession, snap: => CorpusSnapshot): Codec[Seq[Array[Double]]] =
+    new Codec(s, snap, loadIvfCentroids(s, _, _), None, Some("ivf-index"))
 
   // ---- MinHash-LSH near-dup index (q105's standing corpus index) ----
 

@@ -3,6 +3,8 @@ package graft
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -767,59 +769,60 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ArtifactStore.lastOrigin.get("ivf-index").contains("built"))
     val want = SparkEntry.queries(q69)(s1, d).collect().map(_.toSeq).toSeq
 
-    // jobs of this thread's group run for a query whose call site is
-    // Lloyd training (the query's jobs run on other threads, so the
-    // training frames are on the SQL execution's call site, not the
-    // job's); a last marker job proves every earlier event was delivered
-    val group = s"graft-lloyd-${java.util.UUID.randomUUID()}"
-    val lloyd = new java.util.concurrent.atomic.AtomicInteger(0)
+    def lloydJobs(body: => Unit): Int = jobsCalledFrom("trainKmeans")(body).values.sum
+    // a restarted process: no centroid matrix in memory
+    FrameCache.evict("ivf-centroids", d)
+    ArtifactStore.lastOrigin.remove("ivf-index")
+    val s2 = freshSession(root)
+    var got = Seq.empty[Seq[Any]]
+    assert(lloydJobs {
+      got = SparkEntry.queries(q69)(s2, d).collect().map(_.toSeq).toSeq
+    } == 0, "q69 re-trained the centroids a persisted IVF index carries")
+    assert(ArtifactStore.lastOrigin.get("ivf-index").contains("loaded"))
+    assert(got == want, "q69 answers changed across the restart")
+    // control: without the index the same query trains
+    FrameCache.evict("ivf-centroids", d)
+    val s3 = spark.newSession()
+    assert(lloydJobs(SparkEntry.queries(q69)(s3, d).collect()) > 0,
+      "the listener does not see Lloyd training")
+    Seq(s1, s2, s3).foreach(GraftSession.close)
+  }
+
+  /** Jobs started by `body` (under a fresh job group on this thread),
+    * counted per SQL execution whose call site contains `site`. A
+    * query's jobs run on other threads, so the caller's frames are on
+    * the SQL execution's call site, not the job's; a last marker job
+    * proves every earlier event was delivered. */
+  private def jobsCalledFrom(site: String)(body: => Unit): Map[String, Int] = {
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val marked = new java.util.concurrent.Semaphore(0)
-    val training = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val matching = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
         case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-            if x.details.contains("trainKmeans") => training.add(x.executionId.toString)
+            if x.details.contains(site) => matching.add(x.executionId.toString)
         case _ =>
       }
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
           if (e.properties.getProperty("spark.job.description") == "marker") marked.release()
-          else if (Option(e.properties.getProperty("spark.sql.execution.id"))
-              .exists(training.contains))
-            lloyd.incrementAndGet()
+          else Option(e.properties.getProperty("spark.sql.execution.id"))
+            .filter(matching.contains).foreach(jobs.merge(_, 1, Integer.sum(_, _)))
         }
     }
-    def lloydJobs(body: => Unit): Int = {
-      lloyd.set(0)
-      val sc = spark.sparkContext
-      sc.setJobGroup(group, "centroid-first restart")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, s"jobs called from $site")
       try {
         body
         sc.setJobDescription("marker")
         sc.parallelize(Seq(1), 1).count()
       } finally sc.clearJobGroup()
       assert(marked.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS))
-      lloyd.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // a restarted process: no centroid matrix in memory
-      FrameCache.evict("ivf-centroids", d)
-      ArtifactStore.lastOrigin.remove("ivf-index")
-      val s2 = freshSession(root)
-      var got = Seq.empty[Seq[Any]]
-      assert(lloydJobs {
-        got = SparkEntry.queries(q69)(s2, d).collect().map(_.toSeq).toSeq
-      } == 0, "q69 re-trained the centroids a persisted IVF index carries")
-      assert(ArtifactStore.lastOrigin.get("ivf-index").contains("loaded"))
-      assert(got == want, "q69 answers changed across the restart")
-      // control: without the index the same query trains
-      FrameCache.evict("ivf-centroids", d)
-      val s3 = spark.newSession()
-      assert(lloydJobs(SparkEntry.queries(q69)(s3, d).collect()) > 0,
-        "the listener does not see Lloyd training")
-      Seq(s1, s2, s3).foreach(GraftSession.close)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.map { case (k, v) => k -> v.intValue }.toMap
   }
 
   // ---- a corpus rewritten under a live session -----------------------
@@ -873,7 +876,13 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     rewrite(d, "embeddings", col("vec_id") % 5 =!= 0)
     assert(graft.runtime.FrameCache.peek[Seq[Array[Double]]]("ivf-centroids", d).isEmpty,
       "peek served an entry of the earlier snapshot")
-    val after = run(s, "q50_ann_ivf", d)
+    // both IVF entries miss against the stale artifact: the corpus is
+    // fingerprinted once for the two of them, not once per entry
+    var after = Seq.empty[Seq[Any]]
+    val fingerprints = jobsCalledFrom("ArtifactStore$.snapshot(") {
+      after = run(s, "q50_ann_ivf", d)
+    }.size
+    assert(fingerprints == 1, s"the rewritten corpus was fingerprinted $fingerprints times, not once")
     assert(ArtifactStore.lastOrigin.get("ivf-index").contains("rebuilt"),
       "the memory miss must reach the fingerprint gate and rebuild the stale index")
     val want = run(s, "q50_ann_ivf", copyCorpus(d, "graft_snap_q50_new_"))

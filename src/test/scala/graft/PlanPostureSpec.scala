@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, Literal}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -69,6 +70,32 @@ class PlanPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = plan("q65_pq_recall")
     assert(p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("q50: IVF cell assignment is the native kernel — no centroid literal, no sort over the matrix") {
+    // the driver renders every literal of a plan at each execution start
+    // and AQE update: a 96×64 matrix literal costs 6,144 Double.toString
+    // calls each time, and its array_sort chain runs interpreted
+    plan("q50_ann_ivf") // builds the memoized candidate frame
+    val cells = graft.queries.SimilarityQueries.ivfArtifacts(spark, sf)._1
+    val cands = graft.runtime.FrameCache.peek[DataFrame](spark, "ivf-candidates", sf)
+      .getOrElse(fail("q50 left no ivf-candidates entry"))
+    val matrix: DataType => Boolean = {
+      case ArrayType(ArrayType(DoubleType, _), _) => true
+      case _ => false
+    }
+    for ((name, df) <- Seq("corpusCells" -> cells, "q50 candidates" -> cands)) {
+      val exprs = df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.exists(_.isInstanceOf[graft.functions.CellAssign]),
+        s"$name does not assign cells with the CellAssign kernel")
+      val literals = exprs.collect { case l: Literal if matrix(l.dataType) => l.dataType }
+      assert(literals.isEmpty, s"$name holds a centroid-matrix literal: $literals")
+      val chains = exprs.collect {
+        case e: ArraySort => e
+        case e: ArrayTransform if matrix(e.argument.dataType) => e
+      }
+      assert(chains.isEmpty, s"$name sorts or transforms the centroid matrix: ${chains.map(_.prettyName)}")
+    }
   }
 
   test("q69: IVFPQ candidate join broadcasts the probe side like q50") {

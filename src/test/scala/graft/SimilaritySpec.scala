@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Similarity
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -211,10 +212,90 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("topCells ranks by rounded dot desc with index tie-break") {
     val cents = Seq(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0))
     val df = Seq(Seq(1.0, 0.0)).toDF("ne")
-      .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
-      .select(Similarity.topCells(col("dots"), 3).as("cells"))
+      .select(Similarity.assignCells(col("ne"), cents, 3).as("cells"))
     // cents 0 and 2 tie at dot=1 → index order; cent 1 (dot=0) last
     assert(df.head.getSeq[Int](0) === Seq(0, 2, 1))
+  }
+
+  /** The built-in composition `assignCells` replaced: per-centroid
+    * dots against the literal matrix, then the first `m` indices of
+    * `array_sort` over (-round(dot, 6), index). */
+  private def referenceCells(ne: Column, cents: Seq[Array[Double]], m: Int): Column =
+    transform(
+      slice(array_sort(transform(
+        transform(typedLit(cents.map(_.toSeq)), ce => Similarity.dot(ne, ce)),
+        (d, i) => struct((-round(d, 6)).as("nd"), i.as("c")))), 1, m),
+      s => s.getField("c"))
+
+  /** A session that evaluates expressions interpreted: no whole-stage
+    * codegen, no generated projections. */
+  private lazy val interpreted = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
+
+  /** Rows where the kernel and the reference disagree, in a codegen'd
+    * and an interpreted session. The frame is repartitioned so the
+    * projection runs in the plan instead of being folded into a local
+    * relation by the optimizer. */
+  private def cellMismatches(frame: SparkSession => DataFrame,
+      cents: Seq[Array[Double]], m: Int): Seq[Row] =
+    Seq(spark, interpreted).flatMap { s =>
+      frame(s).repartition(2)
+        .select(col("ne"), Similarity.assignCells(col("ne"), cents, m).as("a"),
+          referenceCells(col("ne"), cents, m).as("b"))
+        .filter(not(col("a") <=> col("b"))).collect().toSeq
+    }
+
+  test("assignCells is bit-identical to the dot/round/array_sort composition on random rows") {
+    val rnd = new scala.util.Random(11)
+    val cents = Seq.fill(96)(Array.fill(64)(rnd.nextGaussian()))
+    val rows = Seq.fill(300)(Tuple1(Seq.fill(64)(rnd.nextGaussian())))
+    for (m <- Seq(1, 2, 12))
+      assert(cellMismatches(_.createDataFrame(rows).toDF("ne"), cents, m).isEmpty, s"m=$m")
+  }
+
+  test("assignCells matches the composition on ties, ±0.0, NaN/∞, nulls, length mismatch and m ≥ k") {
+    val nan = Double.NaN; val inf = Double.PositiveInfinity
+    val cents = Seq(
+      Array(1.0, 0.0), Array(1.0000004, 0.0), Array(0.9999996, 0.0), // tie after rounding
+      Array(0.0, 0.0), Array(-0.0, 0.0), Array(0.0, -1.0),           // dots of ±0.0
+      Array(nan, 0.0), Array(inf, 0.0), Array(-inf, 0.0),            // NaN/±∞ dots
+      Array(5e-7, 0.0), Array(-5e-7, 0.0), Array(0.1234565, 0.0),    // half-way at 6 dp
+      Array(2.0000005, 0.0), Array(-0.7654325, 0.0), Array(1234.5678905, 0.0),
+      Array(1.0, 0.0, 0.0))                                           // length mismatch
+    def v(xs: java.lang.Double*): Option[Seq[java.lang.Double]] = Some(xs.toSeq)
+    // array<double> with nullable elements, as a zero-norm vector's
+    // normalized array is typed; the last two rows are a null element
+    // and a null vector
+    val rows = Seq(v(1.0, 0.0), v(-1.0, 0.0), v(0.0, 1.0), v(-0.0, -0.0),
+      v(0.5, 0.5), v(nan, 1.0), v(inf, 0.0), v(-inf, 1.0), v(1.0, 0.0, 0.0),
+      v(1.0), v(1.0, null), None).map(Tuple1(_))
+    for (m <- Seq(1, 3, cents.size, cents.size + 5))
+      assert(cellMismatches(_.createDataFrame(rows).toDF("ne"), cents, m).isEmpty, s"m=$m")
+    // a dense-typed column takes the null-free path to the same cells
+    val dense = Seq(Tuple1(Seq(1.0, 0.0)), Tuple1(Seq(-0.0, 2.5)))
+    assert(cellMismatches(_.createDataFrame(dense).toDF("ne"), cents, 4).isEmpty)
+    // a null vector's dots are all null: cells 0..m-1 by index
+    val nulls = spark.createDataFrame(rows.takeRight(2)).toDF("ne").repartition(2)
+      .select(Similarity.assignCells(col("ne"), cents, 3)).collect().map(_.getSeq[Int](0))
+    assert(nulls.toSeq === Seq(Seq(0, 1, 2), Seq(0, 1, 2)))
+  }
+
+  test("assignCells plans name the centroid matrix, not its k×d doubles") {
+    val cents = Seq.tabulate(8)(i => Array.fill(4)(i + 0.123456789))
+    def cells(cs: Seq[Array[Double]]) = Seq(Tuple1(Seq(1.0, 0.0, 0.0, 0.0))).toDF("ne")
+      .repartition(2).select(Similarity.assignCells(col("ne"), cs, 2).as("cells"))
+    val df = cells(cents)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("centroids[8x4#"), p)
+    assert(!p.contains("0.123456789"), s"the matrix is rendered into the plan:\n$p")
+    // equal matrices compare equal, so plan-matched caching still works
+    assert(df.queryExecution.analyzed.sameResult(cells(cents.map(_.clone())).queryExecution.analyzed))
+    assert(!df.queryExecution.analyzed.sameResult(
+      cells(cents.updated(0, Array(0.0, 0.0, 0.0, 0.0))).queryExecution.analyzed))
   }
 
   test("planeComponent matches the SQL md5 definition") {
