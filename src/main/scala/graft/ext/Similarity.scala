@@ -117,6 +117,22 @@ object Similarity {
         org.apache.spark.sql.GraftColumnBridge.expression(ne),
         graft.functions.CentroidMatrix(cents), m))
 
+  /** Int8 scalar quantization of `ne`: its max-abs `scale` and its
+    * components rounded to [-127, 127] against it (`q8`), as the
+    * codegen'd [[graft.functions.Int8Kernel]] — bit-identical to the
+    * built-in `aggregate(greatest(abs))` / `transform(round(x * 127.0 /
+    * scale))` composition, which runs interpreted and rounds every
+    * element through `BigDecimal` (SimilaritySpec pins it). `ansi` is
+    * the session's `spark.sql.ansi.enabled`, which decides what a zero
+    * scale's division does. */
+  def int8Quantized(df: DataFrame, ne: String, ansi: Boolean): DataFrame = {
+    val e = org.apache.spark.sql.GraftColumnBridge.expression(col(ne))
+    df.withColumn("scale", org.apache.spark.sql.GraftColumnBridge.column(
+        graft.functions.Int8Scale(e)))
+      .withColumn("q8", org.apache.spark.sql.GraftColumnBridge.column(
+        graft.functions.Int8Quantize(e, ansi)))
+  }
+
   /** Lloyd k-means over a (vec_id, ne) sample, engine-portable: every
     * float operation is a deterministic sequential fold so an external
     * SQL oracle reproduces the centroids BIT-FOR-BIT:

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
@@ -40,18 +38,12 @@ object CentroidMatrix {
   * (d, i) -> struct(-round(d, 6), i))), 1, m).c`:
   *  - each dot is [[VecDotKernel]]'s sequential fold, null when `ne` is
   *    null, holds a null element, or differs in length from the centroid;
-  *  - rounding is Spark's `round(d, 6)` on doubles (HALF_UP through
-  *    `BigDecimal.valueOf`, NaN/±∞ passed through);
+  *  - rounding is Spark's `round(d, 6)` on doubles ([[HalfUp]]);
   *  - the order is `-rounded` ascending, nulls first, in SQL double
   *    ordering (-0.0 == 0.0, NaN largest), ties by ascending index.
   * So a row whose dots are all null takes cells 0..m-1, as the
   * composition's nulls-first sort gives it. */
 object CellAssignKernel {
-
-  /** Spark's `round(d, 6)` on a double. */
-  private def round6(d: Double): Double =
-    if (d.isNaN || d.isInfinite) d
-    else JBigDecimal.valueOf(d).setScale(6, RoundingMode.HALF_UP).doubleValue()
 
   private def hasNull(a: ArrayData): Boolean = {
     var i = 0
@@ -84,7 +76,7 @@ object CellAssignKernel {
         var s = 0.0
         var i = 0
         while (i < x.length) { s += x(i) * ce(i); i += 1 }
-        key(c) = -round6(s)
+        key(c) = -HalfUp.round(s, 6)
       }
       c += 1
     }

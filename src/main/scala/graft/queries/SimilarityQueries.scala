@@ -142,18 +142,24 @@ object SimilarityQueries extends QueryPack {
     transform(slice(array_sort(transform(pj, (p, i) =>
       struct(round(abs(p), 6).as("ap"), i.as("j")))), 1, n), s => s.getField("j"))
 
-  /** Distinct (q_id, qe, vec_id, ne) LSH candidates: `AnnTables` tables,
-    * each probed at the home bucket plus the one-bit margin flip. All
-    * projections/buckets are map-side expressions; the only shuffle is
-    * the (t, bucket) equi-join against the BROADCAST probe set. */
-  /** Candidate frames are memoized AND CACHED per (session, dir):
-    * q39/q57/q59 consume the LSH candidates and q50/q57/q59/q64/q69 the
-    * IVF candidates — without the cache each consumer re-runs the
-    * multi-table probe joins (~1 s each at sf0.1). */
+  /** Scored candidate frames, (q_id, vec_id, cos) — memoized AND CACHED
+    * per (session, dir): q39/q57/q59 consume the LSH candidates and
+    * q50/q57/q59/q64 the IVF candidates. Without the cache each consumer
+    * re-runs the multi-table probe joins (~1 s each at sf0.1); holding
+    * the cosine instead of both 64-double vectors keeps the cached
+    * block ~90× smaller. */
   private def lshCandidates(s: SparkSession, d: String): DataFrame =
     FrameCache.get(s, "lsh-candidates", d)(buildLshCandidates(s, d).cache())
   private def ivfCandidates(s: SparkSession, d: String): DataFrame =
     FrameCache.get(s, "ivf-candidates", d)(buildIvfCandidates(s, d).cache())
+
+  /** The (vec_id, scale, q8) int8-quantized corpus q62 and q64 score on
+    * ([[Similarity.int8Quantized]]; the zero-scale division follows the
+    * session's ANSI flag, as the composition's `Divide` would). */
+  private def int8Corpus(s: SparkSession, d: String): DataFrame =
+    Similarity.int8Quantized(prepped(s, d), "ne",
+        s.conf.get("spark.sql.ansi.enabled").toBoolean)
+      .select(col("vec_id"), col("scale"), col("q8"))
 
   /** Exact brute-force top-3, memoized AND CACHED like the candidate
     * frames: it is the ground truth that FIVE evaluation queries
@@ -169,6 +175,11 @@ object SimilarityQueries extends QueryPack {
       Similarity.bruteForceTopK(e, q, 3).cache()
     }
 
+  /** Scored (q_id, vec_id, cos) LSH candidates: `AnnTables` tables,
+    * each probed at the home bucket plus `AnnFlips` one-bit margin
+    * flips. All projections/buckets are map-side expressions; the corpus
+    * meets the BROADCAST probe set in a (t, bucket) equi-join, then
+    * [[scoredCandidates]]. */
   private def buildLshCandidates(s: SparkSession, d: String): DataFrame = {
     var e = prepped(s, d)
     for (t <- 0 until AnnTables) {
@@ -196,11 +207,21 @@ object SimilarityQueries extends QueryPack {
                 element_at(flipMask, element_at(col(s"f$t"), k) + 1))
                 .as("bucket")))): _*)).as("tb"))
       .select(col("q_id"), col("qe"), col("tb.t"), col("tb.bucket"))
-    idx.join(broadcast(probes), Seq("t", "bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("qe"), col("vec_id"), col("ne"))
-      .distinct()
+    scoredCandidates(idx.join(broadcast(probes), Seq("t", "bucket")))
   }
+
+  /** Probe hits (q_id, qe, vec_id, ne) → distinct (q_id, vec_id, cos).
+    * The cosine is computed map-side while both vectors are in hand,
+    * THEN the rows are deduped: multi-probe duplicates of a pair carry
+    * the same vectors (vec_id is unique), so their cosines are equal and
+    * the distinct keeps one row per pair — but neither the distinct's
+    * exchange nor the cached frame carries the 2×64-double payloads
+    * (PlanPostureSpec pins this). */
+  private def scoredCandidates(hits: DataFrame): DataFrame =
+    hits.filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"),
+        Similarity.dot(col("qe"), col("ne")).as("cos"))
+      .distinct()
 
   /** The standing IVF inverted index: every corpus vector exploded to
     * its top-[[IvfAssignN]] cells — memoized AND CACHED per (session,
@@ -215,12 +236,12 @@ object SimilarityQueries extends QueryPack {
         .select(col("vec_id"), col("ne"), explode(col("cells")).as("cell"))
         .cache())
 
-  /** Distinct (q_id, qe, vec_id, ne) IVF candidates: corpus indexed in
+  /** Scored (q_id, vec_id, cos) IVF candidates: corpus indexed in
     * its top-`IvfAssignN` cells, queries probe their top-`IvfProbes`
     * cells. Assignment is one map-side kernel per row
     * ([[Similarity.assignCells]] — no crossJoin/window, and no centroid
-    * literal in the plan); the only shuffle is the cell equi-join
-    * against the BROADCAST probe set. */
+    * literal in the plan); the corpus meets the BROADCAST probe set in
+    * a cell equi-join, then [[scoredCandidates]]. */
   private def buildIvfCandidates(s: SparkSession, d: String): DataFrame =
     ivfCandidatesFrom(corpusCells(s, d), centroids(s, d),
       prepped(s, d).filter(isQuery(s, d)))
@@ -228,17 +249,16 @@ object SimilarityQueries extends QueryPack {
   /** IVF candidates from EXPLICIT index artifacts — the seam that lets
     * a session probe a loaded ([[graft.sinks.ArtifactStore]]) index it
     * did not build; [[buildIvfCandidates]] is this applied to the
-    * in-memory artifacts. `queries` is a (vec_id, ne) frame. */
+    * in-memory artifacts, and q111's micro-batch search applies it to
+    * each batch. `queries` is a (vec_id, ne) frame; the result is the
+    * scored (q_id, vec_id, cos) frame of [[scoredCandidates]]. */
   private[graft] def ivfCandidatesFrom(cells: DataFrame,
       cents: Seq[Array[Double]], queries: DataFrame): DataFrame = {
     val probes = queries
       .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
       .select(col("vec_id").as("q_id"), col("ne").as("qe"),
         explode(col("cells")).as("cell"))
-    cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("qe"), col("vec_id"), col("ne"))
-      .distinct()
+    scoredCandidates(cells.join(broadcast(probes), Seq("cell")))
   }
 
   /** The standing IVF artifacts (inverted index + centroid matrix) for
@@ -322,17 +342,6 @@ object SimilarityQueries extends QueryPack {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** Top-k per query over a (q_id, qe, vec_id, ne) candidate frame.
-    * The cosine is computed MAP-SIDE while the vectors are in hand and
-    * the frame is projected to (q_id, vec_id, cos) before the window's
-    * exchange (r21, guide §2.3): the 2×64-double payloads never cross
-    * a shuffle — same rows, same ranking, 16-byte keys + one double
-    * instead of ~1 KB per row. */
-  private def topK(cand: DataFrame, k: Int): DataFrame =
-    rankTopK(
-      cand.withColumn("cos", Similarity.dot(col("qe"), col("ne")))
-        .select(col("q_id"), col("vec_id"), col("cos")), k)
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- Exact baseline: brute-force cosine top-3 per query vector ----
@@ -340,10 +349,10 @@ object SimilarityQueries extends QueryPack {
       bruteForceTop3(s, d).orderBy(col("q_id"), col("rn"))),
 
     // ---- ANN path 1: multi-table multi-probe sign-LSH top-3 ----
-    "q39_ann_lsh" -> ((s, d) => topK(lshCandidates(s, d), 3)),
+    "q39_ann_lsh" -> ((s, d) => rankTopK(lshCandidates(s, d), 3)),
 
     // ---- ANN path 2: k-means IVF, multi-assign + multi-probe top-3 ----
-    "q50_ann_ivf" -> ((s, d) => topK(ivfCandidates(s, d), 3)),
+    "q50_ann_ivf" -> ((s, d) => rankTopK(ivfCandidates(s, d), 3)),
 
     // ---- Embedding-cosine near-pair mining via 4-plane LSH buckets.
     //      Candidates come from the guarded pairsFromBuckets (q36
@@ -392,11 +401,7 @@ object SimilarityQueries extends QueryPack {
     //      against the float exact top-3, so the compression's quality
     //      cost is a measured number like the index recalls. ----
     "q62_int8_recall" -> ((s, d) => {
-      val e = prepped(s, d)
-        .withColumn("scale", aggregate(col("ne"), lit(0.0),
-          (m, x) => greatest(m, abs(x))))
-        .withColumn("q8", transform(col("ne"),
-          x => round(x * 127.0 / col("scale"))))
+      val e = int8Corpus(s, d)
       val q = e.filter(isQuery(s, d))
         .select(col("vec_id").as("q_id"), col("q8").as("qq8"),
           col("scale").as("qscale"))
@@ -424,14 +429,10 @@ object SimilarityQueries extends QueryPack {
     //      compression, with the COMBINED recall measured against the
     //      float exact baseline. ----
     "q64_ivf_int8_recall" -> ((s, d) => {
-      val q8x = prepped(s, d)
-        .withColumn("scale", aggregate(col("ne"), lit(0.0),
-          (m, x) => greatest(m, abs(x))))
-        .withColumn("q8", transform(col("ne"),
-          x => round(x * 127.0 / col("scale"))))
-        .select(col("vec_id"), col("scale"), col("q8"))
-      val qz = q8x.select(col("vec_id").as("q_id"), col("q8").as("qq8"),
-        col("scale").as("qscale"))
+      val q8x = int8Corpus(s, d)
+      val qz = q8x.filter(isQuery(s, d))
+        .select(col("vec_id").as("q_id"), col("q8").as("qq8"),
+          col("scale").as("qscale"))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(round(col("cosq"), 6).desc, col("vec_id"))
       val top = ivfCandidates(s, d).select(col("q_id"), col("vec_id"))
@@ -699,29 +700,18 @@ object SimilarityQueries extends QueryPack {
   )
 
   /** q111's per-micro-batch search: raw (vec_id, embedding) queries →
-    * top-3 neighbours per query, with the wave. Candidates are scored
-    * map-side while the vectors are in hand, THEN deduped and ranked on
-    * the narrow (q_id, vec_id, cos) rows (guide §2.3): multi-probe
-    * duplicates carry identical payloads, so their cosines are
-    * identical and the deduped set equals a distinct-then-score one —
-    * but neither the distinct nor the window exchange ships the
-    * 2×64-double payloads (PlanPostureSpec pins this). */
+    * top-3 neighbours per query, with the wave. The batch is probed
+    * against the standing index by the same [[ivfCandidatesFrom]] the
+    * batch IVF search uses, so neither the distinct nor the rank
+    * exchange ships the 2×64-double payloads (PlanPostureSpec pins
+    * this). */
   private[graft] def annSearchBatch(s: SparkSession, d: String)
       : DataFrame => DataFrame = {
     val idx = corpusCells(s, d)
     val cents = centroids(s, d)
-    batch => {
-      val probes = Similarity.withNormalized(batch, "embedding")
-        .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
-        .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-          explode(col("cells")).as("cell"))
-      val cand = idx.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", Similarity.dot(col("qe"), col("ne")))
-        .select(col("q_id"), col("vec_id"), col("cos"))
-        .distinct()
-      rankTopK(cand, 3).withColumn("wave", col("q_id") % 2)
-    }
+    batch => rankTopK(ivfCandidatesFrom(idx, cents,
+        Similarity.withNormalized(batch, "embedding").select(col("vec_id"), col("ne"))), 3)
+      .withColumn("wave", col("q_id") % 2)
   }
 
   /** Staged (vec_id, raw embedding) parquet of the evaluation cohort in
@@ -789,7 +779,10 @@ object SimilarityQueries extends QueryPack {
   }
 
   /** Multi-table multi-probe LSH candidate CTEs, ending in `endName`
-    * (q_id, qe, vec_id, ne). Mirrors [[lshCandidates]] generically over
+    * (q_id, qe, vec_id, ne): the probe hits [[lshCandidates]] scores.
+    * An independent formulation — it dedups the vectors and the tail
+    * scores after, where the engine scores before its distinct (the
+    * same rows, since vec_id is unique). Generic over
     * (AnnTables, AnnPlanes, AnnFlips): per-table projections, sign
     * buckets, and AnnFlips lowest-rounded-|margin| bit flips per table.
     * The flip chain uses DuckDB lateral aliases: f_k = first position
@@ -863,7 +856,8 @@ object SimilarityQueries extends QueryPack {
   }
 
   /** k-means IVF candidate CTEs, ending in `endName` (q_id, qe, vec_id,
-    * ne). Mirrors [[ivfCandidates]]; every float op is the same
+    * ne): the probe hits [[ivfCandidates]] scores, deduped before the
+    * tail scores them (as in [[lshCandCte]]). Every float op is the same
     * sequential fold, so the centroids are bit-identical across
     * engines. */
   private def ivfCandCte(endName: String): String = {

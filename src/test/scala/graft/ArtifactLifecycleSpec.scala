@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.ext.{BloomPrune, Dedup, Similarity}
+import graft.ext.{BloomPrune, Dedup}
 import graft.queries.SimilarityQueries
 import graft.runtime.FrameCache
 import graft.sinks.ArtifactStore
@@ -144,8 +144,7 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     def topk(cand: org.apache.spark.sql.DataFrame) = {
       val w = Window.partitionBy(col("q_id"))
         .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-      cand.withColumn("cos", Similarity.dot(col("qe"), col("ne")))
-        .withColumn("rk", row_number().over(w))
+      cand.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5)
         .select(col("q_id"), col("rk"), col("vec_id"), round(col("cos"), 6).as("cos"))
         .orderBy(col("q_id"), col("rk")).collect().map(_.toSeq).toSeq

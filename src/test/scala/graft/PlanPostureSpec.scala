@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, Literal}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
@@ -131,6 +133,33 @@ class PlanPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
       // `_w0` is the window's derived round(cos, 6) sort key
       assert(out.map(_.name).filterNot(_.startsWith("_w")).toSet ===
         Set("q_id", "vec_id", "cos"))
+    }
+  }
+
+  /** Every shuffle exchange of `p`, through AQE wrappers and query
+    * stages but not into another cached frame's lineage. */
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+    case q: QueryStageExec => shuffles(q.plan)
+    case _: InMemoryTableScanExec => Nil
+    case e: ShuffleExchangeLike => e +: e.children.flatMap(shuffles)
+    case other => other.children.flatMap(shuffles)
+  }
+
+  test("q39/q50: the cached ANN candidates hold (q_id, vec_id, cos) — no vector column, no vector exchange") {
+    for ((q, key) <- Seq("q39_ann_lsh" -> "lsh-candidates", "q50_ann_ivf" -> "ivf-candidates")) {
+      plan(q) // builds the memoized candidate frame
+      val cands = graft.runtime.FrameCache.peek[DataFrame](spark, key, sf)
+        .getOrElse(fail(s"$q left no $key entry"))
+      assert(!cands.schema.exists(_.dataType.isInstanceOf[ArrayType]),
+        s"$key caches vectors: ${cands.schema.simpleString}")
+      val cached = cands.select(col("*")).queryExecution.optimizedPlan
+        .collectFirst { case r: InMemoryRelation => r.cachedPlan }
+        .getOrElse(fail(s"$key is not cached"))
+      val exchanges = shuffles(cached)
+      assert(exchanges.nonEmpty, s"no distinct exchange in the $key build:\n$cached")
+      exchanges.foreach(e => assert(!e.output.exists(_.dataType.isInstanceOf[ArrayType]),
+        s"an exchange of the $key build ships vectors: ${e.output}"))
     }
   }
 

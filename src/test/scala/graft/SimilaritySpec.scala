@@ -298,6 +298,111 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       cells(cents.updated(0, Array(0.0, 0.0, 0.0, 0.0))).queryExecution.analyzed))
   }
 
+  test("HalfUp.round is bit-identical to BigDecimal HALF_UP on random, half-way and extreme doubles") {
+    import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+    def reference(d: Double, scale: Int): Double =
+      if (d.isNaN || d.isInfinite) d
+      else JBigDecimal.valueOf(d).setScale(scale, RoundingMode.HALF_UP).doubleValue()
+    val rnd = new scala.util.Random(23)
+    def around(d: Double): Seq[Double] =
+      Iterator.iterate(d)(math.nextDown).slice(1, 4).toSeq ++
+        Iterator.iterate(d)(math.nextUp).take(4)
+    val halfWays = for {
+      scale <- Seq(0, 6)
+      n <- Seq.fill(20000)(rnd.nextInt(2000000).toLong) ++ Seq(0L, 1L, 123456L, 999999L)
+      h = (n + 0.5) / math.pow(10, scale)
+      d <- around(h) ++ around(s"$n.5E-$scale".toDouble)
+    } yield d
+    val extremes = Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      java.lang.Double.MIN_NORMAL, 1e-310, -2.5e-320, Double.MaxValue, Double.MinValue,
+      4503599627370496.0 / 1e6, 4503599627370495.5, 4503599627370497.0, 1e15, -1e15 - 0.5,
+      1e300, 5e-7, -5e-7, 0.1234565, -0.7654325, 2.0000005, 1234.5678905, 0.5, -0.5, 2.5,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity) ++
+      Seq.fill(2000)(java.lang.Double.longBitsToDouble(rnd.nextLong() >>> 12)) // subnormals
+    val randoms = Seq.fill(200000)(rnd.nextDouble() * 2 - 1) ++
+      (-12 to 18).flatMap(e => Seq.fill(5000)(rnd.nextGaussian() * math.pow(10, e))) ++
+      Seq.fill(100000)(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    val bits = java.lang.Double.doubleToRawLongBits _
+    for (scale <- Seq(0, 6)) {
+      val bad = (halfWays ++ extremes ++ randoms).filter(d =>
+        bits(graft.functions.HalfUp.round(d, scale)) != bits(reference(d, scale)))
+      assert(bad.isEmpty, s"scale $scale differs at ${bad.take(5)}")
+    }
+    // zero results are +0.0 on both paths, from either sign
+    assert(bits(graft.functions.HalfUp.round(-1e-9, 6)) == bits(0.0))
+    assert(bits(graft.functions.HalfUp.round(-0.4, 0)) == bits(0.0))
+  }
+
+  /** The built-in composition `Similarity.int8Quantized` replaced. */
+  private def referenceInt8(df: DataFrame): DataFrame =
+    df.withColumn("scale", aggregate(col("ne"), lit(0.0), (m, x) => greatest(m, abs(x))))
+      .withColumn("q8", transform(col("ne"), x => round(x * 127.0 / col("scale"))))
+
+  private type Int8Bits = Seq[(Option[Long], Option[Seq[Option[Long]]])]
+
+  /** (scale, q8) per row, as raw bits, from the kernel and from the
+    * composition in session `s`. */
+  private def int8Bits(s: SparkSession, rows: Seq[Option[Seq[java.lang.Double]]])
+      : (Int8Bits, Int8Bits) = {
+    val ansi = s.conf.get("spark.sql.ansi.enabled").toBoolean
+    def raw(d: java.lang.Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    def bits(df: DataFrame): Int8Bits = df.select(col("id"), col("scale"), col("q8"))
+      .orderBy(col("id")).collect().toSeq.map { r =>
+        (Option(r.getAs[java.lang.Double](1)).map(raw),
+          Option(r.getSeq[java.lang.Double](2)).map(_.map(x => Option(x).map(raw))))
+      }
+    val frame = s.createDataFrame(rows.zipWithIndex.map(_.swap)).toDF("id", "ne").repartition(2)
+    (bits(Similarity.int8Quantized(frame, "ne", ansi)), bits(referenceInt8(frame)))
+  }
+
+  /** A session with whole-stage codegen and generated projections on or
+    * off, and `spark.sql.ansi.enabled` as given. */
+  private def int8Session(codegen: Boolean, ansi: Boolean): SparkSession = {
+    val s = spark.newSession()
+    if (!codegen) {
+      s.conf.set("spark.sql.codegen.wholeStage", "false")
+      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    }
+    s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+    s
+  }
+
+  test("int8Quantized is bit-identical to the greatest/round composition, codegen'd and interpreted, ANSI on and off") {
+    val rnd = new scala.util.Random(31)
+    def v(xs: java.lang.Double*): Option[Seq[java.lang.Double]] = Some(xs.toSeq)
+    val nan = Double.NaN; val inf = Double.PositiveInfinity
+    val rows = Seq.fill(300)(v(Seq.fill(64)(java.lang.Double.valueOf(rnd.nextGaussian())): _*)) ++
+      Seq(v(2.0, 1.0, -1.0, 0.5), v(-2.0, -1.0, 0.25, -0.0), // ±63.5, 31.75: half-way codes
+        v(1.0, 0.5 / 127, -0.5 / 127, 1.5 / 127), v(3.0, 1.0, 2.0, -1.5),
+        v(1.0, null, -0.3), v(null, 0.7), v(nan, 1.0), v(0.5, inf, -1.0),
+        v(-inf, 0.2), v(5e-324, 1e-310), v(1e300, -3e299, 1e-300),
+        v(), v(null, null), None)
+    val sessions = for (codegen <- Seq(true, false); ansi <- Seq(true, false))
+      yield (codegen, ansi) -> int8Session(codegen, ansi)
+    for (((codegen, ansi), s) <- sessions) {
+      val (got, want) = int8Bits(s, rows)
+      assert(got === want, s"codegen=$codegen ansi=$ansi")
+    }
+    // a zero scale: every code null with ANSI off, DIVIDE_BY_ZERO with it on
+    val zeros = Seq(v(0.0, -0.0), v(-0.0, null))
+    def divideByZero(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(_.contains("DIVIDE_BY_ZERO")))
+    for (((codegen, ansi), s) <- sessions) {
+      if (ansi) for (kernel <- Seq(true, false)) {
+        val frame = s.createDataFrame(zeros.zipWithIndex.map(_.swap)).toDF("id", "ne").repartition(2)
+        val q = if (kernel) Similarity.int8Quantized(frame, "ne", ansi = true)
+          else referenceInt8(frame)
+        val e = intercept[Exception](q.collect())
+        assert(divideByZero(e), s"codegen=$codegen kernel=$kernel: $e")
+      } else {
+        val (got, want) = int8Bits(s, zeros)
+        assert(got === want, s"codegen=$codegen")
+        assert(got.forall(_._2.exists(_.forall(_.isEmpty))), s"codegen=$codegen: $got")
+      }
+    }
+  }
+
   test("planeComponent matches the SQL md5 definition") {
     // the independent reference: the documented SQL-portable definition
     // ('0x'||substr(md5(p||','||i),1,15))::BIGINT % 2, re-derived here
