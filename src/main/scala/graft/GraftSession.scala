@@ -83,7 +83,8 @@ object GraftSession {
     *    sf-proportional shuffle keeps partitions in the tens-of-MB
     *    range where AQE coalescing (still on) can merge the small
     *    ones. AQE's skew split then has ≥3 mapper ranges per reduce
-    *    partition to slice — the precondition SkewBench measures.
+    *    partition to slice — the precondition BASELINE.md's skew
+    *    numbers (from a one-off measurement main, since deleted) rest on.
     *  - maxPartitionBytes stays at Spark's 128 MB default: scan tasks
     *    of ~1 core-minute; the reference pins 64 MB on a 4-core
     *    cluster for the same reason at half the per-task budget.

@@ -95,12 +95,12 @@ object Dedup {
     * |A∪B| = |A|+|B|−|A∩B|. The division stays a Catalyst composition
     * so promotion/zero-divide semantics are unchanged.
     *
-    * ==SIGNATURE NARROWED (r5)== `array<bigint>` inputs ONLY — the
-    * kernel's analysis-time type check rejects anything else (element
-    * types aren't knowable when this Column is constructed, so dispatch
-    * can't happen here). For string/int/other element types use
-    * [[jaccardAny]], the built-in composition with identical semantics
-    * on any comparable element type. */
+    * `array<bigint>` inputs ONLY — the kernel's analysis-time type
+    * check rejects anything else (element types aren't knowable when
+    * this Column is constructed, so dispatch can't happen here). For
+    * string/int/other element types use [[jaccardAny]], the built-in
+    * composition with identical semantics on any comparable element
+    * type. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.IntersectSizeLong(
@@ -117,10 +117,6 @@ object Dedup {
     val inter = size(array_intersect(a, b))
     inter.cast("double") / (size(a) + size(b) - inter)
   }
-
-  /** Alias retained for the kernel specs' bit-identity baseline. */
-  private[graft] def jaccardComposed(a: Column, b: Column): Column =
-    jaccardAny(a, b)
 
   /** Token-hash array for SimHash — materialize as a column before
     * calling [[simhashFromHashes]] (one md5 per token; passing the
@@ -491,7 +487,7 @@ object Dedup {
   private def shingleHashFrame(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, cache: Boolean): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    // hs is SORTED (r22, guide §1.2 per-task work): the verify kernel
+    // hs is SORTED (per-task work): the verify kernel
     // (IntersectSizeLong.mergeCount) sorts both arrays per PAIR — one
     // doc's array was re-sorted once per candidate pair it appears in
     // (sf0.1 q37 shape: ~434k pair-side sorts for ~15k docs). Sorting

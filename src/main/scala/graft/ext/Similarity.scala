@@ -256,7 +256,7 @@ object Similarity {
     * expression against the literal codebooks — the encode step a
     * 100 TB store runs once at ingest.
     *
-    * Expression shape (r21, guide §1.2 per-task work): HOF lambdas run
+    * Expression shape (per-task work): HOF lambdas run
     * interpreted, and inlining `dist2(slice(ne, ...), ce)` re-evaluated
     * the subvector slice and its self-dot once PER CENTROID (16
     * subspaces × 64 centroids × 3 dots + 2 array copies per row). The
@@ -296,19 +296,24 @@ object Similarity {
       element_at(element_at(luts, m + 1), element_at(codes, m + 1) + 1))
       .reduce(_ + _)
 
+  /** The top `k` rows per `q_id` of pre-scored (q_id, vec_id, `score`)
+    * rows, numbered 1..k in `rank`. The order is the cross-engine total
+    * order every ANN query and oracle shares: score rounded to 6dp
+    * descending, vec_id tie-break. */
+  def topByScore(scored: DataFrame, score: String, k: Int,
+      rank: String = "rn"): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(round(col(score), 6).desc, col("vec_id"))
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
   /** Exact brute-force cosine top-k over PRE-NORMALIZED vectors:
     * broadcast `queries` (q_id, qe) against the corpus (vec_id, ne),
-    * rank per query. Rank key is cosine rounded to 6dp with id
-    * tie-break so ordering is reproducible across engines. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val pairs = corpus.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", dot(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-    pairs.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    * rank per query by [[topByScore]]. */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topByScore(corpus.crossJoin(broadcast(queries))
+        .filter(col("vec_id") =!= col("q_id"))
+        .withColumn("cos", dot(col("qe"), col("ne"))), "cos", k)
       .select(col("q_id"), col("rn"), col("vec_id"),
         round(col("cos"), 4).as("cos"))
-  }
 }

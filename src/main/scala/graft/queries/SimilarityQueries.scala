@@ -5,7 +5,6 @@ import graft.ext.Similarity
 import graft.runtime.FrameCache
 import graft.sinks.ArtifactStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -24,18 +23,19 @@ import java.nio.file.Files
   * iterations on the vec_id%2 sample, 2-cell assignment, 12-cell probe)
   * reaches recall ~0.80 at ~4.4× candidate pruning. LSH (12 tables ×
   * 8 planes, each probed at home + the 4 lowest-margin bit flips)
-  * reaches 0.65-0.72 at ~4.4× — lifted from 0.43 (r3's 2×4+1 config)
-  * by spending the same candidate budget on more independent tables at
-  * deeper buckets. PQ (q65) compresses to 96-bit codes and re-ranks an
-  * ADC shortlist — recall 0.92-0.96. Sizing rule at scale: buckets/
-  * table (2^AnnPlanes) and IVF cells are capacity knobs sized to
-  * corpus/target-bucket-size, like shuffle partitions — the layout
-  * (map-side encode, broadcast probes, bucket equi-join) is what's
-  * fixed, not the keyspace.
+  * reaches 0.65-0.72 at ~4.4× — lifted from 0.43 (an earlier 2-table ×
+  * 4-plane, 1-flip config) by spending the same candidate budget on
+  * more independent tables at deeper buckets. PQ (q65) compresses to
+  * 96-bit codes and re-ranks an ADC shortlist — recall 0.92-0.96.
+  * Sizing rule at scale: buckets/table (2^AnnPlanes) and IVF cells are
+  * capacity knobs sized to corpus/target-bucket-size, like shuffle
+  * partitions — the layout (map-side encode, broadcast probes, bucket
+  * equi-join) is what's fixed, not the keyspace. The DuckDB oracle SQL
+  * is [[SimilarityOracles]]; the knobs below are shared with it.
   */
 object SimilarityQueries extends QueryPack {
 
-  private val Dims = 64       // embeddings.embedding is 64-dim (FIXTURES.md §6)
+  private[queries] val Dims = 64       // embeddings.embedding is 64-dim (FIXTURES.md §6)
   // Evaluation query budget: the recall/cost queries sample a FIXED
   // number of query vectors (~TargetQueries) by deriving the id modulus
   // from the corpus count — so the exact brute-force baseline they
@@ -45,20 +45,21 @@ object SimilarityQueries extends QueryPack {
   // the derived modulus IS 50, so measured recalls are comparable across
   // rounds. The modulus (not a top-N) keeps the set deterministic and
   // cheap to mirror in SQL.
-  private val TargetQueries = 100
-  private val AnnPlanes = 8   // planes per LSH table → 256 buckets/table
-  private val AnnTables = 12  // table t uses global planes t*AnnPlanes+j
-  private val AnnFlips = 4    // extra probes/table: flip the 4 lowest-margin bits
-  private val PairPlanes = 4  // 16 buckets for pair mining (q40)
-  private val PqSubs = 16     // PQ subspaces (4 dims each)
-  private val PqK = 64        // centroids per subquantizer → 6 bits × 16 = 96-bit code
-  private val PqIters = 2     // Lloyd iterations per subquantizer
-  private val PqRerank = 30   // ADC shortlist size re-ranked with exact dots
-  private val IvfK = 96       // IVF cells
-  private val IvfIters = 3    // Lloyd iterations
-  private val SemTau = 0.3    // SemDeDup within-cluster cosine threshold
-  private val IvfAssignN = 2  // corpus multi-assignment (top-2 cells)
-  private val IvfProbes = 12  // query probes (top-12 cells)
+  private[queries] val TargetQueries = 100
+  private[queries] val AnnPlanes = 8   // planes per LSH table → 256 buckets/table
+  private[queries] val AnnTables = 12  // table t uses global planes t*AnnPlanes+j
+  private[queries] val AnnFlips = 4    // extra probes/table: flip the 4 lowest-margin bits
+  private[queries] val PairPlanes = 4  // 16 buckets for pair mining (q40)
+  private[queries] val PqSubs = 16     // PQ subspaces (4 dims each)
+  private[queries] val PqK = 64        // centroids per subquantizer → 6 bits × 16 = 96-bit code
+  private[queries] val PqIters = 2     // Lloyd iterations per subquantizer
+  private[queries] val PqRerank = 30   // ADC shortlist size re-ranked with exact dots
+  private[queries] val IvfK = 96       // IVF cells
+  private[queries] val IvfIters = 3    // Lloyd iterations
+  private[queries] val SemTau = 0.3    // SemDeDup within-cluster cosine threshold
+  private[queries] val IvfAssignN = 2  // corpus multi-assignment (top-2 cells)
+  private[queries] val IvfProbes = 12  // query probes (top-12 cells)
+  private val OutlierCos = 0.0 // flag vectors anti-correlated with their domain
 
   /** (vec_id, ne [, bucket]) — normalized corpus, optional LSH bucket.
     *
@@ -284,7 +285,8 @@ object SimilarityQueries extends QueryPack {
         .select(col("doc_id").as("vec_id"), col("source")), Seq("vec_id"))
 
   /** Per-source (source, n_vecs, mean) centroid table — the frame q87
-    * reports and q109 scores against. Two modes (VERDICT r8 #1):
+    * reports and q109 scores against. Two modes, because the exact one
+    * does not scale:
     *
     *  - `exact = true` (the local/Verify default): ORDER-PINNED
     *    sequential fold — array_sort(collect_list(struct(vec_id, ne)))
@@ -330,16 +332,56 @@ object SimilarityQueries extends QueryPack {
   private def exactMeans(s: SparkSession): Boolean =
     s.conf.get("spark.graft.exactMeans", "true").toBoolean
 
-  /** Top-k per query over PRE-SCORED (q_id, vec_id, cos) rows,
-    * cross-engine total order (rounded cosine desc, vec_id tie-break). */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+  /** Top-k per query over PRE-SCORED (q_id, vec_id, cos) rows, as
+    * (q_id, rn, vec_id, cos) in rank order. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    Similarity.topByScore(scored, "cos", k)
       .select(col("q_id"), col("rn"), col("vec_id"),
         round(col("cos"), 4).as("cos"))
       .orderBy(col("q_id"), col("rn"))
+
+  /** Recall of each approximate (q_id, vec_id) hit set against the exact
+    * top-3: the exact rows left-join every hit set in the given order,
+    * then one row of `n_true`, each hit count and each rounded recall.
+    * `evals` are (count column, recall column, hits); a hit set's join
+    * flag carries its count column's name. */
+  private def recallVsExact(s: SparkSession, d: String,
+      evals: (String, String, DataFrame)*): DataFrame =
+    evals.foldLeft(bruteForceTop3(s, d).select(col("q_id"), col("vec_id"))) {
+      case (acc, (n, _, hits)) => acc.join(
+        hits.select(col("q_id"), col("vec_id"), lit(1).as(n)),
+        Seq("q_id", "vec_id"), "left")
+    }.agg(count(lit(1)).as("n_true"), evals.map { case (n, _, _) =>
+        sum(coalesce(col(n), lit(0))).as(n) }: _*)
+      .select(col("n_true") +: evals.map(e => col(e._1)) ++: evals.map {
+        case (n, r, _) => round(col(n).cast("double") / col("n_true"), 4).as(r)
+      }: _*)
+
+  /** Int8 brute-force top-3 per query: `pairs` meets the quantized
+    * (vec_id, scale, q8) corpus with the broadcast quantized query set
+    * (q_id, qq8, qscale); each pair is scored by its dequantized dot. */
+  private def int8Top3(s: SparkSession, d: String)(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = int8Corpus(s, d)
+    val q = e.filter(isQuery(s, d))
+      .select(col("vec_id").as("q_id"), col("q8").as("qq8"),
+        col("scale").as("qscale"))
+    Similarity.topByScore(pairs(e, broadcast(q))
+      .withColumn("cosq", Similarity.dot(col("qq8"), col("q8"))
+        * col("qscale") * col("scale") / (127.0 * 127.0)), "cosq", 3)
+  }
+
+  /** The two-stage PQ tail over (q_id, vec_id, qe, ne, codes, luts)
+    * candidate pairs: the ADC top-[[PqRerank]] shortlist (rank `ra`),
+    * re-ranked by exact dots. Returns (exact re-rank top-3, ADC top-3);
+    * both come from the shortlist, whose `ra` ≤ 3 rows are the ADC
+    * top-3. */
+  private def adcRerank(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val short = Similarity.topByScore(pairs.withColumn("adc",
+      Similarity.adcScore(col("codes"), col("luts"), PqSubs)), "adc", PqRerank, "ra")
+    (Similarity.topByScore(
+      short.withColumn("cos", Similarity.dot(col("qe"), col("ne"))), "cos", 3),
+      short.filter(col("ra") <= 3))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -377,22 +419,10 @@ object SimilarityQueries extends QueryPack {
     // ---- ANN quality evaluation: recall of the approximate paths
     //      against the exact brute-force top-3 (the metric an ANN
     //      deployment is judged by). Composes the three queries. ----
-    "q57_ann_recall" -> ((s, d) => {
-      val bf = bruteForceTop3(s, d)
-        .select(col("q_id"), col("vec_id"))
-      val lsh = queries("q39_ann_lsh")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("lsh_hit"))
-      val ivf = queries("q50_ann_ivf")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("ivf_hit"))
-      bf.join(lsh, Seq("q_id", "vec_id"), "left")
-        .join(ivf, Seq("q_id", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("lsh_hit"), lit(0))).as("n_lsh"),
-          sum(coalesce(col("ivf_hit"), lit(0))).as("n_ivf"))
-        .select(col("n_true"), col("n_lsh"), col("n_ivf"),
-          round(col("n_lsh").cast("double") / col("n_true"), 4).as("recall_lsh"),
-          round(col("n_ivf").cast("double") / col("n_true"), 4).as("recall_ivf"))
-    }),
+    "q57_ann_recall" -> ((s, d) =>
+      recallVsExact(s, d,
+        ("n_lsh", "recall_lsh", queries("q39_ann_lsh")(s, d)),
+        ("n_ivf", "recall_ivf", queries("q50_ann_ivf")(s, d)))),
 
     // ---- Int8 scalar quantization: per-vector max-abs scale, each
     //      component rounded to [-127,127] — the 4× memory/bandwidth
@@ -400,58 +430,19 @@ object SimilarityQueries extends QueryPack {
     //      brute-force top-3 on QUANTIZED cosines and reports recall
     //      against the float exact top-3, so the compression's quality
     //      cost is a measured number like the index recalls. ----
-    "q62_int8_recall" -> ((s, d) => {
-      val e = int8Corpus(s, d)
-      val q = e.filter(isQuery(s, d))
-        .select(col("vec_id").as("q_id"), col("q8").as("qq8"),
-          col("scale").as("qscale"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(round(col("cosq"), 6).desc, col("vec_id"))
-      val top = e.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cosq", Similarity.dot(col("qq8"), col("q8"))
-          * col("qscale") * col("scale") / (127.0 * 127.0))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      bruteForceTop3(s, d)
-        .select(col("q_id"), col("vec_id"))
-        .join(top, Seq("q_id", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(col("n_true"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_true"), 4).as("recall_q8"))
-    }),
+    "q62_int8_recall" -> ((s, d) =>
+      recallVsExact(s, d, ("n_hit", "recall_q8", int8Top3(s, d)((e, q) =>
+        e.crossJoin(q).filter(col("vec_id") =!= col("q_id")))))),
 
     // ---- The deployed configuration: IVF pruning over INT8-compressed
     //      inverted lists (candidates from the index, scored on the
     //      quantized vectors) — ~4.4× compute pruning × 4× memory
     //      compression, with the COMBINED recall measured against the
     //      float exact baseline. ----
-    "q64_ivf_int8_recall" -> ((s, d) => {
-      val q8x = int8Corpus(s, d)
-      val qz = q8x.filter(isQuery(s, d))
-        .select(col("vec_id").as("q_id"), col("q8").as("qq8"),
-          col("scale").as("qscale"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(round(col("cosq"), 6).desc, col("vec_id"))
-      val top = ivfCandidates(s, d).select(col("q_id"), col("vec_id"))
-        .join(broadcast(qz), "q_id")
-        .join(q8x, "vec_id")
-        .withColumn("cosq", Similarity.dot(col("qq8"), col("q8"))
-          * col("qscale") * col("scale") / (127.0 * 127.0))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      bruteForceTop3(s, d)
-        .select(col("q_id"), col("vec_id"))
-        .join(top, Seq("q_id", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(col("n_true"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_true"), 4)
-            .as("recall_ivf_q8"))
-    }),
+    "q64_ivf_int8_recall" -> ((s, d) =>
+      recallVsExact(s, d, ("n_hit", "recall_ivf_q8", int8Top3(s, d)((e, q) =>
+        ivfCandidates(s, d).select(col("q_id"), col("vec_id"))
+          .join(q, "q_id").join(e, "vec_id"))))),
 
     // ---- Product quantization (ADC): the 100 TB embedding-store scan
     //      path. Corpus vectors are encoded once into PqSubs argmin
@@ -472,31 +463,11 @@ object SimilarityQueries extends QueryPack {
       val q = e.filter(isQuery(s, d))
         .select(col("vec_id").as("q_id"), col("ne").as("qe"),
           Similarity.pqLuts(col("ne"), cb, Dims).as("luts"))
-      val wA = Window.partitionBy(col("q_id"))
-        .orderBy(round(col("adc"), 6).desc, col("vec_id"))
-      val short = coded.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("adc", Similarity.adcScore(col("codes"), col("luts"), PqSubs))
-        .withColumn("ra", row_number().over(wA))
-        .filter(col("ra") <= PqRerank)
-      val wR = Window.partitionBy(col("q_id"))
-        .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-      val rr = short
-        .withColumn("cos", Similarity.dot(col("qe"), col("ne")))
-        .withColumn("rn", row_number().over(wR))
-      val top3 = rr.filter(col("rn") <= 3)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      val adc3 = rr.filter(col("ra") <= 3)
-        .select(col("q_id"), col("vec_id"), lit(1).as("ahit"))
-      bruteForceTop3(s, d).select(col("q_id"), col("vec_id"))
-        .join(top3, Seq("q_id", "vec_id"), "left")
-        .join(adc3, Seq("q_id", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("ahit"), lit(0))).as("n_adc"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(col("n_true"), col("n_adc"), col("n_hit"),
-          round(col("n_adc").cast("double") / col("n_true"), 4).as("recall_adc"),
-          round(col("n_hit").cast("double") / col("n_true"), 4).as("recall_pq"))
+      val (top3, adc3) = adcRerank(coded.crossJoin(broadcast(q))
+        .filter(col("vec_id") =!= col("q_id")))
+      // the re-rank hits join first; the columns report the ADC stage first
+      recallVsExact(s, d, ("n_hit", "recall_pq", top3), ("n_adc", "recall_adc", adc3))
+        .select("n_true", "n_adc", "n_hit", "recall_adc", "recall_pq")
     }),
 
     // ---- IVFPQ — the production ANN architecture at 100 TB: inverted
@@ -522,32 +493,12 @@ object SimilarityQueries extends QueryPack {
         .select(col("vec_id").as("q_id"), col("ne").as("qe"),
           Similarity.pqLuts(col("ne"), cb, Dims).as("luts"),
           explode(col("cells")).as("cell"))
-      val wA = Window.partitionBy(col("q_id"))
-        .orderBy(round(col("adc"), 6).desc, col("vec_id"))
-      val short = idx.join(broadcast(probes), Seq("cell"))
+      val (top3, adc3) = adcRerank(idx.join(broadcast(probes), Seq("cell"))
         .filter(col("vec_id") =!= col("q_id"))
-        .dropDuplicates("q_id", "vec_id") // multi-assign/probe dups carry identical payloads
-        .withColumn("adc", Similarity.adcScore(col("codes"), col("luts"), PqSubs))
-        .withColumn("ra", row_number().over(wA))
-        .filter(col("ra") <= PqRerank)
-      val wR = Window.partitionBy(col("q_id"))
-        .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-      val rr = short
-        .withColumn("cos", Similarity.dot(col("qe"), col("ne")))
-        .withColumn("rn", row_number().over(wR))
-      val top3 = rr.filter(col("rn") <= 3)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      val adc3 = rr.filter(col("ra") <= 3)
-        .select(col("q_id"), col("vec_id"), lit(1).as("ahit"))
-      bruteForceTop3(s, d).select(col("q_id"), col("vec_id"))
-        .join(top3, Seq("q_id", "vec_id"), "left")
-        .join(adc3, Seq("q_id", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("ahit"), lit(0))).as("n_adc"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hit"))
-        .select(col("n_true"), col("n_adc"), col("n_hit"),
-          round(col("n_adc").cast("double") / col("n_true"), 4).as("recall_adc_ivf"),
-          round(col("n_hit").cast("double") / col("n_true"), 4).as("recall_ivfpq"))
+        .dropDuplicates("q_id", "vec_id")) // multi-assign/probe dups carry identical payloads
+      recallVsExact(s, d, ("n_hit", "recall_ivfpq", top3),
+          ("n_adc", "recall_adc_ivf", adc3))
+        .select("n_true", "n_adc", "n_hit", "recall_adc_ivf", "recall_ivfpq")
     }),
 
     // ---- Streaming index ingest — the 100 TB vector store's WRITE
@@ -730,444 +681,5 @@ object SimilarityQueries extends QueryPack {
       s"$tmp/in"
     })
 
-  private val OutlierCos = 0.0 // flag vectors anti-correlated with their domain
-
-  // ---------------------------------------------------------------- oracles
-
-  /** SQL mirror of [[queryModulus]]: corpus_count / TargetQueries, ≥1
-    * (DuckDB `//` is integer division, same as JVM Long division for
-    * non-negative operands). */
-  private def qModSql: String =
-    s"(SELECT greatest(1, count(*) // $TargetQueries) FROM embeddings)"
-
-  /** Sequential-fold dot product (matches Spark's aggregate with 0.0
-    * init: 0.0 + x1 == x1 exactly, so list_reduce's x1-init agrees). */
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_transform(generate_series(1, len($a)), " +
-      s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE), (acc, x) -> acc + x)"
-
-  /** Squared L2 distance, mirroring [[Similarity.dist2]]'s exact
-    * left-associated `|a|^2 - 2*(a.b) + |b|^2` expression. */
-  private def d2Sql(a: String, b: String): String =
-    s"(${dotSql(a, a)} - 2 * ${dotSql(a, b)} + ${dotSql(b, b)})"
-
-  /** Projection onto the ±1 md5-derived hyperplane `p` (i is 1-based in
-    * SQL, the plane component uses the 0-based dim index). */
-  private def projSql(e: String, p: Int): String =
-    s"list_reduce(list_transform(generate_series(1, len($e)), " +
-      s"i -> $e[i]::DOUBLE * (CASE WHEN ('0x' || substr(md5('$p,' || (i-1)::VARCHAR), 1, 15))::BIGINT % 2 = 1 " +
-      s"THEN 1.0 ELSE -1.0 END)), (acc, x) -> acc + x)"
-
-  private def bucketSql(e: String, planes: Int): String =
-    (0 until planes)
-      .map(p => s"(CASE WHEN ${projSql(e, p)} >= 0 THEN ${1 << p} ELSE 0 END)")
-      .mkString("(", " + ", ")")
-
-  /** Normalized-corpus CTEs: nrm materialized, then unit vectors (same
-    * two-step float math as the Spark side). */
-  private def preppedCte(planes: Int): String = {
-    val bucketCol =
-      if (planes > 0) s",\n    ${bucketSql("embedding", planes)} AS bucket"
-      else ""
-    s"""raw AS (SELECT vec_id, embedding,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS nrm$bucketCol
-       |  FROM embeddings),
-       |e AS (SELECT vec_id,
-       |    list_transform(embedding, x -> x::DOUBLE / nrm) AS ne
-       |    ${if (planes > 0) ", bucket" else ""}
-       |  FROM raw)""".stripMargin
-  }
-
-  /** Multi-table multi-probe LSH candidate CTEs, ending in `endName`
-    * (q_id, qe, vec_id, ne): the probe hits [[lshCandidates]] scores.
-    * An independent formulation — it dedups the vectors and the tail
-    * scores after, where the engine scores before its distinct (the
-    * same rows, since vec_id is unique). Generic over
-    * (AnnTables, AnnPlanes, AnnFlips): per-table projections, sign
-    * buckets, and AnnFlips lowest-rounded-|margin| bit flips per table.
-    * The flip chain uses DuckDB lateral aliases: f_k = first position
-    * of the list min with positions f_0..f_{k-1} masked to 1e18 — the
-    * same (abs, index) total order as the Spark array_sort. */
-  private def lshCandCte(endName: String): String = {
-    def pjList(t: Int) = (0 until AnnPlanes)
-      .map(j => projSql("ne", t * AnnPlanes + j))
-      .mkString("[", ",\n      ", "]")
-    def bSql(pj: String) = (0 until AnnPlanes)
-      .map(j => s"(CASE WHEN $pj[${j + 1}] >= 0 THEN ${1 << j} ELSE 0 END)")
-      .mkString("(", " + ", ")")
-    val ts = 0 until AnnTables
-    val pjCols = ts.map(t => s"${pjList(t)} AS pj$t").mkString(",\n    ")
-    val bCols = ts.map(t => s"${bSql(s"pj$t")} AS b$t").mkString(",\n    ")
-    val caseB = ts.map(t => s"WHEN $t THEN b$t")
-      .mkString("CASE tt.t ", " ", " END")
-    val flipCols = ts.flatMap { t =>
-      s"list_transform(pj$t, x -> round(abs(x), 6)) AS ap${t}_0" +:
-        (0 until AnnFlips).flatMap { k =>
-          val f = s"list_position(ap${t}_$k, list_min(ap${t}_$k)) - 1 AS f${t}_$k"
-          if (k == AnnFlips - 1) Seq(f)
-          else Seq(f, s"list_transform(generate_series(1, $AnnPlanes), " +
-            s"i -> CASE WHEN i - 1 = f${t}_$k THEN 1e18 ELSE ap${t}_$k[i] END) " +
-            s"AS ap${t}_${k + 1}")
-        }
-    }.mkString(",\n    ")
-    val prbSelects = ts.flatMap { t =>
-      s"SELECT q_id, qe, $t AS t, b$t AS bucket FROM qf" +:
-        (0 until AnnFlips).map(k =>
-          s"SELECT q_id, qe, $t, xor(b$t, 1 << f${t}_$k) FROM qf")
-    }.mkString("\n  UNION ALL ")
-    s"""px AS (SELECT vec_id, ne, $pjCols FROM e),
-       |bx AS (SELECT vec_id, ne, ${ts.map(t => s"pj$t").mkString(", ")},
-       |    $bCols FROM px),
-       |lidx AS (SELECT vec_id, ne, tt.t, $caseB AS bucket
-       |  FROM bx, (VALUES ${ts.map(t => s"($t)").mkString(", ")}) tt(t)),
-       |qf AS (SELECT vec_id AS q_id, ne AS qe, ${ts.map(t => s"b$t").mkString(", ")},
-       |    $flipCols
-       |  FROM bx WHERE vec_id % $qModSql = 0),
-       |prb AS ($prbSelects),
-       |$endName AS (SELECT DISTINCT p.q_id, p.qe, i.vec_id, i.ne
-       |  FROM prb p JOIN lidx i ON p.t = i.t AND p.bucket = i.bucket
-       |  WHERE i.vec_id != p.q_id)""".stripMargin
-  }
-
-  /** Lloyd-training CTEs shared by the IVF and SemDeDup oracles:
-    * `smp`, `c0` … `c<IvfIters>` (the trained centroids), mirroring
-    * [[Similarity.trainKmeans]] with iterations unrolled. */
-  private def kmeansTrainCtes: String = {
-    def iter(i: Int): String = {
-      val prev = s"c${i - 1}"
-      s"""a$i AS (SELECT vec_id, ne, c FROM (
-         |  SELECT s.vec_id, s.ne, cc.c, row_number() OVER (PARTITION BY s.vec_id
-         |      ORDER BY round(${dotSql("s.ne", "cc.ce")}, 6) DESC, cc.c) AS rn
-         |  FROM smp s, $prev cc) t WHERE rn = 1),
-         |m$i AS (SELECT c, list(ne ORDER BY vec_id) AS vs, count(*) AS cnt
-         |  FROM a$i GROUP BY c),
-         |s$i AS (SELECT c, cnt, list_reduce(vs,
-         |    (a, b) -> list_transform(generate_series(1, $Dims), j -> a[j] + b[j])) AS ssum
-         |  FROM m$i),
-         |n$i AS (SELECT c, list_transform(ssum, x -> x / cnt) AS mean FROM s$i),
-         |w$i AS (SELECT c, mean, sqrt(${dotSql("mean", "mean")}) AS nrm FROM n$i),
-         |c$i AS (SELECT p.c, coalesce(list_transform(w.mean, x -> x / w.nrm), p.ce) AS ce
-         |  FROM $prev p LEFT JOIN w$i w ON p.c = w.c)""".stripMargin
-    }
-    s"""smp AS (SELECT vec_id, ne FROM e WHERE vec_id % 2 = 0),
-       |c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, ne AS ce
-       |  FROM smp ORDER BY vec_id LIMIT $IvfK),
-       |${(1 to IvfIters).map(iter).mkString(",\n")}""".stripMargin
-  }
-
-  /** k-means IVF candidate CTEs, ending in `endName` (q_id, qe, vec_id,
-    * ne): the probe hits [[ivfCandidates]] scores, deduped before the
-    * tail scores them (as in [[lshCandCte]]). Every float op is the same
-    * sequential fold, so the centroids are bit-identical across
-    * engines. */
-  private def ivfCandCte(endName: String): String = {
-    s"""$kmeansTrainCtes,
-       |iidx AS (SELECT vec_id, ne, c AS cell FROM (
-       |  SELECT e.vec_id, e.ne, cc.c, row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY round(${dotSql("e.ne", "cc.ce")}, 6) DESC, cc.c) AS rn
-       |  FROM e, c$IvfIters cc) t WHERE rn <= $IvfAssignN),
-       |iprb AS (SELECT q_id, qe, cell FROM (
-       |  SELECT e.vec_id AS q_id, e.ne AS qe, cc.c AS cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY round(${dotSql("e.ne", "cc.ce")}, 6) DESC, cc.c) AS rn
-       |  FROM e, c$IvfIters cc WHERE e.vec_id % $qModSql = 0) t WHERE rn <= $IvfProbes),
-       |$endName AS (SELECT DISTINCT p.q_id, p.qe, i.vec_id, i.ne
-       |  FROM iprb p JOIN iidx i ON p.cell = i.cell
-       |  WHERE i.vec_id != p.q_id)""".stripMargin
-  }
-
-  /** PQ CTEs mirroring [[Similarity.trainPq]] + [[queries]]' q65 with
-    * the per-subspace Lloyd iterations unrolled: subvector rows
-    * (m, vec_id, sub) via a VALUES cross join, argmin-[[d2Sql]]
-    * assignment with centroid-index tie-break, sequential-fold mean
-    * update, then corpus codes (`codesp`: vec_id, cds[m+1]) and query
-    * LUTs (`qpv`: q_id, vv[m+1][c+1]) for the fixed-order ADC sum. */
-  private def pqCte: String = {
-    val subD = Dims / PqSubs
-    def sub(v: String) = s"$v[mm.m * $subD + 1 : mm.m * $subD + $subD]"
-    def iter(i: Int): String = {
-      val prev = s"pc${i - 1}"
-      s"""pa$i AS (SELECT m, vec_id, sub, c FROM (
-         |  SELECT s.m, s.vec_id, s.sub, cc.c, row_number() OVER (PARTITION BY s.m, s.vec_id
-         |      ORDER BY round(${d2Sql("s.sub", "cc.ce")}, 6) ASC, cc.c) AS rn
-         |  FROM psub s JOIN $prev cc ON s.m = cc.m) t WHERE rn = 1),
-         |pm$i AS (SELECT m, c, list(sub ORDER BY vec_id) AS vs, count(*) AS cnt
-         |  FROM pa$i GROUP BY m, c),
-         |ps$i AS (SELECT m, c, cnt, list_reduce(vs,
-         |    (a, b) -> list_transform(generate_series(1, $subD), j -> a[j] + b[j])) AS ssum
-         |  FROM pm$i),
-         |pc$i AS (SELECT p.m, p.c, coalesce(list_transform(s.ssum, x -> x / s.cnt), p.ce) AS ce
-         |  FROM $prev p LEFT JOIN ps$i s ON p.m = s.m AND p.c = s.c)""".stripMargin
-    }
-    s"""mm AS (SELECT * FROM (VALUES ${(0 until PqSubs).map(m => s"($m)").mkString(", ")}) t(m)),
-       |psmp AS (SELECT vec_id, ne FROM e WHERE vec_id % 2 = 0),
-       |psub AS (SELECT mm.m, s.vec_id, ${sub("s.ne")} AS sub FROM psmp s, mm),
-       |pc0 AS (SELECT m, rn - 1 AS c, sub AS ce FROM (
-       |  SELECT m, sub, row_number() OVER (PARTITION BY m ORDER BY vec_id) AS rn
-       |  FROM psub) t WHERE rn <= $PqK),
-       |${(1 to PqIters).map(iter).mkString(",\n")},
-       |csub AS (SELECT mm.m, e.vec_id, ${sub("e.ne")} AS sub FROM e, mm),
-       |pcode AS (SELECT m, vec_id, c AS code FROM (
-       |  SELECT s.m, s.vec_id, cc.c, row_number() OVER (PARTITION BY s.m, s.vec_id
-       |      ORDER BY round(${d2Sql("s.sub", "cc.ce")}, 6) ASC, cc.c) AS rn
-       |  FROM csub s JOIN pc$PqIters cc ON s.m = cc.m) t WHERE rn = 1),
-       |codesp AS (SELECT vec_id, list(code ORDER BY m) AS cds FROM pcode GROUP BY vec_id),
-       |qs AS (SELECT vec_id AS q_id, ne AS qe FROM e WHERE vec_id % $qModSql = 0),
-       |qsub AS (SELECT q.q_id, mm.m, ${sub("q.qe")} AS sub FROM qs q, mm),
-       |qlv AS (SELECT q.q_id, q.m, cc.c, ${dotSql("q.sub", "cc.ce")} AS lv
-       |  FROM qsub q JOIN pc$PqIters cc ON q.m = cc.m),
-       |qlp AS (SELECT q_id, m, list(lv ORDER BY c) AS vals FROM qlv GROUP BY q_id, m),
-       |qpv AS (SELECT q_id, list(vals ORDER BY m) AS vv FROM qlp GROUP BY q_id)""".stripMargin
-  }
-
-  /** Shared top-3 tail over a candidate CTE named `cand`. */
-  private def topKSql(candCtes: String): String =
-    s"""WITH ${preppedCte(0)},
-       |$candCtes,
-       |cc AS (SELECT q_id, vec_id, ${dotSql("qe", "ne")} AS c FROM cand),
-       |r AS (SELECT q_id, vec_id, c, row_number() OVER (
-       |    PARTITION BY q_id ORDER BY round(c, 6) DESC, vec_id) AS rn FROM cc)
-       |SELECT q_id, CAST(rn AS INTEGER) AS rn, vec_id, round(c, 4) AS cos
-       |FROM r WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin
-
-  override def oracles: Map[String, String] = {
-    val base = baseOracles
-    val q57 =
-      s"""WITH bf AS (${base("q38_cosine_topk")}),
-         |lshq AS (${base("q39_ann_lsh")}),
-         |ivfq AS (${base("q50_ann_ivf")}),
-         |j AS (SELECT bf.q_id, bf.vec_id,
-         |    CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END AS lh,
-         |    CASE WHEN i.vec_id IS NOT NULL THEN 1 ELSE 0 END AS ih
-         |  FROM bf
-         |  LEFT JOIN lshq l ON bf.q_id = l.q_id AND bf.vec_id = l.vec_id
-         |  LEFT JOIN ivfq i ON bf.q_id = i.q_id AND bf.vec_id = i.vec_id)
-         |SELECT count(*) AS n_true,
-         |  CAST(sum(lh) AS BIGINT) AS n_lsh, CAST(sum(ih) AS BIGINT) AS n_ivf,
-         |  round(sum(lh)::DOUBLE / count(*), 4) AS recall_lsh,
-         |  round(sum(ih)::DOUBLE / count(*), 4) AS recall_ivf
-         |FROM j""".stripMargin
-    val q59 =
-      s"""WITH ${preppedCte(0)},
-         |${lshCandCte("lcand")},
-         |${ivfCandCte("icand")},
-         |st AS (SELECT count(*) AS n,
-         |    sum(CASE WHEN vec_id % $qModSql = 0 THEN 1 ELSE 0 END) AS nq FROM e),
-         |lc AS (SELECT count(*) AS n_lsh FROM lcand),
-         |ic AS (SELECT count(*) AS n_ivf FROM icand)
-         |SELECT CAST(st.nq * (st.n - 1) AS BIGINT) AS n_bf,
-         |  CAST(lc.n_lsh AS BIGINT) AS n_lsh, CAST(ic.n_ivf AS BIGINT) AS n_ivf,
-         |  round((st.nq * (st.n - 1))::DOUBLE / lc.n_lsh, 2) AS prune_lsh,
-         |  round((st.nq * (st.n - 1))::DOUBLE / ic.n_ivf, 2) AS prune_ivf
-         |FROM st, lc, ic""".stripMargin
-    val q62 =
-      s"""WITH ${preppedCte(0)},
-         |sc AS (SELECT vec_id, ne,
-         |    list_reduce(list_transform(ne, x -> abs(x)), (a, b) -> greatest(a, b)) AS scale
-         |  FROM e),
-         |q8x AS (SELECT vec_id, scale,
-         |    list_transform(ne, x -> round(x * 127.0 / scale)) AS q8 FROM sc),
-         |qs AS (SELECT vec_id AS q_id, q8 AS qq8, scale AS qscale
-         |  FROM q8x WHERE vec_id % $qModSql = 0),
-         |p AS (SELECT q_id, vec_id,
-         |    ${dotSql("qq8", "q8")} * qscale * scale / (127.0 * 127.0) AS cosq
-         |  FROM qs, q8x WHERE vec_id != q_id),
-         |r AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY round(cosq, 6) DESC, vec_id) AS rn
-         |  FROM p) t WHERE rn <= 3),
-         |bf AS (${base("q38_cosine_topk")}),
-         |j AS (SELECT bf.q_id, bf.vec_id,
-         |    CASE WHEN r.vec_id IS NOT NULL THEN 1 ELSE 0 END AS h
-         |  FROM bf LEFT JOIN r ON bf.q_id = r.q_id AND bf.vec_id = r.vec_id)
-         |SELECT count(*) AS n_true, CAST(sum(h) AS BIGINT) AS n_hit,
-         |  round(sum(h)::DOUBLE / count(*), 4) AS recall_q8 FROM j""".stripMargin
-    val q64 =
-      s"""WITH ${preppedCte(0)},
-         |${ivfCandCte("icand")},
-         |sc AS (SELECT vec_id, ne,
-         |    list_reduce(list_transform(ne, x -> abs(x)), (a, b) -> greatest(a, b)) AS scale
-         |  FROM e),
-         |q8x AS (SELECT vec_id, scale,
-         |    list_transform(ne, x -> round(x * 127.0 / scale)) AS q8 FROM sc),
-         |p AS (SELECT c.q_id, c.vec_id,
-         |    ${dotSql("qz.q8", "cz.q8")} * qz.scale * cz.scale / (127.0 * 127.0) AS cosq
-         |  FROM icand c JOIN q8x qz ON c.q_id = qz.vec_id
-         |    JOIN q8x cz ON c.vec_id = cz.vec_id),
-         |r AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (
-         |      PARTITION BY q_id ORDER BY round(cosq, 6) DESC, vec_id) AS rn
-         |  FROM p) t WHERE rn <= 3),
-         |bf AS (${base("q38_cosine_topk")}),
-         |j AS (SELECT bf.q_id, bf.vec_id,
-         |    CASE WHEN r.vec_id IS NOT NULL THEN 1 ELSE 0 END AS h
-         |  FROM bf LEFT JOIN r ON bf.q_id = r.q_id AND bf.vec_id = r.vec_id)
-         |SELECT count(*) AS n_true, CAST(sum(h) AS BIGINT) AS n_hit,
-         |  round(sum(h)::DOUBLE / count(*), 4) AS recall_ivf_q8 FROM j""".stripMargin
-    val adcExpr = (1 to PqSubs).map(m => s"q.vv[$m][c.cds[$m] + 1]").mkString(" + ")
-    val q65 =
-      s"""WITH ${preppedCte(0)},
-         |$pqCte,
-         |pp AS (SELECT q.q_id, c.vec_id, $adcExpr AS adc
-         |  FROM qpv q, codesp c WHERE c.vec_id != q.q_id),
-         |sl AS (SELECT q_id, vec_id, ra FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY round(adc, 6) DESC, vec_id) AS ra FROM pp) t
-         |  WHERE ra <= $PqRerank),
-         |rrk AS (SELECT s.q_id, s.vec_id, row_number() OVER (PARTITION BY s.q_id
-         |      ORDER BY round(${dotSql("qs.qe", "ex.ne")}, 6) DESC, s.vec_id) AS rn
-         |  FROM sl s JOIN qs ON s.q_id = qs.q_id JOIN e ex ON s.vec_id = ex.vec_id),
-         |t3 AS (SELECT q_id, vec_id FROM rrk WHERE rn <= 3),
-         |a3 AS (SELECT q_id, vec_id FROM sl WHERE ra <= 3),
-         |bf AS (${base("q38_cosine_topk")}),
-         |j AS (SELECT bf.q_id, bf.vec_id,
-         |    CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS h,
-         |    CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END AS ah
-         |  FROM bf LEFT JOIN t3 t ON bf.q_id = t.q_id AND bf.vec_id = t.vec_id
-         |  LEFT JOIN a3 a ON bf.q_id = a.q_id AND bf.vec_id = a.vec_id)
-         |SELECT count(*) AS n_true, CAST(sum(ah) AS BIGINT) AS n_adc,
-         |  CAST(sum(h) AS BIGINT) AS n_hit,
-         |  round(sum(ah)::DOUBLE / count(*), 4) AS recall_adc,
-         |  round(sum(h)::DOUBLE / count(*), 4) AS recall_pq FROM j""".stripMargin
-    val q69 =
-      s"""WITH ${preppedCte(0)},
-         |${ivfCandCte("icand")},
-         |$pqCte,
-         |scq AS (SELECT ic.q_id, ic.vec_id, $adcExpr AS adc
-         |  FROM icand ic JOIN qpv q ON ic.q_id = q.q_id
-         |    JOIN codesp c ON ic.vec_id = c.vec_id),
-         |sl AS (SELECT q_id, vec_id, ra FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY round(adc, 6) DESC, vec_id) AS ra FROM scq) t
-         |  WHERE ra <= $PqRerank),
-         |rrk AS (SELECT s.q_id, s.vec_id, row_number() OVER (PARTITION BY s.q_id
-         |      ORDER BY round(${dotSql("qs.qe", "ex.ne")}, 6) DESC, s.vec_id) AS rn
-         |  FROM sl s JOIN qs ON s.q_id = qs.q_id JOIN e ex ON s.vec_id = ex.vec_id),
-         |rr3 AS (SELECT q_id, vec_id FROM rrk WHERE rn <= 3),
-         |ad3 AS (SELECT q_id, vec_id FROM sl WHERE ra <= 3),
-         |bf AS (${base("q38_cosine_topk")}),
-         |j AS (SELECT bf.q_id, bf.vec_id,
-         |    CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS h,
-         |    CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END AS ah
-         |  FROM bf LEFT JOIN rr3 t ON bf.q_id = t.q_id AND bf.vec_id = t.vec_id
-         |  LEFT JOIN ad3 a ON bf.q_id = a.q_id AND bf.vec_id = a.vec_id)
-         |SELECT count(*) AS n_true, CAST(sum(ah) AS BIGINT) AS n_adc,
-         |  CAST(sum(h) AS BIGINT) AS n_hit,
-         |  round(sum(ah)::DOUBLE / count(*), 4) AS recall_adc_ivf,
-         |  round(sum(h)::DOUBLE / count(*), 4) AS recall_ivfpq FROM j""".stripMargin
-    // The streamed index audit: rebuild the same IVF lists (iidx) and
-    // PQ codes (codesp) relationally and aggregate the identical
-    // per-cell stats — membership and code checksums included, so any
-    // divergence between streamed and batch index construction hashes.
-    val q73 =
-      s"""WITH ${preppedCte(0)},
-         |${ivfCandCte("icand")},
-         |$pqCte,
-         |j AS (SELECT i.cell, i.vec_id, c.cds[1] AS c0
-         |  FROM iidx i JOIN codesp c ON i.vec_id = c.vec_id)
-         |SELECT CAST(cell AS BIGINT) AS cell, count(*) AS n_vecs,
-         |  CAST(sum(c0) AS BIGINT) AS sum_code0,
-         |  CAST(sum(vec_id) AS BIGINT) AS sum_vec_id
-         |FROM j GROUP BY cell ORDER BY cell ASC NULLS FIRST""".stripMargin
-    val q79 =
-      s"""WITH ${preppedCte(0)},
-         |$kmeansTrainCtes,
-         |cells AS (SELECT vec_id, ne, c AS cell FROM (
-         |  SELECT e.vec_id, e.ne, cc.c, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY round(${dotSql("e.ne", "cc.ce")}, 6) DESC, cc.c) AS rn
-         |  FROM e, c$IvfIters cc) t WHERE rn = 1),
-         |bc AS (SELECT cell FROM cells GROUP BY cell
-         |  HAVING count(*) BETWEEN 2 AND ${graft.ext.Dedup.DefaultMaxBucket}),
-         |rm AS (SELECT DISTINCT b.vec_id
-         |  FROM bc JOIN cells a ON a.cell = bc.cell
-         |    JOIN cells b ON b.cell = bc.cell AND a.vec_id < b.vec_id
-         |  WHERE ${dotSql("a.ne", "b.ne")} >= $SemTau)
-         |SELECT CAST(cells.cell AS INTEGER) AS cell, count(*) AS n_vecs,
-         |  CAST(sum(CASE WHEN rm.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_removed
-         |FROM cells LEFT JOIN rm ON cells.vec_id = rm.vec_id
-         |GROUP BY cells.cell ORDER BY cell ASC NULLS FIRST""".stripMargin
-    val q87 =
-      s"""WITH ${preppedCte(0)},
-         |s0 AS (SELECT e.vec_id, e.ne, d.source
-         |  FROM e JOIN documents d ON e.vec_id = d.doc_id
-         |  WHERE e.ne IS NOT NULL),
-         |g AS (SELECT source, count(*) AS n_vecs,
-         |    list(ne ORDER BY vec_id) AS vs FROM s0 GROUP BY source),
-         |f AS (SELECT source, n_vecs, list_reduce(vs,
-         |    (a, b) -> list_transform(generate_series(1, $Dims), j -> a[j] + b[j]))
-         |    AS ssum FROM g),
-         |m AS (SELECT source, n_vecs,
-         |    list_transform(ssum, x -> x / n_vecs) AS mean FROM f)
-         |SELECT source, n_vecs,
-         |  round(sqrt(${dotSql("mean", "mean")}), 4) AS coherence,
-         |  round(mean[1], 6) AS c0
-         |FROM m ORDER BY source ASC NULLS FIRST""".stripMargin
-    val q109 =
-      s"""WITH ${preppedCte(0)},
-         |s0 AS (SELECT e.vec_id, e.ne, d.source
-         |  FROM e JOIN documents d ON e.vec_id = d.doc_id
-         |  WHERE e.ne IS NOT NULL),
-         |g AS (SELECT source, count(*) AS nv,
-         |    list(ne ORDER BY vec_id) AS vs FROM s0 GROUP BY source),
-         |f AS (SELECT source, nv, list_reduce(vs,
-         |    (a, b) -> list_transform(generate_series(1, $Dims), j -> a[j] + b[j]))
-         |    AS ssum FROM g),
-         |m AS (SELECT source,
-         |    list_transform(ssum, x -> x / nv) AS mean FROM f),
-         |sc AS (SELECT s0.source,
-         |    ${dotSql("s0.ne", "m.mean")} / sqrt(${dotSql("m.mean", "m.mean")})
-         |      AS cos
-         |  FROM s0 JOIN m ON s0.source = m.source)
-         |SELECT source, count(*) AS n_vecs,
-         |  CAST(sum(CASE WHEN cos < 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_outliers,
-         |  round(min(cos), 4) AS min_cos, round(max(cos), 4) AS max_cos
-         |FROM sc GROUP BY source ORDER BY source ASC NULLS FIRST""".stripMargin
-    // streaming the queries must return the BATCH index's exact
-    // answers — q111's oracle is q50's with the wave column added
-    val q111 =
-      s"""WITH ${preppedCte(0)},
-         |${ivfCandCte("cand")},
-         |cc AS (SELECT q_id, vec_id, ${dotSql("qe", "ne")} AS c FROM cand),
-         |r AS (SELECT q_id, vec_id, c, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY round(c, 6) DESC, vec_id) AS rn FROM cc)
-         |SELECT CAST(q_id % 2 AS BIGINT) AS wave, q_id,
-         |  CAST(rn AS INTEGER) AS rn, vec_id, round(c, 4) AS cos
-         |FROM r WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin
-    base + ("q57_ann_recall" -> q57) + ("q59_ann_candidates" -> q59) +
-      ("q62_int8_recall" -> q62) + ("q64_ivf_int8_recall" -> q64) +
-      ("q65_pq_recall" -> q65) + ("q69_ivfpq_recall" -> q69) +
-      ("q73_stream_index_ingest" -> q73) + ("q79_semdedup" -> q79) +
-      ("q87_domain_centroids" -> q87) +
-      ("q109_embedding_outliers" -> q109) +
-      ("q111_stream_ann_search" -> q111)
-  }
-
-  private def baseOracles: Map[String, String] = Map(
-    "q38_cosine_topk" ->
-      s"""WITH ${preppedCte(0)},
-         |q AS (SELECT vec_id AS q_id, ne AS qe FROM e WHERE vec_id % $qModSql = 0),
-         |p AS (SELECT q_id, vec_id, ${dotSql("qe", "ne")} AS c
-         |  FROM q, e WHERE vec_id != q_id),
-         |r AS (SELECT q_id, vec_id, c, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY round(c, 6) DESC, vec_id) AS rn FROM p)
-         |SELECT q_id, CAST(rn AS INTEGER) AS rn, vec_id, round(c, 4) AS cos
-         |FROM r WHERE rn <= 3 ORDER BY q_id, rn""".stripMargin,
-
-    "q39_ann_lsh" -> topKSql(lshCandCte("cand")),
-
-    "q50_ann_ivf" -> topKSql(ivfCandCte("cand")),
-
-    "q40_embedding_pairs" ->
-      s"""WITH ${preppedCte(PairPlanes)},
-         |bc AS (SELECT bucket FROM e GROUP BY bucket
-         |  HAVING count(*) BETWEEN 2 AND ${graft.ext.Dedup.DefaultMaxBucket}),
-         |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         |    ${dotSql("a.ne", "b.ne")} AS c
-         |  FROM bc JOIN e a ON a.bucket = bc.bucket
-         |    JOIN e b ON b.bucket = bc.bucket AND a.vec_id < b.vec_id)
-         |SELECT a_id, b_id, round(c, 4) AS cos FROM p
-         |WHERE c >= 0.35 ORDER BY a_id, b_id""".stripMargin
-  )
+  override def oracles: Map[String, String] = SimilarityOracles.oracles
 }

@@ -81,7 +81,7 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("x", "y")
     val got = df.select(Dedup.jaccard(col("x"), col("y"))).collect()
       .map(_.getDouble(0))
-    val want = df.select(Dedup.jaccardComposed(col("x"), col("y"))).collect()
+    val want = df.select(Dedup.jaccardAny(col("x"), col("y"))).collect()
       .map(_.getDouble(0))
     assert(got.toSeq === want.toSeq)
     assert(want.last === 0.0)
