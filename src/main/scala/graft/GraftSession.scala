@@ -9,8 +9,35 @@ import org.apache.spark.sql.SparkSession
   * shuffle-partition count matched to local cores here but meant to be
   * overridden to ~2-3× total cores on a real cluster, and the legacy
   * nanos conf so TIMESTAMP(NANOS) parquet (events.ts) is readable.
+
   */
 object GraftSession {
+  /** `spark.sql.artifact.isolation.enabled`, off (Spark 4.1 default:
+    * on). Isolation gives every `SparkSession` its own executor class
+    * loader: each `newSession()`, each `StreamingQueries.streamSession`
+    * and the clone each streaming query makes (so each `Flows.csvCells`
+    * drain) runs its SQL tasks under a new `ExecutorClassLoader`. Spark
+    * keys its codegen cache on (class loader, code), so each new loader
+    * recompiles every generated class it touches. The engine adds no
+    * session artifacts (no `addArtifact`, `addJar` or `addFile`), so
+    * isolation only costs it compiles. Measured at sf0.01 on 4 cores: a
+    * q64 reload in a `newSession()` 44 compiles (0.6–0.7 s of Janino) →
+    * 15 the first time, 0 after; each `Flows.csvCells` drain after the
+    * first 3 → 0; a second q85 run 17 → 0; q76's cold Janino time
+    * 0.52–0.66 → 0.43–0.48 s. */
+  val ArtifactIsolation: Boolean = false
+
+  /** `spark.sql.codegen.cache.maxEntries` (Spark default: 100). One pass
+    * over all 109 queries fills about 1,030 entries at sf0.01 and at
+    * sf0.1 (local mode holds each class twice, once per loader), so the
+    * default evicts a query's classes before it runs again: a second
+    * pass recompiled about 1,130 classes; with 4096 it compiles 2–12.
+    * An entry costs about 27 KB of heap and 8 KB of Metaspace. A static conf:
+    * `CodeGenerator` reads it once, when it first initializes, so it
+    * only takes effect on the builder that creates the context;
+    * `CodegenReuseSpec` checks that it reaches the cache. */
+  val CodegenCacheEntries: Int = 4096
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -24,6 +51,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      .config("spark.sql.artifact.isolation.enabled", ArtifactIsolation.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** FQCN of Spark's FileSystem-API checkpoint file manager (ships in
     * spark-sql; the documented alternative to the FileContext default —
@@ -45,27 +74,26 @@ object GraftSession {
       // in the context's Hadoop conf from its first file:// lookup on
       .config(s"spark.hadoop.${NioLocalFileSystem.ImplKey}",
         classOf[NioLocalFileSystem].getName)
-      // r22 streaming-drain fix (measured, guide §1/§5): on file://
-      // checkpoints WITHOUT native Hadoop libs, the default FileContext-
-      // based manager resolves every path through
+      // On file:// checkpoints without native Hadoop libs, the default
+      // FileContext-based manager resolves every path through
       // AbstractFileSystem.getFileLinkStatus, which Hadoop implements by
-      // FORKING a `readlink` (and `chmod` for permissioned creates)
-      // process per file operation — measured 12,725 forks and
-      // 75–175 ms per state-store commit on ONE q58 drain, ~2× the
-      // query's wall time. The FileSystem-API manager hits the java.io
-      // stat path instead (no exec). Same rename-based atomic-write
-      // protocol, checkpoint layout unchanged. LOCAL ONLY: the cluster
-      // preset keeps Spark's FileContext default, which is the
-      // preferred manager where a real HDFS/object-store scheme (and
-      // libhadoop) exists. Measured q58 5.0→2.9 s isolated.
+      // forking a `readlink` (and `chmod` for permissioned creates)
+      // process per file operation: measured 12,725 forks and
+      // 75–175 ms per state-store commit on one q58 drain, about 2× the
+      // query's wall time. The FileSystem-API manager takes the java.io
+      // stat path instead (no exec), with the same rename-based atomic
+      // write protocol and checkpoint layout; q58 5.0 → 2.9 s isolated.
+      // Local only: the cluster preset keeps Spark's FileContext
+      // default, the preferred manager where a real HDFS/object-store
+      // scheme (and libhadoop) exists.
       .config("spark.sql.streaming.checkpointFileManagerClass",
         FsCheckpointManager)
-      // r22: Spark 4.1's per-file checkpoint CHECKSUMS (a new-in-4.1
-      // integrity layer for remote checkpoint stores) double the
-      // metadata-file count per commit — on local file:// the sidecar
-      // buys nothing (same disk, same failure domain) and costs ~1,300
-      // forked file ops per drain. Cluster preset keeps the 4.1
-      // default. Restores the ≤4.0 local checkpoint layout.
+      // Spark 4.1's per-file checkpoint checksums (an integrity layer
+      // for remote checkpoint stores) double the metadata-file count per
+      // commit; on local file:// the sidecar buys nothing (same disk,
+      // same failure domain) and costs about 1,300 forked file ops per
+      // drain. The cluster preset keeps the 4.1 default. This restores
+      // the ≤4.0 local checkpoint layout.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .getOrCreate()
     // and on the live conf: getOrCreate may return a context built
