@@ -103,6 +103,25 @@ object GraftSession {
     s
   }
 
+  /** shuffle partitions = 3 × total cores (see [[clusterBuilder]]). */
+  def clusterShufflePartitions(executors: Int, coresPerExecutor: Int): Int =
+    3 * executors * coresPerExecutor
+
+  /** FQCN of Spark's RocksDB state store provider (ships in spark-sql;
+    * rocksdbjni is a stock Spark dependency — no extra jars). */
+  val RocksDbProvider: String =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The cluster state-store posture as conf pairs — the SINGLE source
+    * consumed by [[clusterBuilder]], the `SPARK_GRAFT_STATE_STORE`
+    * local-measurement knob, and the heap-vs-RocksDB equality spec, so
+    * a posture change (new RocksDB tuning key, changelog version)
+    * reaches all three or none. */
+  val RocksDbStateStoreConfigs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+      -> "true")
+
   /** Cluster-sizing preset — the deployment analogue of [[local]], with
     * every derived number stated instead of implied by comments:
     *
@@ -131,31 +150,13 @@ object GraftSession {
     *    in BASELINE.md), and `SPARK_GRAFT_STATE_STORE=rocksdb` flips
     *    the streaming queries over to measure the cluster backend
     *    locally. Result equality across providers is spec-asserted
-    *    (`StatefulSpec`: stream-stream LEFT OUTER under both stores).
+    *    (`StreamingSpec` "stream-stream left outer join: heap and RocksDB
+    *    state stores agree").
     *
     * The local/cluster split changes ONLY sizing numbers and the state
     * backend: plans, kernels, and lifecycle are identical, which is
     * what keeps the local bench predictive of the cluster shape.
     */
-  /** shuffle partitions = 3 × total cores (see [[clusterBuilder]]). */
-  def clusterShufflePartitions(executors: Int, coresPerExecutor: Int): Int =
-    3 * executors * coresPerExecutor
-
-  /** FQCN of Spark's RocksDB state store provider (ships in spark-sql;
-    * rocksdbjni is a stock Spark dependency — no extra jars). */
-  val RocksDbProvider: String =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** The cluster state-store posture as conf pairs — the SINGLE source
-    * consumed by [[clusterBuilder]], the `SPARK_GRAFT_STATE_STORE`
-    * local-measurement knob, and the heap-vs-RocksDB equality spec, so
-    * a posture change (new RocksDB tuning key, changelog version)
-    * reaches all three or none. */
-  val RocksDbStateStoreConfigs: Seq[(String, String)] = Seq(
-    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      -> "true")
-
   def clusterBuilder(master: String, executors: Int,
       coresPerExecutor: Int): SparkSession.Builder =
     RocksDbStateStoreConfigs.foldLeft(

@@ -237,12 +237,8 @@ object ScaleProbe {
       try {
         val cand = Dedup.pairsFromBuckets(
           sh.select(col("doc_id"), explode(col("fp")).as("f")), Seq("f"), "doc_id")
-        cand
-          .join(sh.select(col("doc_id").as("a_id"), col("hd").as("ha")), "a_id")
-          .join(sh.select(col("doc_id").as("b_id"), col("hd").as("hb")), "b_id")
-          .filter(Dedup.sizeRatioGuard(col("ha"), col("hb"), 0.8))
-          .filter(Dedup.jaccard(col("ha"), col("hb")) >= 0.8)
-          .count()
+        val hd = sh.select(col("doc_id").as("id"), col("hd").as("hs"))
+        Dedup.verifiedPairs(cand, "a_id", "b_id", hd, hd, 0.8).count()
       } finally sh.unpersist()
     }
 
@@ -324,7 +320,7 @@ object ScaleProbe {
       chain.cache(); chain.count()
       try {
         timed("cc_chain_default_fallback") {
-          val comps = Dedup.connectedComponents(chain, 15, "minlabel")
+          val comps = Dedup.connectedComponents(chain, 15)
             .select(col("comp")).distinct().count()
           require(comps == 1L,
             s"default CC left $comps components on a chain — the star " +

@@ -172,6 +172,12 @@ object Dedup {
   /** Hamming distance between two SimHash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** Default degenerate-bucket cap — referenced by the DuckDB oracles
+    * too, so engine and oracle drop exactly the same buckets at any
+    * scale (a silent cap only on one side would diverge once a bucket
+    * exceeds it). */
+  val DefaultMaxBucket: Int = 10000
+
   /** Candidate (a_id, b_id) pairs from bucket rows, WITHOUT a self-join:
     * group by the bucket key, collect the ids, emit every within-bucket
     * combination (a < b via the sorted array), then dedupe across
@@ -180,12 +186,6 @@ object Dedup {
     * (key, id) pairs. Buckets are hash-uniform by construction, so
     * collect_list stays tiny; a `maxBucket` guard drops degenerate
     * buckets (stop-fingerprint protection at scale). */
-  /** Default degenerate-bucket cap — referenced by the DuckDB oracles
-    * too, so engine and oracle drop exactly the same buckets at any
-    * scale (a silent cap only on one side would diverge once a bucket
-    * exceeds it). */
-  val DefaultMaxBucket: Int = 10000
-
   def pairsFromBuckets(rows: DataFrame, keyCols: Seq[String],
       idCol: String, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val ids = col("ids")
@@ -224,23 +224,17 @@ object Dedup {
     * and returns ITS labels. The caller always gets converged
     * components; the only cost of the pathological shape is the wasted
     * min-label rounds, logged at WARN. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 15,
-      algorithm: String = "minlabel"): DataFrame = algorithm match {
-    case "star" => connectedComponentsStar(edges, maxIter)._1
-    case "minlabel" =>
-      val (labels, converged) = minLabelComponents(edges, maxIter)
-      if (converged) labels
-      else {
-        log.warn(s"connectedComponents(minlabel) hit maxIter=$maxIter " +
-          "with labels still changing — auto-switching to the " +
-          "alternating-star algorithm so the caller never receives " +
-          "shattered labels")
-        // 60 rounds covers diameter 2^60 — a safety valve, not a bound
-        // the loop reaches (star exits at its fixed point).
-        connectedComponentsStar(edges, 60)._1
-      }
-    case other => throw new IllegalArgumentException(
-      s"unknown connected-components algorithm '$other' (minlabel|star)")
+  def connectedComponents(edges: DataFrame, maxIter: Int = 15): DataFrame = {
+    val (labels, converged) = minLabelComponents(edges, maxIter)
+    if (converged) labels
+    else {
+      log.warn(s"connectedComponents hit maxIter=$maxIter with labels " +
+        "still changing — auto-switching to the alternating-star " +
+        "algorithm so the caller never receives shattered labels")
+      // 60 rounds covers diameter 2^60 — a safety valve, not a bound
+      // the loop reaches (star exits at its fixed point).
+      connectedComponentsStar(edges, 60)._1
+    }
   }
 
   /** Incremental connected components: fold a batch of new edges into
@@ -257,14 +251,13 @@ object Dedup {
     * cluster scale, the persisted label table of the previous
     * snapshot; `newEdges` is (a_id, b_id). Returns (id, comp). */
   def connectedComponentsIncremental(oldLabels: DataFrame,
-      newEdges: DataFrame, maxIter: Int = 15,
-      algorithm: String = "minlabel"): DataFrame = {
+      newEdges: DataFrame, maxIter: Int = 15): DataFrame = {
     val contraction = oldLabels
       .select(col("id").as("a_id"), col("comp").as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
     val propagated = connectedComponents(
       newEdges.select(col("a_id"), col("b_id")).unionByName(contraction),
-      maxIter, algorithm)
+      maxIter)
     // Standing SINGLETON clusters (id == comp, no member edge) produce
     // no contraction edge; if the delta doesn't touch them either, they
     // are absent from the propagation's node set and would silently
@@ -387,13 +380,6 @@ object Dedup {
     (labels, i)
   }
 
-  /** Full MinHash-LSH near-dup pair pipeline: shingle → signature → band
-    * → bucket self-join → exact-Jaccard verify. Returns (a_id, b_id,
-    * jacc) for pairs with Jaccard ≥ `threshold`.
-    *
-    * The verify step compares DISTINCT 60-bit shingle-hash arrays, not
-    * shingle strings — an 8-byte element shuffles/intersects far cheaper
-    * than a ~20-byte string and collisions are negligible at 2^60. */
   /** Convenience one-shot entry point — builds WITHOUT caching the
     * internal shingle-hash frame, so it leaves nothing pinned behind
     * (the frame's three lineage references each recompute the map-side
@@ -421,20 +407,36 @@ object Dedup {
     pairsCore(docs, idCol, textCol, shingleN, k, bands, threshold,
       cache = true)
 
+  /** Full MinHash-LSH near-dup pair pipeline: shingle → signature → band
+    * → bucket self-join → exact-Jaccard verify. Returns (a_id, b_id,
+    * jacc) for pairs with Jaccard ≥ `threshold`.
+    *
+    * The verify step compares DISTINCT 60-bit shingle-hash arrays, not
+    * shingle strings — an 8-byte element shuffles/intersects far cheaper
+    * than a ~20-byte string and collisions are negligible at 2^60. */
   private def pairsCore(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
       cache: Boolean): (DataFrame, DataFrame) = {
     val sh = shingleHashFrame(docs, idCol, textCol, shingleN, cache)
-    val cand = pairsFromBuckets(bandRowsOf(sh, k, bands), Seq("band", "bh"), "id")
-    val verified = cand
-      .join(sh.select(col("id"), col("hs").as("ha")), col("a_id") === col("id")).drop("id")
-      .join(sh.select(col("id"), col("hs").as("hb")), col("b_id") === col("id")).drop("id")
-      .filter(sizeRatioGuard(col("ha"), col("hb"), threshold))
-      .withColumn("jacc", jaccard(col("ha"), col("hb")))
-      .filter(col("jacc") >= threshold)
-    (verified.select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc")),
-      sh)
+    val cand = pairsFromBuckets(bandRows(signatures(sh, k), k, bands),
+      Seq("band", "bh"), "id")
+    (verifiedPairs(cand, "a_id", "b_id", sh, sh, threshold), sh)
   }
+
+  /** Exact-Jaccard verify of candidate pairs: `cand`'s `left` and
+    * `right` id columns join the (id, hs) shingle-hash frames `lh` and
+    * `rh`, [[sizeRatioGuard]] prunes before the intersect, and the
+    * pairs with jaccard ≥ `threshold` come back as (left, right, jacc
+    * rounded to 4 places). */
+  private[graft] def verifiedPairs(cand: DataFrame, left: String,
+      right: String, lh: DataFrame, rh: DataFrame,
+      threshold: Double): DataFrame = cand
+    .join(lh.select(col("id"), col("hs").as("ha")), col(left) === col("id")).drop("id")
+    .join(rh.select(col("id"), col("hs").as("hb")), col(right) === col("id")).drop("id")
+    .filter(sizeRatioGuard(col("ha"), col("hb"), threshold))
+    .withColumn("jacc", jaccard(col("ha"), col("hb")))
+    .filter(col("jacc") >= threshold)
+    .select(col(left), col(right), round(col("jacc"), 4).as("jacc"))
 
   /** Sound pre-verify prune: jaccard = |A∩B|/|A∪B| ≤ min(|A|,|B|)/
     * max(|A|,|B|), so any pair passing `jacc ≥ t` satisfies
@@ -448,43 +450,13 @@ object Dedup {
     least(size(ha), size(hb)) * 100 >=
       greatest(size(ha), size(hb)) * math.floor(threshold * 100).toLong
 
-  /** Incremental MinHash-LSH: near-dup pairs BETWEEN a delta batch and
-    * an existing corpus (never within either side) — the nightly-ingest
-    * shape. The corpus's band rows are the standing index; the delta's
-    * band rows probe it with an equi-join on (band, bucket). Returns
-    * (d_id, c_id, jacc ≥ threshold).
-    *
-    * The hot-bucket guard applies to CORPUS bucket occupancy only: a
-    * probe against a capped index bucket is a bounded lookup, and a
-    * corpus bucket of size 1 must still be probe-able (unlike the
-    * self-join case, where singleton buckets pair with nothing). At
-    * scale the corpus side is computed once and persisted; per batch
-    * only the delta's signatures (O(|delta|)) and the bucket equi-join
-    * are paid — never O(|corpus|) re-hashing, never within-corpus
-    * pairs. */
-  def minhashLshPairsAcross(delta: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, shingleN: Int = 3, k: Int = 16,
-      bands: Int = 4, threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    // cache = false: this one-shot convenience returns a frame and
-    // discards the index, so cached member frames would be unowned
-    // pinned memory no caller could ever release (the leak class
-    // FrameCache exists to prevent). Cost: the corpus shingle lineage
-    // is re-evaluated 3× per probe — both sides of the hot-bucket
-    // guard join derive it, plus the verify join against `hashes`.
-    // Repeated probes of one corpus should build the index once via
-    // [[buildNearDupIndex]] and own its lifecycle.
-    buildNearDupIndex(corpus, idCol, textCol, shingleN, k, bands,
-      threshold, maxBucket, cache = false).probe(delta, idCol, textCol,
-      shingleN)
-
   /** (id, hs) shingle-hash frame — the shared prep of every MinHash
     * path (arrays feed both the signature lineage and the verify
     * joins). `cache=true` materializes it (corpus-side: built once,
     * referenced by every probe); `cache=false` recomputes per branch
     * (delta-side: ≤2× map-side hashing of a small batch beats leaving
     * an unmanaged cached frame behind per micro-batch). */
-  private def shingleHashFrame(docs: DataFrame, idCol: String,
+  private[graft] def shingleHashFrame(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, cache: Boolean): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
     // hs is SORTED (per-task work): the verify kernel
@@ -504,12 +476,16 @@ object Dedup {
     if (cache) sh.cache() else sh
   }
 
-  /** (id, band, bh) LSH band rows of a shingle-hash frame. */
-  private def bandRowsOf(sh: DataFrame, k: Int, bands: Int): DataFrame = sh
+  /** (id, sig) MinHash signatures of a shingle-hash frame's non-empty
+    * rows. */
+  private[graft] def signatures(sh: DataFrame, k: Int): DataFrame = sh
     .filter(size(col("hs")) > 0)
     .withColumn("bh0", transform(col("hs"), x => x % MinhashP))
     .select(col("id"), minhashSignature(col("bh0"), k).as("sig"))
-    .select(col("id"),
+
+  /** (id, band, bh) LSH band rows of a signature frame. */
+  private[graft] def bandRows(sig: DataFrame, k: Int, bands: Int): DataFrame =
+    sig.select(col("id"),
       posexplode(lshBandHashes(col("sig"), k, bands)).as(Seq("band", "bh")))
 
   /** A standing MinHash-LSH near-dup index over a corpus snapshot: the
@@ -534,51 +510,35 @@ object Dedup {
         shingleN: Int): DataFrame = {
       val shD = shingleHashFrame(delta, idCol, textCol, shingleN,
         cache = false)
-      val cand = bandRowsOf(shD, k, bands)
+      val cand = bandRows(signatures(shD, k), k, bands)
         .select(col("band"), col("bh"), col("id").as("d_id"))
         .join(guardedBands.select(col("band"), col("bh"),
           col("id").as("c_id")), Seq("band", "bh"))
         .select(col("d_id"), col("c_id")).distinct()
-      cand
-        .join(shD.select(col("id"), col("hs").as("ha")),
-          col("d_id") === col("id")).drop("id")
-        .join(hashes.select(col("id"), col("hs").as("hb")),
-          col("c_id") === col("id")).drop("id")
-        .filter(sizeRatioGuard(col("ha"), col("hb"), threshold))
-        .withColumn("jacc", jaccard(col("ha"), col("hb")))
-        .filter(col("jacc") >= threshold)
-        .select(col("d_id"), col("c_id"), round(col("jacc"), 4).as("jacc"))
+      verifiedPairs(cand, "d_id", "c_id", shD, hashes, threshold)
     }
 
     /** Release the cached member frames (a dropped snapshot). */
     def unpersist(): Unit = { hashes.unpersist(); guardedBands.unpersist() }
   }
 
-  /** Builds the [[NearDupIndex]] for `corpus`. The hot-bucket guard
-    * applies to CORPUS bucket occupancy only: a probe against a capped
-    * index bucket is a bounded lookup, and a corpus bucket of size 1
-    * must still be probe-able (unlike the self-join case, where
-    * singleton buckets pair with nothing). */
+  /** Builds the [[NearDupIndex]] for `corpus`, both member frames
+    * cached. The hot-bucket guard applies to CORPUS bucket occupancy
+    * only: a probe against a capped index bucket is a bounded lookup,
+    * and a corpus bucket of size 1 must still be probe-able (unlike the
+    * self-join case, where singleton buckets pair with nothing). */
   def buildNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4,
-      threshold: Double = 0.8,
-      maxBucket: Int = DefaultMaxBucket,
-      cache: Boolean = true): NearDupIndex = {
-    val shC = shingleHashFrame(corpus, idCol, textCol, shingleN, cache)
-    val bandsC = bandRowsOf(shC, k, bands)
-    val guarded0 = bandsC.join(
+      threshold: Double = 0.8): NearDupIndex = {
+    val shC = shingleHashFrame(corpus, idCol, textCol, shingleN, cache = true)
+    val bandsC = bandRows(signatures(shC, k), k, bands)
+    val guarded = bandsC.join(
       bandsC.groupBy(col("band"), col("bh"))
         .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") <= maxBucket)
+        .filter(col("cnt") <= DefaultMaxBucket)
         .select(col("band"), col("bh")),
       Seq("band", "bh"))
-    // cache = false is the one-shot path (the caller will probe once
-    // and discard the index): leave both member frames uncached so
-    // nothing outlives the returned frame's evaluation. unpersist() on
-    // an uncached frame is a no-op, so the lifecycle contract holds
-    // either way.
-    NearDupIndex(shC, if (cache) guarded0.cache() else guarded0,
-      k, bands, threshold)
+    NearDupIndex(shC, guarded.cache(), k, bands, threshold)
   }
 
   /** Reassemble a [[NearDupIndex]] from persisted parts (the

@@ -93,20 +93,18 @@ object DedupQueries extends QueryPack {
           .filter(!q106InDelta(col("a_id")) && !q106InDelta(col("b_id"))))
         .cache())
 
-  /** q80's STANDING corpus band index — the nightly-ingest shape
-    * builds the corpus index once per snapshot and probes every delta
-    * batch against it. A per-invocation `minhashLshPairsAcross` call
-    * rebuilt (and, worse, left behind two unowned cached member
-    * frames) on every run — the r5-ADVICE leak class, found again by
-    * review. The same entry shape as q105's streaming gate, so q80 also
-    * gets the artifact save/load restart path. LSH parameters are
-    * passed, not defaulted: the oracle embeds these constants, and a
-    * call site riding the library defaults agrees with it only by
-    * coincidence. */
-  private def q80CorpusIndex(s: SparkSession, d: String): Dedup.NearDupIndex = {
-    def corpus = Tables.documents(s, d).filter(col("doc_id") % 7 =!= 3)
+  /** STANDING near-dup index over the documents in `inCorpus`, memoized
+    * per (session, dir) under `memo` with the artifact save/load restart
+    * path — q80's nightly-ingest batch and q105's streaming gate each
+    * build their corpus index once per snapshot and probe every delta
+    * batch against it. LSH parameters are passed, not defaulted: the
+    * oracles embed these constants, and a call site riding the library
+    * defaults agrees with them only by coincidence. */
+  private[queries] def standingNearDupIndex(s: SparkSession, d: String,
+      memo: String, inCorpus: Column): Dedup.NearDupIndex = {
+    def corpus = Tables.documents(s, d).filter(inCorpus)
       .select(col("doc_id"), col("text"))
-    FrameCache.get(s, "q80-neardup", d, ArtifactStore.nearDupCodec(s, corpus))(
+    FrameCache.get(s, memo, d, ArtifactStore.nearDupCodec(s, corpus))(
       Dedup.buildNearDupIndex(corpus, "doc_id", "text", shingleN = 3,
         k = K, bands = Bands, threshold = 0.8))
   }
@@ -228,23 +226,15 @@ object DedupQueries extends QueryPack {
       // sorts into 15k doc-side ones (isolated noop-sink stage: the
       // jacc stage 2.35–2.53 → 1.26–1.50 s; jaccard is a set measure,
       // so the output is bit-identical)
-      val sh = hsh.select(col("doc_id"),
+      val sh = hsh.select(col("doc_id").as("id"),
         array_sort(array_distinct(col("h"))).as("hs"))
       val fps = hsh.select(col("doc_id"),
         explode(TextAnalysis.fingerprintsFromHashes(col("h"), 4)).as("fp"))
       val cand = Dedup.pairsFromBuckets(fps, Seq("fp"), "doc_id")
-      cand
-        .join(sh.select(col("doc_id").as("a_id"), col("hs").as("ha")), "a_id")
-        .join(sh.select(col("doc_id").as("b_id"), col("hs").as("hb")), "b_id")
-        // size-ratio prune: jacc = |A∩B|/|A∪B| ≤ min/max, so jacc ≥ 0.6
-        // requires 10·min ≥ 6·max — an integer-exact guard (no boundary
-        // pair can be lost) that removes ~35% of candidates (measured
-        // sf0.1: 334k → 217k) before the intersect pays for them
-        .filter(least(size(col("ha")), size(col("hb"))) * 10 >=
-          greatest(size(col("ha")), size(col("hb"))) * 6)
-        .withColumn("jacc", Dedup.jaccard(col("ha"), col("hb")))
-        .filter(col("jacc") >= 0.6)
-        .select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc"))
+      // the verify's size-ratio guard (100·min ≥ 60·max at 0.6) removes
+      // ~35% of candidates (measured sf0.1: 334k → 217k) before the
+      // intersect pays for them
+      Dedup.verifiedPairs(cand, "a_id", "b_id", sh, sh, 0.6)
         .orderBy(col("a_id"), col("b_id"))
     }),
 
@@ -261,23 +251,11 @@ object DedupQueries extends QueryPack {
     //      in both engines, so unlike the HLL/percentile sketches this
     //      evaluation hash-compares EXACTLY. ----
     "q76_minhash_decision" -> ((s, d) => {
-      val par = s.sparkContext.defaultParallelism
-      val sh = FrameCache.get(s, "q76-sh", d)(
-        Tables.documents(s, d).repartition(par)
-          .withColumn("shs", Dedup.distinctShingles(col("text"), 3))
-          // sorted for the same per-pair-sort reason as q37/
-          // shingleHashFrame (r22); sig (min over elements) and jacc
-          // (set measure) are order-independent
-          .withColumn("hs", array_sort(array_distinct(
-            transform(col("shs"), x => Hashing.md5Long(x)))))
-          .select(col("doc_id").as("id"), col("hs"))
-          .cache())
-      val sig = sh.filter(size(col("hs")) > 0)
-        .withColumn("bh", transform(col("hs"), x => x % Dedup.MinhashP))
-        .select(col("id"), Dedup.minhashSignature(col("bh"), K).as("sig"))
-      val bandRows = sig.select(col("id"),
-        posexplode(Dedup.lshBandHashes(col("sig"), K, Bands)).as(Seq("band", "bh")))
-      val cand = Dedup.pairsFromBuckets(bandRows, Seq("band", "bh"), "id")
+      val sh = FrameCache.get(s, "q76-sh", d)(Dedup.shingleHashFrame(
+        Tables.documents(s, d), "doc_id", "text", 3, cache = true))
+      val sig = Dedup.signatures(sh, K)
+      val cand = Dedup.pairsFromBuckets(Dedup.bandRows(sig, K, Bands),
+        Seq("band", "bh"), "id")
       cand
         .join(sig.select(col("id").as("a_id"), col("sig").as("sa")), "a_id")
         .join(sig.select(col("id").as("b_id"), col("sig").as("sb")), "b_id")
@@ -402,12 +380,12 @@ object DedupQueries extends QueryPack {
     //      corpus — the nightly-ingest path. Stage 1: exact content-key
     //      anti join (delta hash vs corpus hash set). Stage 2: MinHash-
     //      LSH near-dup of the exact survivors AGAINST THE CORPUS ONLY
-    //      (Dedup.minhashLshPairsAcross — delta band rows probe the
-    //      corpus band index; within-corpus pairs are never computed,
-    //      so per-batch cost is O(|delta|) signatures + a bucket
-    //      equi-join, not a corpus re-dedup). Delta = doc_id % 7 = 3 (coprime with the
-    //      20-source assignment, so every source contributes delta docs),
-    //      so the oracle rebuilds both sides. ----
+    //      (the standing index's NearDupIndex.probe — delta band rows
+    //      probe the corpus band index; within-corpus pairs are never
+    //      computed, so per-batch cost is O(|delta|) signatures + a
+    //      bucket equi-join, not a corpus re-dedup). Delta = doc_id % 7
+    //      = 3 (coprime with the 20-source assignment, so every source
+    //      contributes delta docs), so the oracle rebuilds both sides. ----
     "q80_incremental_dedup" -> ((s, d) => {
       val isDelta = col("doc_id") % 7 === 3
       val docs = Tables.documents(s, d)
@@ -418,7 +396,7 @@ object DedupQueries extends QueryPack {
       val corpusKeys = corpus
         .select(Dedup.contentKey(col("text")).as("ck")).distinct()
       val exactSurv = delta.join(corpusKeys, Seq("ck"), "left_anti")
-      val nearIds = q80CorpusIndex(s, d)
+      val nearIds = standingNearDupIndex(s, d, "q80-neardup", !isDelta)
         .probe(exactSurv, "doc_id", "text", shingleN = 3)
         .select(col("d_id").as("doc_id")).distinct()
         .withColumn("nd", lit(1L))
@@ -503,7 +481,7 @@ object DedupQueries extends QueryPack {
 
   /** CTE chain for the INCREMENTAL pairing (q80): delta survivors `esv`
     * probe the corpus's band index; guard on CORPUS bucket occupancy
-    * only (mirrors [[Dedup.minhashLshPairsAcross]]). Ends in `ndx`
+    * only (mirrors [[Dedup.NearDupIndex.probe]]). Ends in `ndx`
     * (d_id of delta docs with a verified corpus near-dup). */
   private[queries] def crossMinhashCtes: String =
     s"""${ShinglesCte("esv", "n")},

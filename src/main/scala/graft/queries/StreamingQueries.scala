@@ -36,15 +36,6 @@ object StreamingQueries extends QueryPack {
       tmp
     }
 
-  /** Clone of `s` with state partitions sized to the stream's volume.
-    * Stream-stream joins keep FOUR state stores per side per partition;
-    * at the session's 32 shuffle partitions even a 2-row micro-batch
-    * commits 128 store deltas (~4 s measured per batch). A streaming
-    * query's state partitioning is pinned by its first start — sizing
-    * `spark.sql.shuffle.partitions` to throughput before that start is
-    * exactly what a real deployment does (here: 40k rows → 8
-    * partitions; a 100 TB stream would size UP the same way). The clone
-    * keeps the tuning off the shared batch session. */
   /** The q55/q58 arrival shape — ONE definition so the two
     * stream-stream joins cannot drift apart. */
   private val ArrivalSchema = StructType(Seq(
@@ -71,6 +62,15 @@ object StreamingQueries extends QueryPack {
     (clicks, purchases, cond)
   }
 
+  /** Clone of `s` with state partitions sized to the stream's volume.
+    * Stream-stream joins keep FOUR state stores per side per partition;
+    * at the session's 32 shuffle partitions even a 2-row micro-batch
+    * commits 128 store deltas (~4 s measured per batch). A streaming
+    * query's state partitioning is pinned by its first start — sizing
+    * `spark.sql.shuffle.partitions` to throughput before that start is
+    * exactly what a real deployment does (here: 40k rows → 8
+    * partitions; a 100 TB stream would size UP the same way). The clone
+    * keeps the tuning off the shared batch session. */
   private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
@@ -157,7 +157,8 @@ object StreamingQueries extends QueryPack {
 
   /** STANDING admission artifacts, memoized per (session, dir) like the
     * other shared frames: the q101 corpus (distinct content keys +
-    * their bloom) and the q105 [[graft.ext.Dedup.NearDupIndex]]. A
+    * their bloom) and the q105 [[graft.ext.Dedup.NearDupIndex]]
+    * ([[DedupQueries.standingNearDupIndex]]). A
     * production admission gate builds these once per corpus snapshot
     * and keeps them standing across micro-batch drains — rebuilding
     * (and unpersisting) per invocation, as these queries did before r5,
@@ -178,13 +179,29 @@ object StreamingQueries extends QueryPack {
     }
   }
 
-  private def standingNearDupIndex(s: SparkSession, d: String)
-      : graft.ext.Dedup.NearDupIndex = {
-    def corpus = Tables.documents(s, d).filter(col("doc_id") % 9 =!= 4)
-      .select(col("doc_id"), col("text"))
-    FrameCache.get(s, "q105-neardup", d, ArtifactStore.nearDupCodec(s, corpus))(
-      graft.ext.Dedup.buildNearDupIndex(corpus, "doc_id", "text", shingleN = 3,
-        k = DedupQueries.K, bands = DedupQueries.Bands, threshold = 0.8))
+  /** The document-admission shell of q101/q105: the `inDelta` documents
+    * arrive as two ordered files (even, then odd doc_id) staged once
+    * under fixture `kind`, drain one file per micro-batch through
+    * `admit` (the per-batch gate, returning the admitted (doc_id,
+    * source) rows), and tally n_delta/n_admitted per source. */
+  private def admission(s: SparkSession, d: String, name: String,
+      kind: String, inDelta: Column)(admit: DataFrame => DataFrame): DataFrame = {
+    def delta = Tables.documents(s, d).filter(inDelta)
+    val fxDir = fixtureDir(kind, d) { fx =>
+      val docs = delta.select(col("doc_id"), col("source"), col("text"))
+      val in = new java.io.File(s"$fx/in"); in.mkdirs()
+      stageSingleFile(docs.filter(col("doc_id") % 2 === 0), fx, in, "001_even.json")
+      stageSingleFile(docs.filter(col("doc_id") % 2 === 1), fx, in, "002_odd.json")
+    }
+    val ss = streamSession(s)
+    val out = drainToParquet(name, ss.readStream.schema(DocArrivalSchema)
+      .option("maxFilesPerTrigger", 1).json(s"$fxDir/in"), admit)
+    val totals = delta.groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
+    val adm = ss.read.parquet(out)
+      .groupBy(col("source")).agg(count(lit(1)).as("n_admitted"))
+    totals.join(adm, Seq("source"), "left")
+      .na.fill(0L, Seq("n_admitted"))
+      .orderBy(col("source"))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -422,46 +439,28 @@ object StreamingQueries extends QueryPack {
     //      joining the few-% that might collide. Admitted set is exact,
     //      so the oracle is the plain batch anti join. ----
     "q101_stream_bloom_dedup" -> ((s, d) => {
-      val fxDir = fixtureDir("blmdedup", d) { fx =>
-        val delta = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
-          .select(col("doc_id"), col("source"), col("text"))
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        def stage(df: DataFrame, name: String): Unit =
-          stageSingleFile(df, fx, in, name)
-        stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
-        stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
-      }
-      val ss = streamSession(s)
       // standing artifacts (memoized on the BASE session — streamSession
       // clones a new session per invocation): corpus fold paid once,
-      // reused by every subsequent drain over the same snapshot
-      val (corpusKeys, bloom) = corpusBloom(s, d)
-      val out = drainToParquet("q101_stream_bloom_dedup", ss.readStream
-          .schema(DocArrivalSchema)
-          .option("maxFilesPerTrigger", 1).json(s"$fxDir/in"), { batch =>
-          // DELIBERATELY uncached (unlike q107's per-batch frame): the
-          // lineage here is one JSON file read + map-side md5/bloom
-          // probes, and cache() overhead measured MORE than the
-          // re-evaluation it saves (5.2 vs 3.4 s total; BASELINE.md r5
-          // row). Cache per-batch frames only when lineage is expensive.
-          val withCk = batch
-            .withColumn("ck", md5(col("text").cast("binary")))
-          val hit = graft.ext.BloomPrune.mightContain(bloom, col("ck"))
-          val definiteNew = withCk.filter(!hit)
-          val confirmedNew = withCk.filter(hit)
-            .join(corpusKeys, Seq("ck"), "left_anti")
-          definiteNew.unionByName(confirmedNew)
-            .select(col("doc_id"), col("source"))
-      })
+      // reused by every subsequent drain over the same snapshot.
       // corpusKeys stays cached — it is the standing snapshot artifact,
       // owned by its FrameCache entry, not this drain
-      val totals = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
-      val adm = ss.read.parquet(out)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_admitted"))
-      totals.join(adm, Seq("source"), "left")
-        .na.fill(0L, Seq("n_admitted"))
-        .orderBy(col("source"))
+      val (corpusKeys, bloom) = corpusBloom(s, d)
+      admission(s, d, "q101_stream_bloom_dedup", "blmdedup",
+          col("doc_id") % 7 === 3) { batch =>
+        // DELIBERATELY uncached (unlike q107's per-batch frame): the
+        // lineage here is one JSON file read + map-side md5/bloom
+        // probes, and cache() overhead measured MORE than the
+        // re-evaluation it saves (5.2 vs 3.4 s total; BASELINE.md r5
+        // row). Cache per-batch frames only when lineage is expensive.
+        val withCk = batch
+          .withColumn("ck", md5(col("text").cast("binary")))
+        val hit = graft.ext.BloomPrune.mightContain(bloom, col("ck"))
+        val definiteNew = withCk.filter(!hit)
+        val confirmedNew = withCk.filter(hit)
+          .join(corpusKeys, Seq("ck"), "left_anti")
+        definiteNew.unionByName(confirmedNew)
+          .select(col("doc_id"), col("source"))
+      }
     }),
 
     // ---- Streaming NEAR-dup admission: q101's exact-key gate upgraded
@@ -478,34 +477,16 @@ object StreamingQueries extends QueryPack {
     //      (q80's CTE mirror) — admission is exactly "no verified
     //      near-dup pair against the corpus". ----
     "q105_stream_neardup_admission" -> ((s, d) => {
-      val fxDir = fixtureDir("nddedup", d) { fx =>
-        val delta = Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
-          .select(col("doc_id"), col("source"), col("text"))
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        def stage(df: DataFrame, name: String): Unit =
-          stageSingleFile(df, fx, in, name)
-        stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
-        stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
-      }
-      val ss = streamSession(s)
-      val idx = standingNearDupIndex(s, d)
-      val out = drainToParquet("q105_stream_neardup_admission", ss.readStream
-          .schema(DocArrivalSchema)
-          .option("maxFilesPerTrigger", 1).json(s"$fxDir/in"), { batch =>
-          // uncached: the anti join is the only reader of `rejected`
-          val rejected = idx.probe(batch, "doc_id", "text", shingleN = 3)
-            .select(col("d_id").as("doc_id")).distinct()
-          batch.join(rejected, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("source"))
-      })
+      val inDelta = col("doc_id") % 9 === 4
       // idx stays cached — standing snapshot artifact, owned by its FrameCache entry
-      val totals = Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_delta"))
-      val adm = ss.read.parquet(out)
-        .groupBy(col("source")).agg(count(lit(1)).as("n_admitted"))
-      totals.join(adm, Seq("source"), "left")
-        .na.fill(0L, Seq("n_admitted"))
-        .orderBy(col("source"))
+      val idx = DedupQueries.standingNearDupIndex(s, d, "q105-neardup", !inDelta)
+      admission(s, d, "q105_stream_neardup_admission", "nddedup", inDelta) { batch =>
+        // uncached: the anti join is the only reader of `rejected`
+        val rejected = idx.probe(batch, "doc_id", "text", shingleN = 3)
+          .select(col("d_id").as("doc_id")).distinct()
+        batch.join(rejected, Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("source"))
+      }
     }),
 
     // ---- Dead-letter routing: the failure-handling half of ingest.

@@ -302,9 +302,9 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the returned node set. Both algorithms must label the same nodes.
     val edges = Seq((1L, 2L), (7L, 7L)).toDF("a_id", "b_id")
     val expect = Map(1L -> 1L, 2L -> 1L, 7L -> 7L)
-    val minlabel = Dedup.connectedComponents(edges, algorithm = "minlabel")
+    val minlabel = Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.connectedComponents(edges, algorithm = "star")
+    val star = Dedup.connectedComponentsStar(edges)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(minlabel === expect)
     assert(star === expect)
@@ -323,16 +323,16 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // mixed shapes: same labelling as minlabel (chain + triangle + pair)
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L),
       (10L, 11L), (11L, 12L), (12L, 10L), (21L, 20L)).toDF("a_id", "b_id")
-    val a = Dedup.connectedComponents(edges, algorithm = "star").collect()
+    val a = Dedup.connectedComponentsStar(edges)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = Dedup.connectedComponents(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a === b)
     // empty edge list → empty labelling, no infinite loop
-    assert(Dedup.connectedComponents(path.limit(0), algorithm = "star").count() === 0L)
+    assert(Dedup.connectedComponentsStar(path.limit(0))._1.count() === 0L)
   }
 
-  test("minhashLshPairsAcross finds only cross-set pairs, never within-side") {
+  test("NearDupIndex.probe finds only cross-set pairs, never within-side") {
     // delta doc 100 ≈ corpus doc 1 (near-dup); corpus docs 1 and 2 are
     // near-dups of each other but must NOT appear (within-corpus);
     // delta docs 100 and 101 likewise (within-delta)
@@ -344,9 +344,11 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val delta = Seq(
       mk(100L, base), mk(101L, base + " tail"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashLshPairsAcross(delta, corpus, "doc_id", "text",
+    val idx = Dedup.buildNearDupIndex(corpus, "doc_id", "text",
       shingleN = 3, k = 16, bands = 4, threshold = 0.5)
+    val pairs = try idx.probe(delta, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    finally idx.unpersist()
     assert(pairs.nonEmpty, "expected the exact-duplicate cross pair")
     assert(pairs.forall { case (d, c) => d >= 100L && c < 100L },
       s"within-side pair leaked: $pairs")
