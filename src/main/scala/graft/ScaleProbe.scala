@@ -2,7 +2,6 @@ package graft
 
 import graft.ext.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Empirical scale-out probe for the scale-critical operator families.
@@ -54,9 +53,10 @@ object ScaleProbe {
   }
 
   /** Embedding replica `i`: rotation r = 1 + (i % (dim-1)) while
-    * i < dim (the r7–r13 record, byte-identical); i >= dim composes a
-    * coordinate REVERSAL (a fixed permutation — within-replica inner
-    * products survive) with an i % dim rotation — collision-free
+    * i < dim (kept byte-identical, so earlier SCALE.md volumes stay
+    * comparable); i >= dim composes a coordinate REVERSAL (a fixed
+    * permutation — within-replica inner products survive) with an
+    * i % dim rotation — collision-free
     * through [[replicaCap]], past which transforms repeat and the
     * constant-density property breaks (runFactor fails loudly). */
   def embeddingReplica(emb: DataFrame, i: Int, dim: Int): DataFrame =
@@ -110,6 +110,14 @@ object ScaleProbe {
       s"base $c range [${r.getLong(0)}, ${r.getLong(1)}] escapes " +
         "[0, 10M) — replica ids would collide")
   }
+
+  /** The fixed ANN evaluation set: the 100 smallest `vec_id`s with
+    * `vec_id % step == 0`. Replicas shift ids by i·10M, so above 4× more
+    * than 100 rows match; taking the smallest (not whichever 100 a
+    * `limit` meets first) keeps the set, and every count measured on it,
+    * independent of partitioning and core count. */
+  private[graft] def evalSet(df: DataFrame, step: Long): DataFrame =
+    df.filter(col("vec_id") % step === 0).orderBy(col("vec_id")).limit(100)
 
   /** Replicate once per factor (skip only when a COMPLETED replication
     * is present), then time each op. */
@@ -305,14 +313,13 @@ object ScaleProbe {
     //     deep-diameter worst case for min-label propagation (its
     //     iteration bound is the component diameter; near-dup graphs
     //     are clique-like so the default is right for dedup, but a
-    //     pathological graph must not wedge the engine). Since r8 the
-    //     default API detects min-label non-convergence and auto-falls
-    //     back to the alternating-star algorithm, so this measures the
-    //     WORST-CASE TOTAL a caller pays on the pathological shape
-    //     (maxIter wasted min-label rounds + the star run) and asserts
-    //     the answer is the ONE true component — the pre-r8 shattered
-    //     result (9,985 components behind a WARN) is no longer
-    //     reachable through the public API.
+    //     pathological graph must not wedge the engine). The default
+    //     API detects min-label non-convergence and falls back to the
+    //     alternating-star algorithm, so this measures the WORST-CASE
+    //     TOTAL a caller pays on the pathological shape (maxIter wasted
+    //     min-label rounds + the star run) and asserts the answer is
+    //     the ONE true component, where min-label propagation alone
+    //     leaves the chain shattered into thousands of components.
     if (wanted("cc_chain_default_fallback", "cc_chain_star_rounds")) {
       val nChain = 2500L * f
       val chain = s.range(nChain - 1)
@@ -376,15 +383,11 @@ object ScaleProbe {
       val _ = step
     }
     timed("ann_brute_top10") {
-      val queries = emb.filter(col("vec_id") % step === 0).limit(100)
+      val queries = evalSet(emb, step)
         .select(col("vec_id").as("q_id"), col("embedding").as("q"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("score").desc, col("vec_id"))
-      emb.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      val scored = emb.join(broadcast(queries), col("vec_id") =!= col("q_id"))
         .withColumn("score", Similarity.dot(col("embedding"), col("q")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .count()
+      Similarity.topByScore(scored, "score", 10).count()
     }
 
     // 10. IVF probe against the same eval set: the corpus cell
@@ -404,36 +407,20 @@ object ScaleProbe {
         .select(col("vec_id"), col("ne"))
       val sample = nemb.filter(col("vec_id") % 2 === 0)
       val cents = Similarity.trainKmeans(sample, k, 3, dim)
-      val cells = nemb
-        .select(col("vec_id"), col("ne"),
-          explode(Similarity.assignCells(col("ne"), cents, 2)).as("cell"))
+      val cells = Similarity.ivfCells(nemb, cents, 2)
       cells.cache(); cells.count() // untimed snapshot investment
-      val queries = nemb.filter(col("vec_id") % step === 0).limit(100)
-        .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-          explode(Similarity.assignCells(col("ne"), cents, probeCells)).as("cell"))
+      // the production probe: distinct (q_id, vec_id, cos) candidates
+      val candidates = Similarity.ivfCandidates(cells, cents, evalSet(nemb, step), probeCells)
       try {
         timed("ann_ivf_probe") {
-          val w = Window.partitionBy(col("q_id"))
-            .orderBy(col("score").desc, col("vec_id"))
-          cells.join(broadcast(queries),
-              cells("cell") === queries("cell")
-                && col("vec_id") =!= col("q_id"))
-            .select(col("q_id"), col("vec_id"),
-              Similarity.dot(col("ne"), col("qe")).as("score"))
-            .distinct() // multi-assign ∩ multi-probe dupes
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 10)
-            .count()
+          Similarity.topByScore(candidates, "cos", 10).count()
         }
-        // Untimed: the scored-candidate volume — the number that
-        // dominates at real scale, where scoring (not shuffle setup)
-        // is the cost. Brute scores (n-1)·100; the ratio is the
-        // pruning factor the √n cell count is meant to hold constant.
+        // The scored-candidate volume — the number that dominates at
+        // real scale, where scoring (not shuffle setup) is the cost.
+        // Brute scores (n-1)·100; the ratio is the pruning factor the
+        // √n cell count is meant to hold constant.
         timed("ann_ivf_candidates") {
-          cells.join(broadcast(queries),
-              cells("cell") === queries("cell")
-                && col("vec_id") =!= col("q_id"))
-            .select(col("q_id"), col("vec_id")).distinct().count()
+          candidates.count()
         }
       } finally cells.unpersist()
     }
@@ -441,11 +428,11 @@ object ScaleProbe {
     // 13+14. Per-source mean at the UNBOUNDED-group extreme: EVERY
     //     vector of the replicated corpus forced into ONE source group
     //     — the q87/q109 shape whose oracle-mode fold materializes the
-    //     whole group into a single row (the r8 verdict's last
-    //     100×-unsafe plan). The production tree-reduced VecMean must
-    //     stay ~flat per row (bounded (count, sum[d]) state, map-side
-    //     partials); the pinned fold is measured alongside as the
-    //     pathology baseline — its one-row array grows with the
+    //     whole group into a single row, which is unsafe at 100× scale.
+    //     The production tree-reduced VecMean must stay ~flat per row
+    //     (bounded (count, sum[d]) state, map-side partials); the
+    //     pinned fold is measured alongside as the pathology
+    //     baseline — its one-row array grows with the
     //     corpus, so this deliberately-OOM-able op runs LAST in the
     //     factor: a fold blowup at an extreme factor must not abort
     //     the other ops' measurements. rows = the group size (the

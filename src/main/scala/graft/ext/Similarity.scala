@@ -101,9 +101,8 @@ object Similarity {
     * matrix, ranked by rounded dot desc with index tie-break — the same
     * total order the SQL oracle's `ORDER BY round(dot,6) DESC, c`
     * produces. Assignment is a pure per-row expression: NO crossJoin
-    * expansion, NO shuffle, NO window (this replaced the round-2
-    * corpus×centroids window argmax, which shuffled the whole expanded
-    * frame by vec_id).
+    * expansion, NO shuffle, NO window (a corpus×centroids window argmax
+    * would shuffle the whole expanded frame by vec_id).
     *
     * The codegen'd [[graft.functions.CellAssign]] kernel computes all k
     * dots, the rounding and the partial sort in one primitive pass; the
@@ -116,6 +115,36 @@ object Similarity {
       graft.functions.CellAssign(
         org.apache.spark.sql.GraftColumnBridge.expression(ne),
         graft.functions.CentroidMatrix(cents), m))
+
+  /** `df` (vec_id, ne, ...) with each row exploded to its top-`m` cells
+    * in `cell` — the IVF inverted index when `df` is the corpus and `m`
+    * the assignment width, the probe set when `df` is the queries and
+    * `m` the probe width. Every IVF consumer indexes through here. */
+  def ivfCells(df: DataFrame, cents: Seq[Array[Double]], m: Int): DataFrame =
+    df.withColumn("cell", explode(assignCells(col("ne"), cents, m)))
+
+  /** Probe hits (q_id, qe, vec_id, ne) → distinct (q_id, vec_id, cos).
+    * The cosine is computed map-side while both vectors are in hand,
+    * THEN the rows are deduped: multi-probe duplicates of a pair carry
+    * the same vectors (vec_id is unique), so their cosines are equal and
+    * the distinct keeps one row per pair — but neither the distinct's
+    * exchange nor a cached candidate frame carries the 2×64-double
+    * payloads (PlanPostureSpec pins this). */
+  def scoredCandidates(hits: DataFrame): DataFrame =
+    hits.filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"), dot(col("qe"), col("ne")).as("cos"))
+      .distinct()
+
+  /** Scored (q_id, vec_id, cos) IVF candidates of `queries` (vec_id, ne)
+    * against the (vec_id, ne, cell) index `cells`: each query probes its
+    * top-`probes` cells, and the BROADCAST probe set meets the index in
+    * a cell equi-join, so the corpus never shuffles. The one IVF probe:
+    * the batch candidate memo, q111's micro-batches, a loaded index and
+    * ScaleProbe all run it. */
+  def ivfCandidates(cells: DataFrame, cents: Seq[Array[Double]],
+      queries: DataFrame, probes: Int): DataFrame =
+    scoredCandidates(cells.join(broadcast(ivfCells(queries, cents, probes)
+      .select(col("vec_id").as("q_id"), col("ne").as("qe"), col("cell"))), Seq("cell")))
 
   /** Int8 scalar quantization of `ne`: its max-abs `scale` and its
     * components rounded to [-127, 127] against it (`q8`), as the
@@ -132,6 +161,19 @@ object Similarity {
       .withColumn("q8", org.apache.spark.sql.GraftColumnBridge.column(
         graft.functions.Int8Quantize(e, ansi)))
   }
+
+  /** Element-wise sum of a group's `dims`-long vectors `v`, folded in
+    * vec_id order — one aggregate column. The sort pins the summation
+    * order, so the doubles do not depend on how the group's rows were
+    * partitioned, and the 0.0-init left fold equals SQL `list_reduce`
+    * over `list(v ORDER BY vec_id)` bit-for-bit. The group is
+    * materialized into one row: an oracle-exact fold, not a bounded
+    * aggregate ([[VecMean]] is that). Every order-pinned vector mean
+    * (k-means and PQ training, q87's exact means) sums here. */
+  def orderedSum(v: Column, dims: Int): Column =
+    aggregate(
+      transform(array_sort(collect_list(struct(col("vec_id"), v.as("v")))), _.getField("v")),
+      typedLit(Seq.fill(dims)(0.0)), (acc, x) => zip_with(acc, x, _ + _))
 
   /** Lloyd k-means over a (vec_id, ne) sample, engine-portable: every
     * float operation is a deterministic sequential fold so an external
@@ -152,16 +194,11 @@ object Similarity {
       df.collect().map(_.getAs[scala.collection.Seq[Double]](c).toArray).toSeq
     var cents = vecs(sample.orderBy(col("vec_id")).limit(k).select(col("ne")), "ne")
     require(cents.size == k, s"sample smaller than k=$k")
-    val zero = typedLit(Seq.fill(dims)(0.0))
     for (_ <- 0 until iters) {
       val upd = sample
         .withColumn("cell", element_at(assignCells(col("ne"), cents, 1), 1))
         .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("vec_id"), col("ne")))).as("vs"),
-          count(lit(1)).as("cnt"))
-        .withColumn("ssum", aggregate(
-          transform(col("vs"), v => v.getField("ne")), zero,
-          (acc, x) => zip_with(acc, x, _ + _)))
+        .agg(orderedSum(col("ne"), dims).as("ssum"), count(lit(1)).as("cnt"))
         .withColumn("mean", transform(col("ssum"), _ / col("cnt")))
         .withColumn("nrm", sqrt(dot(col("mean"), col("mean"))))
         .select(col("cell"), transform(col("mean"), _ / col("nrm")).as("ce"))
@@ -218,7 +255,6 @@ object Similarity {
     require(init.length == k, s"sample smaller than k=$k")
     var cb: Seq[Seq[Array[Double]]] = (0 until subs).map(m =>
       init.toSeq.map(v => v.slice(m * subD, (m + 1) * subD)))
-    val zero = typedLit(Seq.fill(subD)(0.0))
     for (_ <- 0 until iters) {
       val cbLit = typedLit(cb.map(_.map(_.toSeq)))
       val upd = ex
@@ -226,11 +262,7 @@ object Similarity {
           ce => dist2(col("sub"), ce)))
         .withColumn("code", argminIdx(col("dists")))
         .groupBy(col("m"), col("code"))
-        .agg(array_sort(collect_list(struct(col("vec_id"), col("sub")))).as("vs"),
-          count(lit(1)).as("cnt"))
-        .withColumn("ssum", aggregate(
-          transform(col("vs"), v => v.getField("sub")), zero,
-          (acc, x) => zip_with(acc, x, _ + _)))
+        .agg(orderedSum(col("sub"), subD).as("ssum"), count(lit(1)).as("cnt"))
         .select(col("m"), col("code"),
           transform(col("ssum"), _ / col("cnt")).as("ce"))
       val updMap = upd.collect().map(r => (r.getInt(0), r.getInt(1)) ->

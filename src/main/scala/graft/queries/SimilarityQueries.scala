@@ -58,7 +58,7 @@ object SimilarityQueries extends QueryPack {
   private[queries] val IvfIters = 3    // Lloyd iterations
   private[queries] val SemTau = 0.3    // SemDeDup within-cluster cosine threshold
   private[queries] val IvfAssignN = 2  // corpus multi-assignment (top-2 cells)
-  private[queries] val IvfProbes = 12  // query probes (top-12 cells)
+  private[graft] val IvfProbes = 12    // query probes (top-12 cells)
   private val OutlierCos = 0.0 // flag vectors anti-correlated with their domain
 
   /** (vec_id, ne [, bucket]) — normalized corpus, optional LSH bucket.
@@ -91,8 +91,8 @@ object SimilarityQueries extends QueryPack {
     * deterministic, so q50/q57/q59 (and repeated bench runs) share one
     * training pass instead of re-running Lloyd each time. This entry is
     * the matrix's one owner: with a persisted IVF index it loads the
-    * index's matrix, so a consumer that reaches centroids before cells
-    * (q69/q73/q79) never re-trains in a restarted process, and the cells
+    * index's matrix, so a consumer that reads only the centroids
+    * (q73/q79) never re-trains in a restarted process, and the cells
     * are only loaded when built against this matrix. */
   private def centroids(s: SparkSession, d: String): Seq[Array[Double]] =
     FrameCache.get("ivf-centroids", d,
@@ -145,7 +145,7 @@ object SimilarityQueries extends QueryPack {
 
   /** Scored candidate frames, (q_id, vec_id, cos) — memoized AND CACHED
     * per (session, dir): q39/q57/q59 consume the LSH candidates and
-    * q50/q57/q59/q64 the IVF candidates. Without the cache each consumer
+    * q50/q57/q59/q64/q69 the IVF candidates. Without the cache each consumer
     * re-runs the multi-table probe joins (~1 s each at sf0.1); holding
     * the cosine instead of both 64-double vectors keeps the cached
     * block ~90× smaller. */
@@ -180,7 +180,7 @@ object SimilarityQueries extends QueryPack {
     * each probed at the home bucket plus `AnnFlips` one-bit margin
     * flips. All projections/buckets are map-side expressions; the corpus
     * meets the BROADCAST probe set in a (t, bucket) equi-join, then
-    * [[scoredCandidates]]. */
+    * [[Similarity.scoredCandidates]]. */
   private def buildLshCandidates(s: SparkSession, d: String): DataFrame = {
     var e = prepped(s, d)
     for (t <- 0 until AnnTables) {
@@ -208,21 +208,8 @@ object SimilarityQueries extends QueryPack {
                 element_at(flipMask, element_at(col(s"f$t"), k) + 1))
                 .as("bucket")))): _*)).as("tb"))
       .select(col("q_id"), col("qe"), col("tb.t"), col("tb.bucket"))
-    scoredCandidates(idx.join(broadcast(probes), Seq("t", "bucket")))
+    Similarity.scoredCandidates(idx.join(broadcast(probes), Seq("t", "bucket")))
   }
-
-  /** Probe hits (q_id, qe, vec_id, ne) → distinct (q_id, vec_id, cos).
-    * The cosine is computed map-side while both vectors are in hand,
-    * THEN the rows are deduped: multi-probe duplicates of a pair carry
-    * the same vectors (vec_id is unique), so their cosines are equal and
-    * the distinct keeps one row per pair — but neither the distinct's
-    * exchange nor the cached frame carries the 2×64-double payloads
-    * (PlanPostureSpec pins this). */
-  private def scoredCandidates(hits: DataFrame): DataFrame =
-    hits.filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.dot(col("qe"), col("ne")).as("cos"))
-      .distinct()
 
   /** The standing IVF inverted index: every corpus vector exploded to
     * its top-[[IvfAssignN]] cells — memoized AND CACHED per (session,
@@ -232,35 +219,14 @@ object SimilarityQueries extends QueryPack {
   private def corpusCells(s: SparkSession, d: String): DataFrame =
     FrameCache.get(s, "ivf-index", d,
         ArtifactStore.ivfCodec(s, embeddingsSnapshot(s, d), centroids(s, d)))(
-      prepped(s, d)
-        .withColumn("cells", Similarity.assignCells(col("ne"), centroids(s, d), IvfAssignN))
-        .select(col("vec_id"), col("ne"), explode(col("cells")).as("cell"))
-        .cache())
+      Similarity.ivfCells(prepped(s, d), centroids(s, d), IvfAssignN).cache())
 
-  /** Scored (q_id, vec_id, cos) IVF candidates: corpus indexed in
-    * its top-`IvfAssignN` cells, queries probe their top-`IvfProbes`
-    * cells. Assignment is one map-side kernel per row
-    * ([[Similarity.assignCells]] — no crossJoin/window, and no centroid
-    * literal in the plan); the corpus meets the BROADCAST probe set in
-    * a cell equi-join, then [[scoredCandidates]]. */
+  /** Scored (q_id, vec_id, cos) IVF candidates: the evaluation queries
+    * probe their top-`IvfProbes` cells of the standing index
+    * ([[Similarity.ivfCandidates]]). */
   private def buildIvfCandidates(s: SparkSession, d: String): DataFrame =
-    ivfCandidatesFrom(corpusCells(s, d), centroids(s, d),
-      prepped(s, d).filter(isQuery(s, d)))
-
-  /** IVF candidates from EXPLICIT index artifacts — the seam that lets
-    * a session probe a loaded ([[graft.sinks.ArtifactStore]]) index it
-    * did not build; [[buildIvfCandidates]] is this applied to the
-    * in-memory artifacts, and q111's micro-batch search applies it to
-    * each batch. `queries` is a (vec_id, ne) frame; the result is the
-    * scored (q_id, vec_id, cos) frame of [[scoredCandidates]]. */
-  private[graft] def ivfCandidatesFrom(cells: DataFrame,
-      cents: Seq[Array[Double]], queries: DataFrame): DataFrame = {
-    val probes = queries
-      .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
-      .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-        explode(col("cells")).as("cell"))
-    scoredCandidates(cells.join(broadcast(probes), Seq("cell")))
-  }
+    Similarity.ivfCandidates(corpusCells(s, d), centroids(s, d),
+      prepped(s, d).filter(isQuery(s, d)), IvfProbes)
 
   /** The standing IVF artifacts (inverted index + centroid matrix) for
     * `d` — what [[graft.sinks.ArtifactStore.saveIvfIndex]] persists. */
@@ -288,9 +254,8 @@ object SimilarityQueries extends QueryPack {
     * reports and q109 scores against. Two modes, because the exact one
     * does not scale:
     *
-    *  - `exact = true` (the local/Verify default): ORDER-PINNED
-    *    sequential fold — array_sort(collect_list(struct(vec_id, ne)))
-    *    then aggregate/zip_with, the trainKmeans update shape. DuckDB
+    *  - `exact = true` (the local/Verify default): the ORDER-PINNED
+    *    [[Similarity.orderedSum]] fold k-means training also uses. DuckDB
     *    reproduces the doubles bit-for-bit, which is what hash-exact
     *    oracle verification needs — but it materializes each source
     *    group into ONE row: fine at eval scale, an executor OOM at a
@@ -310,15 +275,9 @@ object SimilarityQueries extends QueryPack {
     // n_vecs must match the mean's denominator in both modes.
     val nn = e.filter(col("ne").isNotNull)
     if (exact) {
-      val zero = typedLit(Seq.fill(Dims)(0.0))
       nn.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_vecs"),
-          array_sort(collect_list(struct(col("vec_id"), col("ne")))).as("vs"))
-        .withColumn("ssum", aggregate(
-          transform(col("vs"), v => v.getField("ne")), zero,
-          (acc, x) => zip_with(acc, x, _ + _)))
-        .withColumn("mean", transform(col("ssum"), _ / col("n_vecs")))
-        .select(col("source"), col("n_vecs"), col("mean"))
+        .agg(count(lit(1)).as("n_vecs"), Similarity.orderedSum(col("ne"), Dims).as("ssum"))
+        .select(col("source"), col("n_vecs"), transform(col("ssum"), _ / col("n_vecs")).as("mean"))
     } else {
       val vecMean = udaf(new graft.ext.VecMean(Dims))
       nn.groupBy(col("source"))
@@ -371,16 +330,26 @@ object SimilarityQueries extends QueryPack {
         * col("qscale") * col("scale") / (127.0 * 127.0)), "cosq", 3)
   }
 
-  /** The two-stage PQ tail over (q_id, vec_id, qe, ne, codes, luts)
-    * candidate pairs: the ADC top-[[PqRerank]] shortlist (rank `ra`),
-    * re-ranked by exact dots. Returns (exact re-rank top-3, ADC top-3);
+  /** The PQ-coded corpus (vec_id, ne, codes) and the evaluation queries
+    * with their ADC lookup tables (q_id, qe, luts) — the two sides q65
+    * and q69 score candidate pairs from. */
+  private def pqFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val cb = pqCodebooks(s, d)
+    val e = prepped(s, d)
+    (e.select(col("vec_id"), col("ne"), Similarity.pqCodes(col("ne"), cb, Dims).as("codes")),
+      e.filter(isQuery(s, d)).select(col("vec_id").as("q_id"), col("ne").as("qe"),
+        Similarity.pqLuts(col("ne"), cb, Dims).as("luts")))
+  }
+
+  /** The two-stage PQ tail over (q_id, vec_id, codes, luts) candidate
+    * pairs: the ADC top-[[PqRerank]] shortlist (rank `ra`), re-ranked by
+    * the exact cosine `cos`. Returns (exact re-rank top-3, ADC top-3);
     * both come from the shortlist, whose `ra` ≤ 3 rows are the ADC
     * top-3. */
-  private def adcRerank(pairs: DataFrame): (DataFrame, DataFrame) = {
+  private def adcRerank(pairs: DataFrame, cos: Column): (DataFrame, DataFrame) = {
     val short = Similarity.topByScore(pairs.withColumn("adc",
       Similarity.adcScore(col("codes"), col("luts"), PqSubs)), "adc", PqRerank, "ra")
-    (Similarity.topByScore(
-      short.withColumn("cos", Similarity.dot(col("qe"), col("ne"))), "cos", 3),
+    (Similarity.topByScore(short.withColumn("cos", cos), "cos", 3),
       short.filter(col("ra") <= 3))
   }
 
@@ -456,46 +425,29 @@ object SimilarityQueries extends QueryPack {
     //      (recall_adc shows what the codes alone buy; recall_pq what
     //      the deployment gets: 0.96 @ sf0.01, 0.92 @ sf0.1). ----
     "q65_pq_recall" -> ((s, d) => {
-      val cb = pqCodebooks(s, d)
-      val e = prepped(s, d)
-      val coded = e.select(col("vec_id"), col("ne"),
-        Similarity.pqCodes(col("ne"), cb, Dims).as("codes"))
-      val q = e.filter(isQuery(s, d))
-        .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-          Similarity.pqLuts(col("ne"), cb, Dims).as("luts"))
+      val (coded, q) = pqFrames(s, d)
       val (top3, adc3) = adcRerank(coded.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id")))
+        .filter(col("vec_id") =!= col("q_id")), Similarity.dot(col("qe"), col("ne")))
       // the re-rank hits join first; the columns report the ADC stage first
       recallVsExact(s, d, ("n_hit", "recall_pq", top3), ("n_adc", "recall_adc", adc3))
         .select("n_true", "n_adc", "n_hit", "recall_adc", "recall_pq")
     }),
 
-    // ---- IVFPQ — the production ANN architecture at 100 TB: inverted
-    //      lists carry the 96-bit PQ codes (attached at INDEX time, so
-    //      candidate scoring needs no join back to the float corpus),
-    //      queries probe their top cells and score candidates by ADC
-    //      lookups, and only the top-PqRerank shortlist touches float
-    //      vectors for the exact re-rank. ~4.4× candidate pruning ×
-    //      ~21× list compression × O(16) per-candidate scoring, with
-    //      the end-to-end recall measured against the float exact
-    //      baseline. ----
+    // ---- IVFPQ — the production ANN architecture at 100 TB: queries
+    //      probe their top cells, candidates are scored by ADC lookups
+    //      over their 96-bit PQ codes, and the top-PqRerank shortlist
+    //      is re-ranked by exact cosine, with the end-to-end recall
+    //      measured against the float exact baseline. The candidates
+    //      are q50's standing (q_id, vec_id, cos) set, joined to the
+    //      coded corpus and the query LUTs. Their exact cosines were
+    //      already computed for q50 and are cached, so here the ADC
+    //      stage picks the shortlist and saves no float work; in a
+    //      deployment that does not hold the cosines, the shortlist is
+    //      the only part that touches float vectors. ----
     "q69_ivfpq_recall" -> ((s, d) => {
-      val cb = pqCodebooks(s, d)
-      val cents = centroids(s, d)
-      val e = prepped(s, d)
-      val idx = e
-        .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
-        .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfAssignN))
-        .select(col("vec_id"), col("ne"), col("codes"),
-          explode(col("cells")).as("cell"))
-      val probes = e.filter(isQuery(s, d))
-        .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfProbes))
-        .select(col("vec_id").as("q_id"), col("ne").as("qe"),
-          Similarity.pqLuts(col("ne"), cb, Dims).as("luts"),
-          explode(col("cells")).as("cell"))
-      val (top3, adc3) = adcRerank(idx.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .dropDuplicates("q_id", "vec_id")) // multi-assign/probe dups carry identical payloads
+      val (coded, q) = pqFrames(s, d)
+      val (top3, adc3) = adcRerank(
+        ivfCandidates(s, d).join(coded, "vec_id").join(broadcast(q), "q_id"), col("cos"))
       recallVsExact(s, d, ("n_hit", "recall_ivfpq", top3),
           ("n_adc", "recall_adc_ivf", adc3))
         .select("n_true", "n_adc", "n_hit", "recall_adc_ivf", "recall_ivfpq")
@@ -519,11 +471,9 @@ object SimilarityQueries extends QueryPack {
       val in = ingestFixture(s, d)
       val schema = s.read.parquet(in).schema
       val out = StreamingQueries.drainToParquet("q73_stream_index_ingest",
-        s.readStream.schema(schema).parquet(in)
-          .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
-          .withColumn("cells", Similarity.assignCells(col("ne"), cents, IvfAssignN))
-          .select(col("vec_id"), element_at(col("codes"), 1).as("c0"),
-            explode(col("cells")).as("cell")))
+        Similarity.ivfCells(s.readStream.schema(schema).parquet(in)
+            .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims)), cents, IvfAssignN)
+          .select(col("vec_id"), element_at(col("codes"), 1).as("c0"), col("cell")))
       s.read.parquet(out)
         .select(col("cell").cast("long").as("cell"),
           col("c0").cast("long").as("c0"), col("vec_id"))
@@ -652,16 +602,17 @@ object SimilarityQueries extends QueryPack {
 
   /** q111's per-micro-batch search: raw (vec_id, embedding) queries →
     * top-3 neighbours per query, with the wave. The batch is probed
-    * against the standing index by the same [[ivfCandidatesFrom]] the
-    * batch IVF search uses, so neither the distinct nor the rank
+    * against the standing index by the same [[Similarity.ivfCandidates]]
+    * the batch IVF search uses, so neither the distinct nor the rank
     * exchange ships the 2×64-double payloads (PlanPostureSpec pins
     * this). */
   private[graft] def annSearchBatch(s: SparkSession, d: String)
       : DataFrame => DataFrame = {
     val idx = corpusCells(s, d)
     val cents = centroids(s, d)
-    batch => rankTopK(ivfCandidatesFrom(idx, cents,
-        Similarity.withNormalized(batch, "embedding").select(col("vec_id"), col("ne"))), 3)
+    batch => rankTopK(Similarity.ivfCandidates(idx, cents,
+        Similarity.withNormalized(batch, "embedding").select(col("vec_id"), col("ne")),
+        IvfProbes), 3)
       .withColumn("wave", col("q_id") % 2)
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.ext.{BloomPrune, Dedup}
+import graft.ext.{BloomPrune, Dedup, Similarity}
 import graft.queries.SimilarityQueries
 import graft.runtime.FrameCache
 import graft.sinks.ArtifactStore
@@ -150,8 +150,9 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
         .orderBy(col("q_id"), col("rk")).collect().map(_.toSeq).toSeq
     }
     val probeFilter = col("vec_id") % 101 === 7
-    val want = topk(SimilarityQueries.ivfCandidatesFrom(cells, cents,
-      SimilarityQueries.preppedEmbeddings(spark, sf).filter(probeFilter)))
+    val want = topk(Similarity.ivfCandidates(cells, cents,
+      SimilarityQueries.preppedEmbeddings(spark, sf).filter(probeFilter),
+      SimilarityQueries.IvfProbes))
     assert(want.nonEmpty, "no IVF candidates — test would be vacuous")
 
     val fresh = spark.newSession()
@@ -159,8 +160,9 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lCents.size == cents.size &&
       lCents.zip(cents).forall { case (a, b) => a.sameElements(b) },
       "centroid matrix changed across save/load")
-    val got = topk(SimilarityQueries.ivfCandidatesFrom(lCells, lCents,
-      SimilarityQueries.preppedEmbeddings(fresh, sf).filter(probeFilter)))
+    val got = topk(Similarity.ivfCandidates(lCells, lCents,
+      SimilarityQueries.preppedEmbeddings(fresh, sf).filter(probeFilter),
+      SimilarityQueries.IvfProbes))
     lCells.unpersist()
     assert(got == want)
   }
@@ -756,17 +758,17 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a centroid-first query loads the persisted IVF matrix instead of re-training") {
-    // q69 reads the IVF centroids before the cells. With an IVF index
-    // persisted, a restarted process must take the index's matrix, not
-    // re-run Lloyd training (the trainKmeans jobs counted below). A
+    // q79 reads only the IVF centroids, never the cells. With an IVF
+    // index persisted, a restarted process must take the index's matrix,
+    // not re-run Lloyd training (the trainKmeans jobs counted below). A
     // private copy of the corpus keeps other suites' entries out.
     val d = copyCorpus(sf, "graft_art_cents_")
     val root = Files.createTempDirectory("graft_art_cents_root_").toString
-    val q69 = "q69_ivfpq_recall"
+    val q79 = "q79_semdedup"
     val s1 = freshSession(root)
     SparkEntry.queries("q111_stream_ann_search")(s1, d).collect()
     assert(ArtifactStore.lastOrigin.get("ivf-index").contains("built"))
-    val want = SparkEntry.queries(q69)(s1, d).collect().map(_.toSeq).toSeq
+    val want = SparkEntry.queries(q79)(s1, d).collect().map(_.toSeq).toSeq
 
     def lloydJobs(body: => Unit): Int = jobsCalledFrom("trainKmeans")(body).values.sum
     // a restarted process: no centroid matrix in memory
@@ -775,14 +777,14 @@ class ArtifactLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s2 = freshSession(root)
     var got = Seq.empty[Seq[Any]]
     assert(lloydJobs {
-      got = SparkEntry.queries(q69)(s2, d).collect().map(_.toSeq).toSeq
-    } == 0, "q69 re-trained the centroids a persisted IVF index carries")
+      got = SparkEntry.queries(q79)(s2, d).collect().map(_.toSeq).toSeq
+    } == 0, "q79 re-trained the centroids a persisted IVF index carries")
     assert(ArtifactStore.lastOrigin.get("ivf-index").contains("loaded"))
-    assert(got == want, "q69 answers changed across the restart")
+    assert(got == want, "q79 answers changed across the restart")
     // control: without the index the same query trains
     FrameCache.evict("ivf-centroids", d)
     val s3 = spark.newSession()
-    assert(lloydJobs(SparkEntry.queries(q69)(s3, d).collect()) > 0,
+    assert(lloydJobs(SparkEntry.queries(q79)(s3, d).collect()) > 0,
       "the listener does not see Lloyd training")
     Seq(s1, s2, s3).foreach(GraftSession.close)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Deduplicate
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
@@ -144,6 +145,21 @@ class PlanPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
     case _: InMemoryTableScanExec => Nil
     case e: ShuffleExchangeLike => e +: e.children.flatMap(shuffles)
     case other => other.children.flatMap(shuffles)
+  }
+
+  test("q69: ranks the cached IVF candidates — no vector exchange, no payload dedup above the candidate join") {
+    val df = SparkEntry.queries("q69_ivfpq_recall")(spark, sf)
+    // the candidate join and its distinct sit under the cached
+    // (q_id, vec_id, cos) relation, which neither check below enters
+    val above = df.queryExecution.withCachedData
+    val cached = above.collect { case r: InMemoryRelation => r.output.map(_.name) }
+    assert(cached.contains(Seq("q_id", "vec_id", "cos")),
+      s"q69 no longer reads the cached candidate set: $cached")
+    val dedups = above.collect { case d: Deduplicate => d.keys }
+    assert(dedups.isEmpty, s"q69 dedups candidate payloads: $dedups")
+    shuffles(df.queryExecution.executedPlan).foreach(e =>
+      assert(!e.output.exists(_.dataType.isInstanceOf[ArrayType]),
+        s"a q69 exchange ships vectors, codes or LUTs: ${e.output}"))
   }
 
   test("q39/q50: the cached ANN candidates hold (q_id, vec_id, cos) — no vector column, no vector exchange") {

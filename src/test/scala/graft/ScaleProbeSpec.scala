@@ -115,6 +115,17 @@ class ScaleProbeSpec extends AnyFunSuite {
       s"within-replica NEAR-dup family lost: $pairs")
   }
 
+  test("the ANN eval set is the 100 smallest matching ids at any partitioning") {
+    // 1,120 ids in scrambled order (7919 is coprime to 1120), 112 of
+    // them multiples of 10 — more matches than the set holds, the shape
+    // replicated corpora take past 4×
+    val emb = spark.range(1120).select(((col("id") * 7919) % 1120).as("vec_id"))
+    def ids(parts: Int) = ScaleProbe.evalSet(emb.repartition(parts), 10)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(1) === (0L until 1000L by 10L))
+    assert(ids(8) === ids(1))
+  }
+
   test("requireIdRange: non-negative at EVERY factor, [0, 10M) at f > 1, null-safe") {
     // the r15 collision class, guarded on BOTH tables: replica ids
     // are base + i*10M and the hot-family / neardup-delta ops
