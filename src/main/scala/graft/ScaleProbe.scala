@@ -207,47 +207,25 @@ object ScaleProbe {
       Dedup.minhashLshPairs(docs, "doc_id", "text").count()
     }
 
-    // 4. SimHash banding: 60-bit sig, 4×15-bit chunks, hamming ≤ 3.
+    // 4. SimHash banding: 60-bit sig, 4×15-bit chunks, hamming ≤ 3 —
+    //    q36's pair stage.
     timed("simhash_pairs") {
       val sig = docs
         .withColumn("th", Dedup.tokenHashes(col("text")))
-        .withColumn("sh", Dedup.simhashFromHashes(col("th"), 60))
-        .select(col("doc_id"), col("sh"))
+        .select(col("doc_id"), Dedup.simhashFromHashes(col("th"), 60).as("sh"))
       sig.cache(); sig.count()
-      try {
-        val bands = sig
-          .select(col("doc_id"), posexplode(Dedup.simhashChunks(col("sh"), 15, 4)))
-          .toDF("doc_id", "c", "v")
-        val cand = Dedup.pairsFromBuckets(bands, Seq("c", "v"), "doc_id")
-        cand
-          .join(sig.select(col("doc_id").as("a_id"), col("sh").as("sa")), "a_id")
-          .join(sig.select(col("doc_id").as("b_id"), col("sh").as("sb")), "b_id")
-          .filter(Dedup.hamming(col("sa"), col("sb")) <= 3)
-          .count()
-      } finally sig.unpersist()
+      try Dedup.hammingPairs(sig, "doc_id", "sh", maxHam = 3).count()
+      finally sig.unpersist()
     }
 
-    // 5. Winnowing fingerprints → bucket candidates → jaccard verify
-    //    (the q37 shape: the verify join is the scale risk).
+    // 5. Winnowing fingerprints → bucket candidates → jaccard verify —
+    //    q37's pair stage (the verify join is the scale risk).
     timed("winnow_jaccard_pairs") {
-      val sh = docs
-        .withColumn("h", TextAnalysis.shingleHashes(col("text"), 3))
-        .filter(size(col("h")) > 0)
-        // fingerprints need the POSITIONAL hashes; the verify join needs
-        // the DISTINCT set — q37 applies array_distinct before jaccard
-        // (DedupQueries), and the IntersectSizeLong kernel's contract is
-        // distinct-element arrays (a repeated shingle would pair up in
-        // the merge count and inflate the pseudo-Jaccard past what
-        // size(array_intersect(..)) computes)
-        .select(col("doc_id"), array_distinct(col("h")).as("hd"),
-          TextAnalysis.fingerprintsFromHashes(col("h"), 4).as("fp"))
-      sh.cache(); sh.count()
-      try {
-        val cand = Dedup.pairsFromBuckets(
-          sh.select(col("doc_id"), explode(col("fp")).as("f")), Seq("f"), "doc_id")
-        val hd = sh.select(col("doc_id").as("id"), col("hd").as("hs"))
-        Dedup.verifiedPairs(cand, "a_id", "b_id", hd, hd, 0.8).count()
-      } finally sh.unpersist()
+      val hsh = docs.select(col("doc_id"),
+        TextAnalysis.shingleHashes(col("text"), 3).as("h"))
+      hsh.cache(); hsh.count()
+      try Dedup.winnowPairs(hsh, "doc_id", "h", threshold = 0.8).count()
+      finally hsh.unpersist()
     }
 
     // 6. Connected components over the near-dup edges (edges cached

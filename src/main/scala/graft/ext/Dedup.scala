@@ -137,10 +137,6 @@ object Dedup {
       graft.functions.SimhashBits(
         org.apache.spark.sql.GraftColumnBridge.expression(th), bits))
 
-  /** Convenience one-shot SimHash (tests / small data). */
-  def simhash(text: Column, bits: Int = 32): Column =
-    simhashFromHashes(tokenHashes(text), bits)
-
   /** SimHash chunk keys for candidate banding: `nChunks` groups of
     * `chunkBits` bits; docs agreeing on any chunk are candidates (a pair
     * within Hamming distance d < nChunks must share ≥1 chunk).
@@ -159,8 +155,8 @@ object Dedup {
     // shift distance >= 64 wraps (JVM shifts mod 64) and a 64-bit mask
     // computes as 0 — either way entire chunks silently become the
     // CONSTANT key 0 for every doc (one mega-bucket per overrun chunk:
-    // O(n²) candidates below maxBucket, zero recall from those chunks
-    // above it). Same degenerate-parameter class as lshBandHashes.
+    // O(n²) candidates below DefaultMaxBucket, zero recall from those
+    // chunks above it). Same degenerate-parameter class as lshBandHashes.
     require(chunkBits >= 1 && chunkBits <= 63 && nChunks >= 1 &&
         chunkBits.toLong * nChunks <= 64,
       s"simhashChunks: $nChunks chunks x $chunkBits bits must fit in " +
@@ -171,6 +167,61 @@ object Dedup {
 
   /** Hamming distance between two SimHash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+
+  // Banding of a 60-bit signature into 4×15-bit chunks: hamming ≤ 3 ⇒
+  // the pair shares ≥1 chunk (pigeonhole), and the bucket keyspace is
+  // 4·2^15 = 131,072, wide enough that per-bucket occupancy stays
+  // selective as the corpus grows (8-bit chunks gave a 1,024-bucket
+  // keyspace → O(n²/1024) candidate growth — a measured scale-killer at
+  // sf0.1 already). 60 bits, not 64: token hashes are md5Long = 60-bit
+  // (the portable-BIGINT ceiling), so signature bits 60–63 would be
+  // identically zero — a nominal 64/16 split would leave the top chunk
+  // with 12 bits of real entropy, 8× worse than four full 15-bit chunks.
+  val SimChunkBits: Int = 15
+  val SimChunks: Int = 4
+
+  /** Near-duplicate pairs of a (id, 60-bit signature) frame within
+    * Hamming distance `maxHam`: candidates share a
+    * [[SimChunkBits]]-bit chunk ([[pairsFromBuckets]] over the
+    * [[SimChunks]] chunk keys), then one xor + bit_count verifies each.
+    * The signature rides through the bucket groupBy inside the id
+    * struct (an 8-byte payload), so the verify needs no rejoin and the
+    * signature lineage is read once. A pair within `maxHam` is found
+    * only if it shares a chunk: always when `maxHam < SimChunks`
+    * (pigeonhole); above that, only where the caller knows which chunks
+    * its near-copies leave intact (q104's re-encode). Returns (a_id,
+    * b_id, ham) with a_id < b_id. */
+  def hammingPairs(sigs: DataFrame, idCol: String, sigCol: String,
+      maxHam: Int): DataFrame = {
+    val chunks = sigs.select(
+      struct(col(idCol).as("id"), col(sigCol).as("sig")).as("ds"),
+      posexplode(simhashChunks(col(sigCol), SimChunkBits, SimChunks))
+        .as(Seq("c", "ck")))
+    pairsFromBuckets(chunks, Seq("c", "ck"), "ds")
+      .withColumn("ham", hamming(col("a_id.sig"), col("b_id.sig")))
+      .filter(col("ham") <= maxHam)
+      .select(col("a_id.id").as("a_id"), col("b_id.id").as("b_id"), col("ham"))
+  }
+
+  /** Near-duplicate pairs of a positional shingle-hash frame (id, h)
+    * with exact Jaccard ≥ `threshold`: candidates share a winnowing
+    * fingerprint (window 4, Schleimer et al., SIGMOD'03), and
+    * [[verifiedPairs]] checks them against the distinct hashes. The
+    * verify arrays are sorted once per doc: the intersect kernel
+    * (IntersectSizeLong.mergeCount) sorts both arrays per PAIR, so a
+    * presorted array makes that a near-linear pass (sf0.1 q37: ~434k
+    * pair-side sorts become 15k doc-side ones); jaccard is a set
+    * measure, so the output is unchanged. Cache `hsh` when it is
+    * expensive: both branches read it. Returns (a_id, b_id, jacc). */
+  def winnowPairs(hsh: DataFrame, idCol: String, hCol: String,
+      threshold: Double): DataFrame = {
+    val sh = hsh.select(col(idCol).as("id"),
+      array_sort(array_distinct(col(hCol))).as("hs"))
+    val fps = hsh.select(col(idCol),
+      explode(TextAnalysis.fingerprintsFromHashes(col(hCol), 4)).as("fp"))
+    verifiedPairs(pairsFromBuckets(fps, Seq("fp"), idCol),
+      "a_id", "b_id", sh, sh, threshold)
+  }
 
   /** Default degenerate-bucket cap — referenced by the DuckDB oracles
     * too, so engine and oracle drop exactly the same buckets at any
@@ -184,17 +235,17 @@ object Dedup {
     * buckets. A self-join would recompute the (expensive) bucket-key
     * lineage once per side; this computes it once and shuffles only
     * (key, id) pairs. Buckets are hash-uniform by construction, so
-    * collect_list stays tiny; a `maxBucket` guard drops degenerate
-    * buckets (stop-fingerprint protection at scale). */
+    * collect_list stays tiny; the [[DefaultMaxBucket]] guard drops
+    * degenerate buckets (stop-fingerprint protection at scale). */
   def pairsFromBuckets(rows: DataFrame, keyCols: Seq[String],
-      idCol: String, maxBucket: Int = DefaultMaxBucket): DataFrame = {
+      idCol: String): DataFrame = {
     val ids = col("ids")
     val combos = flatten(transform(sequence(lit(1), size(ids) - 1),
       i => transform(slice(ids, i + 1, size(ids) - i),
         b => struct(element_at(ids, i).as("a_id"), b.as("b_id")))))
     rows.groupBy(keyCols.map(col): _*)
       .agg(array_sort(collect_list(col(idCol))).as("ids"))
-      .filter(size(ids) > 1 && size(ids) <= maxBucket)
+      .filter(size(ids) > 1 && size(ids) <= DefaultMaxBucket)
       .select(explode(combos).as("p"))
       .select(col("p.a_id"), col("p.b_id"))
       .distinct()

@@ -117,10 +117,4 @@ object TextAnalysis {
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.WinnowFingerprints(
         org.apache.spark.sql.GraftColumnBridge.expression(h), w))
-
-  /** Convenience one-shot fingerprint (tests / small data). For hot
-    * paths, materialize [[shingleHashes]] and use
-    * [[fingerprintsFromHashes]]. */
-  def fingerprints(text: Column, n: Int = 3, w: Int = 4): Column =
-    fingerprintsFromHashes(shingleHashes(text, n), w)
 }

@@ -77,7 +77,7 @@ object CleanseQueries extends QueryPack {
         concat(lit("eNodeB=NODE"), col("c_custkey") % 50,
           when(col("c_custkey") % 11 === 0, lit("=P2")).otherwise(lit("")),
           lit(",Cell="), col("c_custkey") % 7).as("measObjLdn"))
-      Cleanse.nodeidFrom("measObjLdn")(ldn)
+      ldn.select(Cleanse.nodeid(col("measObjLdn")).as("nodeid"))
         .groupBy(col("nodeid")).agg(count(lit(1)).as("n"))
         .orderBy(col("nodeid"))
     }),
@@ -105,7 +105,7 @@ object CleanseQueries extends QueryPack {
       val dict = Tables.part(s, d).filter(col("p_size") <= 25)
         .select(col("p_partkey"), col("p_name"))
       li.join(broadcast(dict), li("l_partkey") === dict("p_partkey"), "left")
-        .select(Cleanse.unknownFallback("p_name", "l_partkey").as("kpiName"))
+        .select(Cleanse.unknownFallback(col("p_name"), col("l_partkey")).as("kpiName"))
         .groupBy(col("kpiName").startsWith("UNKNOWN_").as("is_unknown"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("kpiName")).as("n_names"))

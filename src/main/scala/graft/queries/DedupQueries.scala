@@ -25,18 +25,9 @@ object DedupQueries extends QueryPack {
   // constant pair keeps a retune from silently desynchronizing them
   private[queries] val K = 16      // minhash signature length
   private[queries] val Bands = 4   // LSH bands (4 rows per band)
-  // SimHash banding: 60-bit signature split into 4×15-bit chunks —
-  // hamming ≤ 3 ⇒ the pair shares ≥1 chunk (pigeonhole), and the bucket
-  // keyspace is 4·2^15 = 131,072, wide enough that per-bucket occupancy
-  // stays selective as the corpus grows (8-bit chunks gave a 1,024-bucket
-  // keyspace → O(n²/1024) candidate growth — a measured scale-killer at
-  // sf0.1 already). 60 bits, not 64: token hashes are md5Long = 60-bit
-  // (the portable-BIGINT ceiling), so signature bits 60–63 would be
-  // identically zero — a nominal 64/16 split would leave the top chunk
-  // with 12 bits of real entropy, 8× worse than four full 15-bit chunks.
-  private val SimBits = 60
-  private val ChunkBits = 15
-  private val NChunks = 4
+  // SimHash signature width: the Dedup.SimChunks × SimChunkBits banding
+  // covers exactly these 60 bits (see the reason next to those constants)
+  private val SimBits = Dedup.SimChunks * Dedup.SimChunkBits
   // q77 segment width (tokens per pseudo-line; corpus has no newlines)
   private val SegW = 10
 
@@ -59,10 +50,10 @@ object DedupQueries extends QueryPack {
     }._1
 
   /** Corpus-wide connected-component labels over [[corpusPairs]],
-    * memoized AND CACHED per (session, dir) — r21: q60 (cluster sizes)
-    * and q98 (size histogram) each re-ran the identical CC driver loop
-    * (real jobs per iteration, not just a plan) over the same cached
-    * pair frame. The label table is exactly the "persisted label table
+    * memoized AND CACHED per (session, dir): q60 (cluster sizes) and
+    * q98 (size histogram) would otherwise each re-run the identical CC
+    * driver loop (real jobs per iteration, not just a plan) over the
+    * same cached pair frame. The label table is exactly the "persisted label table
     * of the snapshot" the incremental path (q106) reads at cluster
     * scale — materialize it once per snapshot, fan analyses out from
     * it (the corpusPairs pattern one level up). */
@@ -129,16 +120,14 @@ object DedupQueries extends QueryPack {
       corpusPairs(s, d).orderBy(col("a_id"), col("b_id"))
     }),
 
-    // ---- SimHash near-dup pairs via chunk banding + Hamming verify.
-    //      The simhash rides through the bucket groupBy inside the id
-    //      struct (an 8-byte payload), so the verify needs no rejoin
-    //      and the signature lineage is computed exactly once. The
-    //      (doc_id, sim) sketch frame is cached per (session, dir) —
-    //      r21: it is the per-snapshot signature artifact (8 bytes/doc;
-    //      q104's mediaDhashFrame is the same shape for media), and
-    //      rebuilding it re-paid the full tokenize+md5 corpus pass on
-    //      every invocation. Projected to (doc_id, text) before the
-    //      round-robin exchange (guide §2.3). ----
+    // ---- SimHash near-dup pairs via chunk banding + Hamming verify
+    //      (Dedup.hammingPairs). The (doc_id, sim) sketch frame is
+    //      cached per (session, dir): it is the per-snapshot signature
+    //      artifact (8 bytes/doc; q104's mediaDhashFrame is the same
+    //      shape for media), and rebuilding it would re-pay the full
+    //      tokenize+md5 corpus pass on every invocation. Projected to
+    //      (doc_id, text) before the round-robin exchange (guide
+    //      §2.3). ----
     "q36_simhash" -> ((s, d) => {
       val docs = FrameCache.get(s, "q36-sim", d)(
         Tables.documents(s, d)
@@ -148,15 +137,7 @@ object DedupQueries extends QueryPack {
           .select(col("doc_id"),
             Dedup.simhashFromHashes(col("th"), SimBits).as("sim"))
           .cache())
-      val chunks = docs.select(
-        struct(col("doc_id"), col("sim")).as("ds"),
-        posexplode(Dedup.simhashChunks(col("sim"), ChunkBits, NChunks))
-          .as(Seq("c", "ck")))
-      Dedup.pairsFromBuckets(chunks, Seq("c", "ck"), "ds")
-        .withColumn("ham", Dedup.hamming(col("a_id.sim"), col("b_id.sim")))
-        .filter(col("ham") <= 3)
-        .select(col("a_id.doc_id").as("a_id"), col("b_id.doc_id").as("b_id"),
-          col("ham"))
+      Dedup.hammingPairs(docs, "doc_id", "sim", maxHam = 3)
         .orderBy(col("a_id"), col("b_id"))
     }),
 
@@ -192,7 +173,7 @@ object DedupQueries extends QueryPack {
       def inDelta(c: Column) = q106InDelta(c)
       val deltaEdges = pairs
         .filter(inDelta(col("a_id")) || inDelta(col("b_id")))
-      // standing labels come from the per-snapshot memo (r21) — the
+      // standing labels come from the per-snapshot memo — the
       // production shape this query documents: only delta-touching
       // edges are traversed per batch, yesterday's labels are READ
       val standing = q106StandingLabels(s, d)
@@ -221,20 +202,10 @@ object DedupQueries extends QueryPack {
           .select(col("doc_id"),
             TextAnalysis.shingleHashes(col("text"), 3).as("h"))
           .cache())
-      // sorted once per doc (r22): the jaccard kernel re-sorted both
-      // arrays per candidate pair — presorting turns ~434k pair-side
-      // sorts into 15k doc-side ones (isolated noop-sink stage: the
-      // jacc stage 2.35–2.53 → 1.26–1.50 s; jaccard is a set measure,
-      // so the output is bit-identical)
-      val sh = hsh.select(col("doc_id").as("id"),
-        array_sort(array_distinct(col("h"))).as("hs"))
-      val fps = hsh.select(col("doc_id"),
-        explode(TextAnalysis.fingerprintsFromHashes(col("h"), 4)).as("fp"))
-      val cand = Dedup.pairsFromBuckets(fps, Seq("fp"), "doc_id")
       // the verify's size-ratio guard (100·min ≥ 60·max at 0.6) removes
       // ~35% of candidates (measured sf0.1: 334k → 217k) before the
       // intersect pays for them
-      Dedup.verifiedPairs(cand, "a_id", "b_id", sh, sh, 0.6)
+      Dedup.winnowPairs(hsh, "doc_id", "h", threshold = 0.6)
         .orderBy(col("a_id"), col("b_id"))
     }),
 
@@ -546,11 +517,11 @@ object DedupQueries extends QueryPack {
       val bitExprs = (0 until SimBits).map(b =>
         s"(CASE WHEN len(list_filter(h, x -> (x >> $b) % 2 = 1)) * 2 - len(h) > 0 THEN (1::BIGINT << $b) ELSE 0 END)")
         .mkString("\n    + ")
-      val chunkVals = (0 until NChunks).map(c => s"($c)").mkString(", ")
+      val chunkVals = (0 until Dedup.SimChunks).map(c => s"($c)").mkString(", ")
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
          |th AS (SELECT doc_id, list_transform(tk, t -> ${h("t")}) AS h FROM d),
          |sim AS (SELECT doc_id, $bitExprs AS sim FROM th),
-         |chunks AS (SELECT doc_id, sim, cc.c, (sim >> (cc.c * $ChunkBits)) & ${(1 << ChunkBits) - 1} AS ck
+         |chunks AS (SELECT doc_id, sim, cc.c, (sim >> (cc.c * ${Dedup.SimChunkBits})) & ${(1 << Dedup.SimChunkBits) - 1} AS ck
          |  FROM sim, (VALUES $chunkVals) AS cc(c)),
          |bc AS (SELECT c, ck FROM chunks GROUP BY c, ck
          |  HAVING count(*) BETWEEN 2 AND ${Dedup.DefaultMaxBucket}),

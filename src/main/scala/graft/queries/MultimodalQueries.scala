@@ -45,29 +45,25 @@ object MultimodalQueries extends QueryPack {
     //      rest bit-exact), then each payload is dHashed per partition
     //      at the codec seam ([[Multimodal.MediaCodec.dhashStub]] — the
     //      only mapPartitions step; everything after is relational).
-    //      Candidates come from 4×15-bit bands of the 60-bit hash via
-    //      pairsFromBuckets (groupBy + collect_list — never a
-    //      self-join): a re-encode moves ≤4 bits, all within bands 0
-    //      and 2, so bands 1 and 3 stay intact and every true pair is
-    //      guaranteed a shared bucket. Verification is one xor +
-    //      bit_count per candidate. The hashed frame is cached — it
-    //      feeds the band explode and both verify joins; at corpus
-    //      scale it is the (id, 8-byte hash) sketch, not the media. ----
+    //      Pairs come from Dedup.hammingPairs over the 4×15-bit bands
+    //      of the 60-bit hash (pairsFromBuckets: groupBy +
+    //      collect_list, never a self-join): a re-encode moves ≤4 bits,
+    //      all within bands 0 and 2, so bands 1 and 3 stay intact and
+    //      every true pair is guaranteed a shared bucket. Verification
+    //      is one xor + bit_count per candidate, on the hash carried
+    //      through the buckets; one join adds the source. The hashed
+    //      frame is cached — it feeds the band explode and the source
+    //      join; at corpus scale it is the (id, 8-byte hash) sketch,
+    //      not the media. ----
     "q104_media_dedup" -> ((s, d) => {
       val hashed = mediaDhashFrame(s, d)
-      val bands = mediaDhashBands(hashed)
-      val cand = Dedup.pairsFromBuckets(bands, Seq("band", "v"), "media_id")
-      cand
-        .join(hashed.select(col("media_id").as("a_id"),
-          col("dhash").as("h1"), col("source")), Seq("a_id"))
-        .join(hashed.select(col("media_id").as("b_id"),
-          col("dhash").as("h2")), Seq("b_id"))
-        .withColumn("dist", bit_count(col("h1").bitwiseXOR(col("h2"))))
-        .filter(col("dist") <= 4)
+      Dedup.hammingPairs(hashed, "media_id", "dhash", maxHam = 4)
+        .join(hashed.select(col("media_id").as("a_id"), col("source")),
+          Seq("a_id"))
         .groupBy(col("source"))
-        .agg(sum(when(col("dist") === 0, 1L).otherwise(0L))
+        .agg(sum(when(col("ham") === 0, 1L).otherwise(0L))
             .as("n_exact_pairs"),
-          sum(when(col("dist") >= 1, 1L).otherwise(0L)).as("n_near_pairs"),
+          sum(when(col("ham") >= 1, 1L).otherwise(0L)).as("n_near_pairs"),
           count(lit(1)).as("n_pairs"))
         .orderBy(col("source"))
     })
@@ -104,13 +100,6 @@ object MultimodalQueries extends QueryPack {
         .toDF("media_id", "source", "dhash")
         .cache())
   }
-
-  /** (media_id, band, v) — the 4×15-bit band rows of the dHash frame. */
-  private[graft] def mediaDhashBands(hashed: DataFrame): DataFrame =
-    hashed.select(col("media_id"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("dhash"), b * 15).bitwiseAND(32767)): _*))
-        .as(Seq("band", "v")))
 
   override def oracles: Map[String, String] = Map(
     "q43_media_features" ->

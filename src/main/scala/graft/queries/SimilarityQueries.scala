@@ -369,7 +369,7 @@ object SimilarityQueries extends QueryPack {
     //      Candidates come from the guarded pairsFromBuckets (q36
     //      pattern): the normalized vector rides the groupBy inside the
     //      id struct, so the bucket lineage is computed ONCE and the
-    //      maxBucket guard caps any degenerate bucket — essential here
+    //      DefaultMaxBucket guard caps any degenerate bucket — essential here
     //      because sign-LSH buckets are NOT hash-uniform on real
     //      embeddings (a hot bucket would make a raw self-join
     //      quadratic). ----

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.transforms.Cleanse
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -124,17 +125,10 @@ object XmlMeas {
     r.select(
       col("fileId"), col("beginTime"), col("localDn"), col("measInfoId"),
       col("jobId"), col("granPeriod"), col("endTime"), col("measObjLdn"),
-      // nodeid: split('=')[1].split(',')[0] intent (dags/Dag2.py:111);
-      // "" when no '=' (SURVEY §2.11). Anchored so the capture is the
-      // run after the FIRST '=' stopping at ',' OR a second '=' —
-      // exactly the split semantics ("Cell=ABC=1,..." → ABC, not ABC=1)
-      regexp_extract(col("measObjLdn"), "^[^=]*=([^,=]*)", 1).as("nodeid"),
+      Cleanse.nodeid(col("measObjLdn")).as("nodeid"),
       col("r._p").as("kpiId"),
-      // concat_ws, not concat: concat is null-propagating, so a
-      // missing r@p would null the WHOLE fallback and the row would
-      // lump into a null kpiName group instead of carrying a marker
-      coalesce(element_at(col("mt"), col("r._p")),
-        concat_ws("", lit("UNKNOWN_"), col("r._p"))).as("kpiName"),
+      Cleanse.unknownFallback(element_at(col("mt"), col("r._p")),
+        col("r._p")).as("kpiName"),
       cleanValue(col("r._VALUE")).as("kpiValue"))
   }
 

@@ -70,21 +70,21 @@ object Cleanse {
   /** P2: drop columns (reference mypy/preprocessproduce.py:64). */
   def drop(cols: String*): Stage = df => df.drop(cols: _*)
 
-  /** F10: extract nodeid from measObjLdn — `split('=')[1].split(',')[0]`
+  /** F10: nodeid of a measObjLdn — `split('=')[1].split(',')[0]`
     * (reference dags/Dag2.py:111). regexp_extract returns "" on no-match,
     * matching the Python behavior only when '=' exists; rows without '='
     * raised IndexError in the reference — our spec: empty string. */
-  def nodeidFrom(c: String, out: String = "nodeid"): Stage =
+  def nodeid(ldn: Column): Column =
     // anchored: the run after the FIRST '=' up to ',' or a second '='
-    // — the reference's split('=')[1].split(',')[0] (dags/Dag2.py:111)
-    df => df.withColumn(out, regexp_extract(col(c), "^[^=]*=([^,=]*)", 1))
+    // ("Cell=ABC=1,..." → ABC, not ABC=1)
+    regexp_extract(ldn, "^[^=]*=([^,=]*)", 1)
 
   /** F12: dictionary lookup with UNKNOWN_{id} fallback after the measType
     * join (reference dags/Dag2.py:129). */
-  def unknownFallback(nameCol: String, idCol: String): Column =
+  def unknownFallback(name: Column, id: Column): Column =
     // concat_ws: null-propagating concat would null the fallback too
     // when the id itself is null — the marker must survive
-    coalesce(col(nameCol), concat_ws("", lit("UNKNOWN_"), col(idCol)))
+    coalesce(name, concat_ws("", lit("UNKNOWN_"), id))
 
   /** F7 + P1: serialize all columns except `exclude` to a JSON `value`
     * column (reference mypy/xmlonly.py:121). */
@@ -108,14 +108,16 @@ object Cleanse {
   def chain(stages: Stage*): Stage =
     stages.foldLeft[Stage](df => df)(_ andThen _)
 
-  /** The reference's full wide-CSV cleanse chain, in its exact order
-    * (mypy/preprocessproduce.py:48-65): parse Time → fill numeric ids →
-    * fill names "N/A" → geo null→999 → blanket fill 0 → rename dotted →
-    * "nil"→0 → drop Integrity.
+  /** The reference's full wide-CSV cleanse chain, in its order
+    * (mypy/preprocessproduce.py:48-65): parse Time → fill names "N/A" →
+    * geo null→999 → blanket fill 0 → rename dotted → "nil"→0 → drop
+    * Integrity. The reference's first step after the parse, a 0-fill of
+    * the numeric ids (Downlink EARFCN, LocalCell Id, Downlink
+    * bandwidth), is left to the blanket fill: no stage before it reads
+    * them.
     */
   val cellKpiChain: Stage = chain(
     parseTime("Time"),
-    fillNumeric(0, Seq("Downlink EARFCN", "LocalCell Id", "Downlink bandwidth")),
     fillString("N/A", Seq("eNodeB Name", "Cell Name")),
     nullToSentinel("Longitude"),
     nullToSentinel("Latitude"),

@@ -2,6 +2,7 @@ package graft
 
 import graft.transforms.Cleanse
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,7 +39,7 @@ class CleanseSpec extends AnyFunSuite {
     // fallback and the row lumped into a null-name group
     val df = Seq((Option.empty[String], Option.empty[String]),
       (None, Some("9"))).toDF("name", "id")
-    val out = df.select(Cleanse.unknownFallback("name", "id").as("n"))
+    val out = df.select(Cleanse.unknownFallback(col("name"), col("id")).as("n"))
       .collect().map(_.getString(0)).toSet
     assert(out === Set("UNKNOWN_", "UNKNOWN_9"))
     // pre-fix: empty.reduceLeft UnsupportedOperationException
@@ -59,26 +60,26 @@ class CleanseSpec extends AnyFunSuite {
     assert(out.count(_ == "0") == 3 && out.contains("7"))
   }
 
-  test("nodeidFrom: split('=')[1].split(',')[0] semantics") {
+  test("nodeid: split('=')[1].split(',')[0] semantics") {
     val df = Seq("eNodeB=NODE42,Cell=7", "noequals", "a=b").toDF("measObjLdn")
-    val out = Cleanse.nodeidFrom("measObjLdn")(df)
-      .select("nodeid").as[String].collect()
+    val out = df.select(Cleanse.nodeid(col("measObjLdn")))
+      .as[String].collect()
     assert(out.toSet == Set("NODE42", "", "b"))
   }
 
-  test("nodeidFrom: a second '=' inside the first field stops the capture") {
+  test("nodeid: a second '=' inside the first field stops the capture") {
     // split('=')[1].split(',')[0] on "x=ABC=1,y" is "ABC": the [1] slice
     // already ends at the SECOND '='. The unanchored pre-r10 pattern
     // "=([^,]+)" captured "ABC=1" — this fixture fails on that code.
     val df = Seq("x=ABC=1,y", "SubNet=AREA=7", "k=v=w=z,t").toDF("measObjLdn")
-    val out = Cleanse.nodeidFrom("measObjLdn")(df)
-      .select("nodeid").as[String].collect()
+    val out = df.select(Cleanse.nodeid(col("measObjLdn")))
+      .as[String].collect()
     assert(out.toSet == Set("ABC", "AREA", "v"))
   }
 
   test("unknownFallback: UNKNOWN_{id} when name missing") {
     val df = Seq((Some("FT_RRC"), "1"), (None, "9")).toDF("kpiName", "kpiId")
-    val out = df.select(Cleanse.unknownFallback("kpiName", "kpiId"))
+    val out = df.select(Cleanse.unknownFallback(col("kpiName"), col("kpiId")))
       .as[String].collect()
     assert(out.toSet == Set("FT_RRC", "UNKNOWN_9"))
   }

@@ -128,7 +128,9 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("simhash: identical text → hamming 0; different text → far") {
     val df = Seq((base, base), (base, "xx yy zz ww vv uu tt ss rr qq"))
       .toDF("a", "b")
-      .select(Dedup.hamming(Dedup.simhash(col("a")), Dedup.simhash(col("b"))).as("h"))
+      .select(Dedup.hamming(
+        Dedup.simhashFromHashes(Dedup.tokenHashes(col("a"))),
+        Dedup.simhashFromHashes(Dedup.tokenHashes(col("b")))).as("h"))
     val hs = df.collect().map(_.getInt(0))
     assert(hs(0) === 0)
     assert(hs(1) > 3)
@@ -157,17 +159,21 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pairsFromBuckets: maxBucket guard drops a deliberately hot bucket") {
-    // bucket 1 is hot (5 ids), bucket 2 is healthy (2 ids)
-    val rows = Seq((1, 10L), (1, 11L), (1, 12L), (1, 13L), (1, 14L),
+    // bucket 0 is hot (DefaultMaxBucket + 1 ids), bucket 1 holds 5 ids
+    // and bucket 2 holds 2 — a bucket over the cap is dropped before
+    // its pairs are exploded, so the hot one costs one collect_list
+    val hot = spark.range(Dedup.DefaultMaxBucket + 1L)
+      .select(lit(0).as("bucket"), (col("id") + 1000L).as("id"))
+    val healthy = Seq((1, 10L), (1, 11L), (1, 12L), (1, 13L), (1, 14L),
       (2, 20L), (2, 21L)).toDF("bucket", "id")
-    val guarded = Dedup.pairsFromBuckets(rows, Seq("bucket"), "id",
-      maxBucket = 4).collect()
-    // hot bucket contributes ZERO pairs; healthy bucket survives
-    assert(guarded.map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((20L, 21L)))
-    // same input without the guard: 10 hot-bucket pairs + 1 healthy
-    val unguarded = Dedup.pairsFromBuckets(rows, Seq("bucket"), "id")
-    assert(unguarded.count() === 11)
+    val pairs = Dedup.pairsFromBuckets(hot.unionByName(healthy),
+      Seq("bucket"), "id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    // hot bucket contributes ZERO pairs; the healthy ones pair in full:
+    // C(5,2) = 10 + 1
+    assert(!pairs.exists(_._2 >= 1000L), "the over-cap bucket produced pairs")
+    assert(pairs.length === 11)
+    assert(pairs.toSet === (10L to 14L).combinations(2)
+      .map(p => (p(0), p(1))).toSet + ((20L, 21L)))
   }
 
   test("connectedComponents: chain, triangle and pair converge to min-id labels") {

@@ -50,7 +50,10 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     // oracle at, the fullest band bucket must sit far below the cap.
     val hashed = graft.queries.MultimodalQueries.mediaDhashFrame(
       spark, "/root/testdata/sf0.01")
-    val occ = graft.queries.MultimodalQueries.mediaDhashBands(hashed)
+    val occ = hashed
+      .select(posexplode(graft.ext.Dedup.simhashChunks(col("dhash"),
+        graft.ext.Dedup.SimChunkBits, graft.ext.Dedup.SimChunks))
+        .as(Seq("band", "v")))
       .groupBy(col("band"), col("v")).agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).head.getLong(0)
     assert(occ >= 2, "no bucket holds a pair — q104 candidates would be empty")

@@ -276,8 +276,9 @@ class PlanPostureSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q104: media dedup pairs come from bucket aggregation, never a hash self-join") {
     val p = plan("q104_media_dedup")
-    // candidate generation is groupBy(band,v)+collect_list; the only
-    // joins are the two id-keyed verify joins against the hashed frame
+    // candidate generation is groupBy(band,v)+collect_list and the
+    // verify reads the hash carried through the buckets; the only join
+    // adds the source on a_id
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       "candidate generation degenerated into an all-pairs join")

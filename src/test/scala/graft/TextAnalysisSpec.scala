@@ -91,7 +91,8 @@ class TextAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("fingerprints: deterministic, dedup'd, robust to short docs") {
     val txt = "a b c d e f g h i j k l m n"
     val df = Seq(txt, txt, "a b", "").toDF("t")
-      .select(TextAnalysis.fingerprints(col("t")).as("fp"))
+      .withColumn("h", TextAnalysis.shingleHashes(col("t"), 3))
+      .select(TextAnalysis.fingerprintsFromHashes(col("h"), 4).as("fp"))
     val rows = df.collect().map(_.getSeq[Long](0))
     assert(rows(0).nonEmpty && rows(0) === rows(1)) // same text → same fp
     assert(rows(0).distinct === rows(0))            // dedup'd
